@@ -17,14 +17,20 @@ and never infer, mirroring the reference's discipline (SURVEY.md §1.3).
 from __future__ import annotations
 
 import json
+import logging
 import os
 import tempfile
 import time
 from functools import lru_cache
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .session import env_int
+
+_log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # Reference-domain schemas (SURVEY.md §1 / FIXTURES.md).
@@ -364,14 +370,30 @@ _SPREAD_KEYS: dict[str, tuple[str, ...]] = {
 }
 
 
-@lru_cache(maxsize=None)
+#: non-local paths ``spread=True`` has already warned about
+_REMOTE_WARNED: set[str] = set()
+
+
 def _scan_splits(path: str, cap: int) -> int:
     """How many parallel read tasks this parquet layout can actually
     feed — the row-group count summed across files, short-circuited at
     ``cap`` (a layout that can already feed every core needs no
-    inspection beyond that). Footer metadata only; milliseconds."""
-    import pyarrow.parquet as pq
+    inspection beyond that). Footer metadata only; milliseconds, and
+    memoized on every file's (mtime, size), so a layout rewritten in
+    place is inspected again.
 
+    The footers are read with local file APIs: a non-local path reports
+    ``cap``, which turns ``spread`` into a no-op, and logs one warning
+    saying so."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        if path not in _REMOTE_WARNED:
+            _REMOTE_WARNED.add(path)
+            _log.warning("load_table(spread=True) is a no-op on non-local "
+                         "path %s: its parquet footers are not inspected",
+                         path)
+        return cap
+    path = url.path if url.scheme else path
     if os.path.isdir(path):
         files = [os.path.join(path, f) for f in sorted(os.listdir(path))
                  if f.endswith(".parquet")]
@@ -379,8 +401,19 @@ def _scan_splits(path: str, cap: int) -> int:
         files = [path]
     if len(files) >= cap:
         return cap
-    total = 0
+    stamp = []
     for f in files:
+        st = os.stat(f)
+        stamp.append((f, st.st_mtime_ns, st.st_size))
+    return _row_groups(tuple(stamp), cap)
+
+
+@lru_cache(maxsize=None)
+def _row_groups(stamp: tuple[tuple[str, int, int], ...], cap: int) -> int:
+    import pyarrow.parquet as pq
+
+    total = 0
+    for f, _, _ in stamp:
         try:
             total += pq.ParquetFile(f).metadata.num_row_groups
         except Exception:  # unreadable footer: assume splittable
@@ -393,7 +426,7 @@ def _scan_splits(path: str, cap: int) -> int:
 #: how many file chunks a staged stream table is split into; with
 #: ``maxFilesPerTrigger=1`` this is the number of genuine micro-batches
 #: an availableNow drain executes (state restore/save per batch).
-STREAM_CHUNKS = int(os.environ.get("SPARK_GRAFT_STREAM_CHUNKS", "4"))
+STREAM_CHUNKS = env_int("SPARK_GRAFT_STREAM_CHUNKS", 4)
 
 
 def _stream_dir(sf_dir: str, name: str, chunks: int | None = None) -> str:

@@ -6443,7 +6443,8 @@ _PLAN_REWRITTEN_AFTER = {
     # r10 (VERDICT r9 #3): the partitioned MERGE's rewrite-set moved
     # from collected partition lists + a literal isin filter to a
     # broadcast left-semi join against the distinct-partition frame
-    # (streaming/upsert.py _rewrite_partitions). cdc_upsert executes
+    # (since replaced by the touched-file lookup of the table log,
+    # streaming/upsert.py UpsertTable._touched). cdc_upsert executes
     # that path every micro-batch; cdc_upsert_mor_stream executes it
     # through inline compaction (max_delta_commits=2). cdc_upsert_mor
     # is NOT voided: with no compaction trigger its merges are all

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
+import logging
 import struct as _struct
 
 import pandas as pd
@@ -80,6 +81,9 @@ def _jvm_avro_available(spark) -> bool:
             _JVM_AVRO = True
         except Exception:
             _JVM_AVRO = False
+            logging.getLogger(__name__).warning(
+                "spark-avro is not loadable: Avro encode/decode falls back"
+                " to the Arrow-batched Python codec")
     return _JVM_AVRO
 
 

@@ -16,11 +16,41 @@ re-plan at runtime:
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+#: Spark's size strings (``JavaUtils.byteStringAsBytes``): a byte count
+#: with an optional binary-unit suffix
+_SIZE = re.compile(r"\d+(b|kb?|mb?|gb?|tb?|pb?)?", re.IGNORECASE)
+
+
+def env_int(name: str, default: int) -> int:
+    """A positive-integer environment knob, checked when read."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value < 1:
+        raise ValueError(f"{name}={raw!r}: expected a positive integer")
+    return value
+
+
+def env_bytes(name: str, default: str) -> str:
+    """A byte-size environment knob — an integer byte count or a Spark
+    size string such as ``64m`` — checked when read."""
+    raw = os.environ.get(name, default).strip()
+    if not _SIZE.fullmatch(raw):
+        raise ValueError(f"{name}={raw!r}: expected a byte count or a "
+                         "Spark size string such as 64m")
+    return raw
+
+
+DEFAULT_SHUFFLE_PARTITIONS = env_int("SPARK_GRAFT_SHUFFLE", 32)
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 #: local-mode JVM heap. In local mode the driver JVM IS every executor:
 #: PySpark's 1g default gives 32 task threads ~440 MB of combined
@@ -41,6 +71,7 @@ def get_spark(app_name: str = "kafka_connect_msk_demo_spark",
     Config already set on an existing session is left untouched —
     ``getOrCreate`` semantics — so tests can share one JVM.
     """
+    shj_threshold = env_bytes("SPARK_GRAFT_SHJ_THRESHOLD", "134217728")
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.driver.memory", DEFAULT_DRIVER_MEM)
@@ -58,7 +89,7 @@ def get_spark(app_name: str = "kafka_connect_msk_demo_spark",
         # cores via SPARK_GRAFT_SHJ_THRESHOLD (0 restores Spark's
         # sort-merge-only default).
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "134217728"))
+                shj_threshold)
         .config("spark.sql.shuffle.partitions",
                 str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import tablelog
 from ..serde import avro_encode_block as _avro_encode_block
 from ..serde import avro_encode_rows  # noqa: F401 (re-exported for tests)
 
@@ -295,69 +296,37 @@ def rotating_sink_stream(sdf: DataFrame, path: str, checkpoint: str,
 # Manifest-commit table (exactly-once object sink)
 # ---------------------------------------------------------------------------
 # The S3 sink connector's exactly-once story is deterministic object
-# names + atomic visibility. The same contract here: data files land
-# under <path>/data/ but are INVISIBLE until a manifest names them —
-# the manifest itself appears via an atomic rename, so readers see
-# either the whole commit or none of it. Retrying a commit id replaces
-# its manifest (idempotent, no double-publish); orphan data files from
-# crashed writers are never read and can be GC'd by a sweeper.
+# names + atomic visibility. The same contract here, through the table
+# log (tablelog.py): a commit writes its files named after the commit
+# id, publishes the next log entry (the commit point), then deletes
+# what that entry dropped. Readers see the whole commit or none of it;
+# a crashed attempt's files are never named by an entry. Retrying a
+# commit id drops that id's earlier files in the same entry.
 
 
+@tablelog.retried
 def manifest_commit(df: DataFrame, path: str, commit_id: str,
                     fmt: str = "parquet") -> list[str]:
     """Write ``df`` as one atomic, idempotent commit; returns the
-    published file list. Re-running the same ``commit_id`` republishes
+    published file names (relative to ``path``, each starting with
+    ``commit_id``). Re-running the same ``commit_id`` republishes
     (replaces) that commit rather than appending a duplicate."""
-    import glob as _glob
-    import json as _json
-    import shutil as _shutil
-    import uuid as _uuid
-
-    staging = os.path.join(path, "_staging", _uuid.uuid4().hex)
-    getattr(df.write.mode("overwrite"), fmt)(staging)
-    data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    ext = f".{fmt}" if fmt != "parquet" else ".parquet"
-    files = []
-    parts = sorted(_glob.glob(os.path.join(staging, "part-*")))
-    for i, src in enumerate(parts):
-        # deterministic object name: <commit>-<seq> (the connector's
-        # topic+partition+offset naming analog)
-        name = f"{commit_id}-{i:05d}{ext}"
-        _shutil.move(src, os.path.join(data_dir, name))
-        files.append(name)
-    _shutil.rmtree(os.path.dirname(staging), ignore_errors=True)
-    manifest_dir = os.path.join(path, "_manifests")
-    os.makedirs(manifest_dir, exist_ok=True)
-    tmp = os.path.join(manifest_dir, f".{commit_id}.tmp")
-    with open(tmp, "w") as fh:
-        _json.dump({"commit_id": commit_id, "files": files}, fh)
-    # atomic publish: readers see the commit entirely or not at all
-    os.replace(tmp, os.path.join(manifest_dir, f"{commit_id}.json"))
-    return files
+    spark = df.sparkSession
+    snap = tablelog.snapshot(spark, path)
+    add = tablelog.write(df, path, None, "base", commit_id, fmt)
+    tablelog.commit(spark, path, snap, add,
+                    [f for f in snap.files if f["commit"] == commit_id],
+                    df.schema)
+    return [f["path"] for f in add]
 
 
 def read_manifested(spark: SparkSession, path: str,
                     schema: T.StructType | None = None,
                     fmt: str = "parquet") -> DataFrame:
-    """Read ONLY manifest-published files — uncommitted/orphan objects
-    in data/ are invisible. The manifest listing is driver-side (it is
-    bounded metadata, one JSON per commit); the data read is the
-    ordinary distributed scan over the published file list."""
-    import glob as _glob
-    import json as _json
-
-    names: list[str] = []
-    for mf in sorted(_glob.glob(os.path.join(path, "_manifests",
-                                             "*.json"))):
-        with open(mf) as fh:
-            names.extend(_json.load(fh)["files"])
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    if not names:
-        if schema is None:
-            raise ValueError("empty manifested table needs a schema")
-        return spark.createDataFrame([], schema)
-    paths = [os.path.join(path, "data", n) for n in names]
-    return getattr(reader, fmt)(*paths)
+    """Read ONLY the files the newest log entry names — uncommitted or
+    orphan objects are invisible. ``schema`` defaults to the one the
+    last commit logged."""
+    snap = tablelog.snapshot(spark, path)
+    if schema is None and snap.schema is None:
+        raise ValueError("empty manifested table needs a schema")
+    return tablelog.read(spark, path, snap, snap.files, fmt, schema)

@@ -134,9 +134,9 @@ def manifest_stream_sink(sdf: DataFrame, path: str,
     epoch id as the commit id. Idempotence comes from the commit-id
     keying, not the checkpoint: a replayed epoch (failure before the
     checkpoint write, or a rebuilt checkpoint over a deterministic
-    source) REPLACES its manifest instead of appending a duplicate —
-    the file-sink twin of the Kafka sink's transactional producer
-    epoch."""
+    source) REPLACES its earlier files in one table-log commit instead
+    of appending a duplicate — the file-sink twin of the Kafka sink's
+    transactional producer epoch."""
     from ..sources.files import manifest_commit
 
     def _publish(batch_df: DataFrame, batch_id: int) -> None:

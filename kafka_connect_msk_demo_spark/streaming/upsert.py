@@ -15,93 +15,64 @@ Semantics reproduced:
   handled by keying the MERGE on the record key alone and recomputing
   the partition path every batch.
 
-Delivery contract (same as Hudi hard delete): redelivery of a key's
-OLD version is harmless while any newer version is still present
-(max_by re-picks the stored winner), but once a tombstone has been
-APPLIED the deleted row leaves the table with no trace — an isolated
-replay of a pre-tombstone version would then be treated as an insert
-and resurrect the key (exactly what happens in Hudi when the hard
-delete removed the index entry). This cannot occur under the
-reference's transport: Debezium keys the topic by primary key, Kafka
-preserves per-key order within a partition, and replays are
-contiguous SUFFIX replays — an old event is only ever redelivered
-together with every later event for that key, tombstone included, so
-the fold reconverges. Feeds that violate per-key suffix-replay order
-are outside the contract (pinned by
-tests/test_mor.py::test_post_delete_isolated_replay_is_out_of_contract).
-For feeds that CANNOT guarantee suffix replay, ``UpsertTable(...,
-retain_tombstones=N)`` opts into Hudi's soft-delete pattern: applied
-deletes stay stored as tombstone rows for N further merges — aged by
-a persisted per-table merge counter, independent of caller batch_ids —
-never surfacing on ``read()``, so an isolated pre-tombstone replay
-within the window re-loses to the tombstone instead of resurrecting
+Delivery contract (same as Hudi hard delete): redelivery of a key's OLD
+version is harmless while a newer version is stored (max_by re-picks
+the stored winner), but an APPLIED tombstone leaves no trace, so an
+isolated replay of a pre-tombstone version would resurrect the key.
+The reference's transport cannot produce one: Debezium keys the topic
+by primary key, Kafka keeps per-key order, and replays are contiguous
+SUFFIX replays that carry the tombstone again. Other feeds are outside
+the contract (tests/test_mor.py::
+test_post_delete_isolated_replay_is_out_of_contract) unless they opt
+into Hudi's soft delete, ``retain_tombstones=N``: applied deletes stay
+stored as tombstone rows for N further merges — aged by the logged
+merge sequence, not caller batch ids — and never surface on ``read()``
 (tests/test_upsert.py::test_retain_tombstones_blocks_resurrection).
 
-Physical strategy (scale notes)
--------------------------------
-Each ``foreachBatch`` MERGE:
+Physical strategy
+-----------------
+Every table commits through one versioned log (``tablelog``): first
+the new parquet files, then the ``_log/<version>.json`` entry naming the
+table's live files, schema and merge sequence, then the deletion of the
+files that version dropped. A reader sees one version whole, and after
+a crash no key is in two live files.
+
+Each Copy-on-Write MERGE:
 
 1. reduces the incoming batch to one winner per key (``max_by`` — one
    shuffle on the key, map-side partials);
-2. reads ONLY the currently-affected partitions of the base table —
-   incoming partition values ∪ partitions that may hold moved keys
-   (determined by an inner semi-join of base × batch keys, which
-   Catalyst executes as a broadcast semi join for normal batch sizes);
-3. re-merges and rewrites just those partitions via dynamic partition
-   overwrite.
+2. finds the partitions it must rewrite: where incoming rows land and
+   where a version of an incoming key lives now — a (key, partition,
+   file) scan of the base semi-joined with the batch, so a key is found
+   wherever it lives;
+3. re-merges the rows of those partitions with the batch and writes the
+   result as new files, each row under its new partition value;
+4. commits the new files in and the rewritten ones out, in one entry,
+   merging again on a newer snapshot if a concurrent commit conflicts.
 
-So the per-batch cost scales with the touched partitions, not the
-table — the same contract Hudi's upsert gives. A 100 TB table with
-date/tenant partitioning rewrites only the partitions the batch hits.
+So the per-batch cost scales with the partitions a batch touches, not
+the table, and no partition gathers files merge after merge.
+Merge-on-Read adds its per-batch delta files to the same log;
+compaction folds them into base files in one commit.
 """
 
 from __future__ import annotations
 
+from urllib.parse import unquote
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) via the Hadoop FS API — works for file://,
-    hdfs:// and s3a:// alike (the local-FS os.path probe this replaces
-    broke on any non-local deployment)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jpath
-
-
-def _read_small_text(spark: SparkSession, path: str) -> str | None:
-    """Read a small UTF-8 marker file via the Hadoop FS API; None when
-    absent. Shared by the schema marker and the merge counter so the
-    stream handling / charset semantics can never diverge."""
-    fs, jpath = _hadoop_fs(spark, path)
-    if not fs.exists(jpath):
-        return None
-    stream = fs.open(jpath)
-    try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8")
-    finally:
-        stream.close()
-
-
-def _write_small_text(spark: SparkSession, path: str, text: str) -> None:
-    """Overwrite-create a small UTF-8 marker file (Hadoop FS API)."""
-    fs, jpath = _hadoop_fs(spark, path)
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
+from .. import tablelog
 
 
 class UpsertTable:
     """Primary-keyed, partitioned, time-ordered parquet table with
     latest-wins MERGE (W5)."""
 
-    #: internal column stamping the persisted MERGE SEQUENCE at which a
-    #: retained tombstone was applied (retain_tombstones mode only)
+    #: internal column stamping the MERGE SEQUENCE at which a retained
+    #: tombstone was applied (retain_tombstones mode only)
     TOMB_COL = "__tomb_since"
 
     def __init__(self, path: str, key_cols: list[str], ordering_col: str,
@@ -109,25 +80,17 @@ class UpsertTable:
                  deleted_col: str = "__deleted",
                  retain_tombstones: int | None = None) -> None:
         """``retain_tombstones=N`` keeps an applied delete as a stored
-        tombstone row for N further merge batches (Hudi's soft-delete
-        pattern) instead of removing the key without trace: an
-        ISOLATED replay of a pre-tombstone version within the
-        retention window meets the stored tombstone and latest-wins
-        keeps the delete — no resurrection. The default (``None``)
-        preserves exact Hudi hard-delete parity: the documented
-        delivery contract (suffix replay) needs no retention, and the
-        table stores only live rows. Retention must be chosen at
-        table creation and kept consistent across its lifetime.
+        tombstone row for N further merges (Hudi's soft delete), so an
+        ISOLATED replay of a pre-tombstone version within the window
+        loses to it. The default (``None``) is Hudi's hard delete: the
+        table stores live rows only. Choose retention at table creation.
 
-        Tombstone age is measured by a PERSISTED per-table merge
-        counter (``_merge_seq`` marker), not the caller-supplied
-        ``batch_id`` (ADVICE r8): callers using the default
-        ``batch_id=0`` on every merge no longer retain tombstones
-        forever, and a checkpoint-restart batch-id jump can no longer
-        purge the window early. A crash-replayed micro-batch counts as
-        one more merge — the window is "N further successful merges",
-        never shorter than N distinct batches."""
-        self.path = path
+        Tombstone age is the merge sequence each log entry carries, not
+        the caller's ``batch_id`` (ADVICE r8): ``batch_id=0`` on every
+        merge still purges, and a batch-id jump cannot purge early. The
+        sequence advances only when a merge's entry is published, so a
+        merge that crashed before publishing replays as the same one."""
+        self.path = path.rstrip("/")
         self.key_cols = key_cols
         self.ordering_col = ordering_col
         self.tiebreak_col = tiebreak_col
@@ -137,64 +100,11 @@ class UpsertTable:
 
     # -- helpers ----------------------------------------------------------
 
-    SCHEMA_MARKER = "_schema.json"
-
-    def _exists(self, spark: SparkSession) -> bool:
-        """Table exists iff it holds at least one DATA file. A dir
-        containing only _SUCCESS (a partitioned write of an EMPTY
-        frame emits no part files) must read as absent — treating it
-        as present made the next merge crash with
-        UNABLE_TO_INFER_SCHEMA when a CDC feed's first batch resolved
-        to all-deletes (every row's latest version a tombstone)."""
-        fs, jpath = _hadoop_fs(spark, self.path)
-        if not fs.exists(jpath):
-            return False
-        it = fs.listFiles(jpath, True)
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                return True
-        return False
-
-    def _write_schema_marker(self, spark: SparkSession,
-                             schema) -> None:
-        """Persist the table schema beside the data (partitioned
-        layouts only): a partitioned write of an empty frame leaves no
-        parquet footer, so an all-deletes table state would otherwise
-        be unreadable. Hadoop FS API — works on file://, hdfs://,
-        s3a:// alike."""
-        _write_small_text(spark, f"{self.path}/{self.SCHEMA_MARKER}",
-                          schema.json())
-
-    def _merge_seq_path(self) -> str:
-        """SIBLING of the table dir (``<path>__merge_seq``), never
-        inside it: the non-partitioned merge swaps the whole table dir
-        (delete + rename), so an in-dir marker would be lost by a
-        crash between the swap and the counter persist — the sibling
-        survives any data-dir rewrite in both layouts."""
-        return f"{self.path.rstrip('/')}__merge_seq"
-
-    def _read_merge_seq(self, spark: SparkSession) -> int:
-        """Persisted count of completed merges (retention mode only);
-        -1 when the table has never merged."""
-        raw = _read_small_text(spark, self._merge_seq_path())
-        if raw is None:
-            return -1
-        try:
-            return int(raw.strip())
-        except ValueError:
-            return -1
-
-    def _write_merge_seq(self, spark: SparkSession, seq: int) -> None:
-        _write_small_text(spark, self._merge_seq_path(), str(seq))
-
-    def _read_schema_marker(self, spark: SparkSession):
-        import json as _json
-
-        from pyspark.sql import types as T
-        raw = _read_small_text(spark, f"{self.path}/{self.SCHEMA_MARKER}")
-        if raw is None:
-            return None
-        return T.StructType.fromJson(_json.loads(raw))
+    def _stored(self, spark: SparkSession,
+                snap: tablelog.Snapshot) -> DataFrame:
+        """The base rows of ``snap`` verbatim, retained tombstones
+        included; no base file reads as 0 rows of the logged schema."""
+        return tablelog.read(spark, self.path, snap, snap.of("base"))
 
     def _live(self, df: DataFrame) -> DataFrame:
         """Drop deleted rows, null-safely: a NULL deleted flag means the
@@ -202,28 +112,13 @@ class UpsertTable:
         return df.filter(
             ~F.coalesce(F.col(self.deleted_col) == "true", F.lit(False)))
 
-    def _read_stored(self, spark: SparkSession) -> DataFrame:
-        """The stored state verbatim — includes retained tombstone
-        rows when ``retain_tombstones`` is set. A table whose current
-        state is EMPTY (every key deleted) has no parquet footers
-        under a partitioned layout — the schema marker written
-        alongside every partitioned write makes it read as a 0-row
-        frame instead of erroring."""
-        if not self._exists(spark):
-            schema = self._read_schema_marker(spark)
-            if schema is not None:
-                return spark.createDataFrame([], schema)
-        return spark.read.parquet(self.path)
-
     def read(self, spark: SparkSession) -> DataFrame:
         """Read the merged table (live rows; retained tombstones and
         the internal stamp column never surface)."""
-        stored = self._read_stored(spark)
+        stored = self._stored(spark, tablelog.snapshot(spark, self.path))
         if self.retain_tombstones is None:
             return stored
-        out = self._live(stored)
-        return out.drop(self.TOMB_COL) if self.TOMB_COL in out.columns \
-            else out
+        return self._live(stored).drop(self.TOMB_COL)
 
     def _latest_wins(self, df: DataFrame) -> DataFrame:
         ordering = F.struct(F.col(self.ordering_col),
@@ -235,12 +130,9 @@ class UpsertTable:
 
     def _merged_state(self, merged: DataFrame,
                       merge_seq: int) -> DataFrame:
-        """Rows to STORE after a merge: live rows, plus — when
-        ``retain_tombstones=N`` — applied tombstones stamped with the
-        MERGE SEQUENCE that applied them and purged once ``N`` further
-        merges have completed. Hard-delete mode (None) stores live
-        rows only. ``merge_seq`` comes from the persisted per-table
-        counter, never the caller's batch_id (see __init__)."""
+        """Rows to STORE after a merge: live rows, plus, with
+        ``retain_tombstones=N``, applied tombstones stamped with the
+        merge sequence that applied them, purged N merges later."""
         if self.retain_tombstones is None:
             return self._live(merged)
         dead = F.coalesce(F.col(self.deleted_col) == "true", F.lit(False))
@@ -259,135 +151,70 @@ class UpsertTable:
             return df
         return df.withColumn(self.TOMB_COL, F.lit(None).cast("long"))
 
-    def _rewrite_partitions(self, base: DataFrame, incoming: DataFrame,
-                            stamp: int, retain: bool) -> DataFrame:
-        """Distinct partition values this merge must rewrite, AS A
-        DATAFRAME (one column named ``partition_by``) — never a
-        driver-side list:
-
-        * where incoming rows land,
-        * where existing versions of the incoming keys currently live
-          (cross-partition moves must vacate their old partition; the
-          lookup scans only (key, partition) — column pruning keeps it
-          a 2-column parquet scan),
-        * partitions holding tombstones this merge ages OUT of the
-          retention window — the purge in ``_merged_state`` only
-          reaches partitions in the rewrite set, so without this a
-          tombstone in a cold partition would outlive its window
-          (unbounded accumulation) and the "purged once N further
-          merges have completed" contract would hold only for hot
-          partitions. Each tombstone triggers at most ONE extra
-          partition rewrite in its lifetime (at age N, then it is
-          gone).
-        """
-        pcol = self.partition_by
-        out = incoming.select(pcol).unionByName(
-            base.select(*self.key_cols, pcol)
-            .join(incoming.select(*self.key_cols).distinct(),
-                  self.key_cols, "left_semi")
-            .select(pcol))
-        if retain:
-            out = out.unionByName(
-                base.filter(F.col(self.TOMB_COL)
-                            <= stamp - self.retain_tombstones)
-                .select(pcol))
-        return out.distinct()
+    def _touched(self, snap: tablelog.Snapshot, batch: DataFrame,
+                 merge_seq: int) -> list[dict]:
+        """Base files this merge rewrites: every file of each partition
+        that receives a row of the batch, holds a version of an incoming
+        key (a moved key leaves its old one) or, with retention, holds a
+        tombstone this merge ages out (so it is purged even if no later
+        batch touches it). Whole partitions, as the reference rewrites
+        whole file groups, keep a partition to the files of one write.
+        The lookup scans (key, partition, file) only; an unpartitioned
+        table is one partition."""
+        files, p = snap.of("base"), self.partition_by
+        if not files or not p:
+            return files
+        spark = batch.sparkSession
+        base = tablelog.read(spark, self.path, snap, files)
+        f = F.col("_metadata.file_path").alias("_f")
+        hit = (base.select(*self.key_cols, f)
+               .join(batch.select(*self.key_cols), self.key_cols,
+                     "left_semi").select("_f")
+               .unionByName(base.select(p, f).join(batch.select(p), p,
+                                                   "left_semi").select("_f")))
+        if self.retain_tombstones is not None:
+            hit = hit.unionByName(base.filter(
+                F.col(self.TOMB_COL) <= merge_seq - self.retain_tombstones)
+                .select(f))
+        # the partition directory of each file, as the log records it
+        parts = {unquote(r[0]) for r in hit.select(F.regexp_extract(
+            "_f", r"([^/]+)/[^/]+$", 1)).distinct().collect()}
+        return [r for r in files if r["partition"] in parts]
 
     # -- the MERGE --------------------------------------------------------
 
+    @tablelog.retried
     def merge_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
         """foreachBatch body: MERGE a micro-batch of unwrapped CDC rows
-        (must carry key, ordering, tiebreak and deleted columns)."""
-        spark = batch.sparkSession
-        incoming = self._latest_wins(batch)
-        retain = self.retain_tombstones is not None
-        # Tombstone ages advance on the PERSISTED merge counter, not
-        # the caller's batch_id — batch_id only names the temp dir.
-        stamp = (self._read_merge_seq(spark) + 1) if retain else batch_id
-        if retain:
-            incoming = self._with_tomb(incoming)
+        (must carry key, ordering, tiebreak and deleted columns) in one
+        log commit, merged again on a newer snapshot if a concurrent
+        commit conflicts. ``batch_id`` is not needed: a replayed batch
+        merges again to the same state (latest-wins)."""
+        self._merge(batch, tablelog.snapshot(batch.sparkSession, self.path))
 
-        if self._exists(spark):
-            cols = list(batch.columns) + ([self.TOMB_COL] if retain
-                                          else [])
-            base = self._with_tomb(self._read_stored(spark)) if retain \
-                else self._read_stored(spark)
-            base = base.select(*cols)
-            if self.partition_by:
-                parts_df = self._rewrite_partitions(base, incoming,
-                                                    stamp, retain)
-                # The rewrite set stays a DataFrame end to end
-                # (VERDICT r9 #3): the previous shape collected 3-4
-                # distinct-partition lists to the driver and filtered
-                # base with a literal ``isin(parts)``, which bloats
-                # both the driver and the compiled plan once the
-                # partition column is high-cardinality. A broadcast
-                # left-semi join carries the same semantics with a
-                # bounded-size build side (distinct partition VALUES
-                # touched by one micro-batch — the same boundedness
-                # the old collect assumed, but degrading gracefully
-                # instead of OOMing the driver), and dynamic partition
-                # pruning reuses the broadcast to prune the base scan
-                # to the touched directories.
-                affected = base.join(F.broadcast(parts_df),
-                                     self.partition_by, "left_semi")
-                live = self._merged_state(
-                    self._latest_wins(affected.unionByName(incoming)),
-                    stamp)
-                # Dynamic overwrite only rewrites partitions present in
-                # the written frame: a partition fully vacated by
-                # deletes or key moves keeps its stale files and must
-                # be dropped explicitly. Collect ONLY the vacated set
-                # (rewrite set minus surviving partitions — normally
-                # empty or tiny), and do it BEFORE the write: afterwards
-                # the lazy plans would re-scan base files the overwrite
-                # just replaced.
-                vacated = [r[0] for r in parts_df.join(
-                    live.select(self.partition_by).distinct(),
-                    self.partition_by, "left_anti").collect()]
-                with _dynamic_overwrite(spark):
-                    (live.write.mode("overwrite")
-                     .partitionBy(self.partition_by).parquet(self.path))
-                fs, _ = _hadoop_fs(spark, self.path)
-                jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-                for p in vacated:
-                    fs.delete(
-                        jvm_path(f"{self.path}/{self.partition_by}={p}"),
-                        True)
-                self._write_schema_marker(spark, live.schema)
-            else:
-                # Never overwrite the path a lazy plan is still reading:
-                # Spark's static overwrite deletes target files before the
-                # scan runs, destroying the table. Write the merged result
-                # to a sibling temp dir, then swap via FS rename (atomic
-                # on HDFS; copy-rename on S3A — a versioned-dir layout is
-                # the production alternative there).
-                live = self._merged_state(self._latest_wins(
-                    base.unionByName(incoming)), stamp)
-                tmp = f"{self.path.rstrip('/')}__tmp_{batch_id}"
-                live.write.mode("overwrite").parquet(tmp)
-                fs, jpath = _hadoop_fs(spark, self.path)
-                jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-                fs.delete(jpath, True)
-                fs.rename(jvm_path(tmp), jpath)
-        else:
-            live = self._merged_state(incoming, stamp)
-            writer = live.write.mode("overwrite")
-            if self.partition_by:
-                writer = writer.partitionBy(self.partition_by)
-            writer.parquet(self.path)
-            if self.partition_by:
-                # an all-deletes first batch writes no part files; the
-                # marker keeps the (empty) table readable and _exists
-                # stays False so the next batch re-runs initial insert
-                self._write_schema_marker(spark, live.schema)
-        if retain:
-            # Persist AFTER the data write: a crashed merge re-reads
-            # the old counter and replays as the same merge_seq (ages
-            # never advance past data they didn't see). The marker is
-            # a SIBLING of the table dir so the non-partitioned swap's
-            # dir delete cannot drop the previous counter either.
-            self._write_merge_seq(spark, stamp)
+    def _merge(self, batch: DataFrame, snap: tablelog.Snapshot,
+               consumed: list[dict] = ()) -> None:
+        """MERGE ``batch`` into the base files of ``snap`` and commit;
+        the same commit drops ``consumed`` (the Merge-on-Read deltas a
+        compaction folds in)."""
+        seq = snap.merge_seq + 1
+        incoming = self._latest_wins(batch)
+        if self.retain_tombstones is not None:
+            incoming = self._with_tomb(incoming)
+        touched = self._touched(snap, batch, seq)
+        if touched:
+            affected = tablelog.read(batch.sparkSession, self.path, snap,
+                                     touched).select(*incoming.columns)
+            incoming = self._latest_wins(affected.unionByName(incoming))
+        live = self._merged_state(incoming, seq)
+        schema, p = live.schema, self.partition_by
+        if p:  # the partition column reads back from the directory, last
+            schema = T.StructType([f for f in schema if f.name != p]
+                                  + [schema[p]])
+        add = tablelog.write(live, self.path, p, "base",
+                             f"v{snap.version + 1}")
+        tablelog.commit(batch.sparkSession, self.path, snap, add,
+                        touched + list(consumed), schema, seq)
 
     # -- read views (S15: Hudi _ro/_rt analog) -----------------------------
 
@@ -398,72 +225,47 @@ class UpsertTable:
 
     # -- table services (the Hudi compaction/clustering analog) ------------
 
-    def file_stats(self, spark: SparkSession) -> list[tuple[str, int, int]]:
-        """(partition, n_files, total_bytes) per partition directory —
-        the small-file diagnostic a compaction policy reads. Pure FS
-        metadata (no data scan)."""
-        fs, jpath = _hadoop_fs(spark, self.path)
-        out = []
-        if self.partition_by:
-            for st in fs.listStatus(jpath):
-                if not st.isDirectory():
-                    continue
-                name = st.getPath().getName()
-                files = [f for f in fs.listStatus(st.getPath())
-                         if f.getPath().getName().endswith(".parquet")]
-                out.append((name, len(files),
-                            sum(f.getLen() for f in files)))
-        else:
-            files = [f for f in fs.listStatus(jpath)
-                     if f.getPath().getName().endswith(".parquet")]
-            out.append(("", len(files), sum(f.getLen() for f in files)))
-        return sorted(out)
+    @staticmethod
+    def _stats(snap: tablelog.Snapshot) -> list[tuple[str, int, int]]:
+        acc: dict[str, tuple[int, int]] = {}
+        for f in snap.of("base"):
+            n, size = acc.get(f["partition"], (0, 0))
+            acc[f["partition"]] = (n + 1, size + f["size"])
+        return sorted((p, n, size) for p, (n, size) in acc.items())
 
+    def file_stats(self, spark: SparkSession) -> list[tuple[str, int, int]]:
+        """(partition, n_files, total_bytes) per partition directory,
+        from the log alone — the small-file diagnostic of compaction."""
+        return self._stats(tablelog.snapshot(spark, self.path))
+
+    @tablelog.retried
     def compact(self, spark: SparkSession,
                 target_bytes: int = 128 * 1024 * 1024,
                 min_files: int = 2) -> list[str]:
         """Rewrite partitions whose file count exceeds ``min_files``
-        into ⌈bytes/target⌉ right-sized files — the engine's analog of
-        Hudi's compaction / clustering table service (the reference
-        schedules it inline via ``hoodie.compact.inline``,
-        ``deltastreamer_jobs_bulk.sh``; MERGE here produces the
-        small-file debt the same way frequent micro-batch commits do).
-
-        Data is byte-identical afterwards — compaction only changes the
-        file layout, which tests assert by content equality. The
-        rewrite reads the STORED state, so in ``retain_tombstones``
-        mode in-window tombstone rows (and their stamp column) survive
-        compaction — a layout service must never shrink the
-        resurrection-protection window. Returns the list of partitions
+        into ⌈bytes/target⌉ right-sized files — the analog of Hudi's
+        compaction / clustering service (``hoodie.compact.inline``,
+        ``deltastreamer_jobs_bulk.sh``). Returns the partitions
         rewritten.
 
-        Scale shape: the policy reads FS metadata only; each selected
-        partition is read once, repartitioned to its target file count,
-        and swapped in via dynamic partition overwrite — cost scales
-        with the rewritten partitions, never the table. Unpartitioned
-        tables use the same temp-dir + rename swap as the MERGE."""
-        stats = self.file_stats(spark)
+        Only the file layout changes. The rewrite reads the STORED
+        state, so in-window tombstones (and their stamp column) survive:
+        a layout service must never shrink the retention window. The
+        policy reads the log only, and one commit swaps every rewritten
+        partition."""
+        snap = tablelog.snapshot(spark, self.path)
         todo = [(p, max(1, -(-size // target_bytes)))
-                for p, n, size in stats if n > min_files]
-        if not todo:
-            return []
-        if self.partition_by:
-            for part, nfiles in todo:
-                val = part.split("=", 1)[1]
-                sub = self._read_stored(spark).filter(
-                    F.col(self.partition_by) == val)
-                with _dynamic_overwrite(spark):
-                    (sub.repartition(nfiles).write.mode("overwrite")
-                     .partitionBy(self.partition_by).parquet(self.path))
-        else:
-            nfiles = todo[0][1]
-            stored = self._read_stored(spark).repartition(nfiles)
-            tmp = f"{self.path.rstrip('/')}__compact_tmp"
-            stored.write.mode("overwrite").parquet(tmp)
-            fs, jpath = _hadoop_fs(spark, self.path)
-            jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-            fs.delete(jpath, True)
-            fs.rename(jvm_path(tmp), jpath)
+                for p, n, size in self._stats(snap) if n > min_files]
+        add, drop = [], []
+        for part, nfiles in todo:
+            files = [f for f in snap.of("base") if f["partition"] == part]
+            drop += files
+            add += tablelog.write(
+                tablelog.read(spark, self.path, snap, files)
+                .repartition(nfiles), self.path, self.partition_by,
+                "base", f"v{snap.version + 1}")
+        if todo:
+            tablelog.commit(spark, self.path, snap, add, drop)
         return [p for p, _ in todo]
 
 
@@ -474,26 +276,19 @@ class MergeOnReadTable:
     CoW AND MoR jobs; ``moma_debezium_hudi_demo.ipynb`` cells 8-11
     query the ``_ro`` vs ``_rt`` views of the MoR table).
 
-    Layout::
+    Layout: one table log, as for :class:`UpsertTable`, holding two
+    kinds of file side by side in the partition directories — ``base``
+    files (bulk insert and compaction output) and ``delta`` files (one
+    append per micro-batch, named by its batch id).
 
-        path/base/...             partitioned parquet (bulk insert +
-                                   compaction output only)
-        path/log/_delta=NNNN/...  append-only per-batch delta files
-
-    Why MoR exists: a CoW MERGE rewrites every affected partition per
-    micro-batch — at 100 TB CDC that write amplification is the #1
-    cost lever. Here ingest (:meth:`append_batch`) writes ONLY the
-    batch rows (one small parquet write, never reads or rewrites the
-    base); the merge cost moves to read time (``_rt``) and is
-    amortized away by :meth:`compact`.
-
-    ``_rt`` scale shape: the uncompacted log between compactions is
-    small relative to the base, so its distinct key set broadcasts.
-    The base splits into untouched rows (anti join against the log
-    keys — streams through with NO shuffle) and affected rows (semi
-    join), and only affected ∪ log goes through the latest-wins
-    window. A 100 TB base with a 10 GB log shuffles 10-GB-scale data,
-    not the table.
+    Why MoR exists: a CoW MERGE rewrites every partition a batch
+    touches. Here ingest (:meth:`append_batch`) writes ONLY the batch
+    rows and never reads the base; the merge moves to read time
+    (``_rt``) and is amortized away by :meth:`compact`. The pending
+    deltas are small beside the base, so ``_rt`` broadcasts their key
+    set: base rows no delta touches stream through an anti join with
+    no shuffle, and only the affected rows and the deltas meet in the
+    latest-wins window.
     """
 
     LOG_COL = "_delta"
@@ -504,181 +299,116 @@ class MergeOnReadTable:
                  max_delta_commits: int | None = None,
                  retain_tombstones: int | None = None) -> None:
         """``max_delta_commits`` is the ``hoodie.compact.inline.max.
-        delta.commits`` analog (the reference's DeltaStreamer MoR jobs
-        schedule inline compaction): when set, :meth:`append_batch`
-        folds the log into base once it holds that many delta commits,
-        which also bounds the log key set the ``_rt`` broadcast
-        carries.
+        delta.commits`` analog: when set, :meth:`append_batch` compacts
+        once that many delta commits are pending, which also bounds the
+        key set the ``_rt`` broadcast carries.
 
-        ``retain_tombstones=N`` passes the soft-delete pattern through
-        to the compacted base (see :class:`UpsertTable`): compaction
-        stores applied deletes as tombstone rows for N further
-        compaction merges, and ``_rt`` reads merge against the STORED
-        state (tombstones included) so an isolated pre-tombstone
-        replay appended to the log re-loses to a retained tombstone
-        instead of resurrecting through the read-time merge."""
-        self.base = UpsertTable(f"{path.rstrip('/')}/base", key_cols,
-                                ordering_col, tiebreak_col, partition_by,
-                                deleted_col,
+        ``retain_tombstones=N`` passes Hudi's soft delete through to the
+        compacted base (see :class:`UpsertTable`); ``_rt`` merges
+        against the STORED state, so an isolated pre-tombstone replay
+        appended as a delta loses to a retained tombstone."""
+        self.base = UpsertTable(path, key_cols, ordering_col, tiebreak_col,
+                                partition_by, deleted_col,
                                 retain_tombstones=retain_tombstones)
-        self.path = path.rstrip("/")
-        self.log_path = f"{self.path}/log"
+        self.path = self.base.path
         self.key_cols = key_cols
-        self.ordering_col = ordering_col
-        self.tiebreak_col = tiebreak_col
         self.partition_by = partition_by
-        self.deleted_col = deleted_col
         self.max_delta_commits = max_delta_commits
         #: names registered via :meth:`register_views`, re-registered
-        #: after every :meth:`compact` (the fold rewrites base files
-        #: and drops consumed log dirs, so a view's previously-analyzed
-        #: lazy plan would reference files that no longer exist — the
-        #: reference notebook's query-then-compact-then-query sequence)
+        #: after every :meth:`compact`, whose fold deletes the files an
+        #: analyzed view plan names
         self._view_names: set[str] = set()
 
-    # -- helpers ------------------------------------------------------------
-
-    def _log_batches(self, spark: SparkSession) -> list[str]:
-        fs, jpath = _hadoop_fs(spark, self.log_path)
-        if not fs.exists(jpath):
-            return []
-        return sorted(st.getPath().getName() for st in fs.listStatus(jpath)
-                      if st.isDirectory()
-                      and st.getPath().getName().startswith(
-                          f"{self.LOG_COL}="))
-
-    def _read_log(self, spark: SparkSession,
-                  batches: list[str]) -> DataFrame | None:
-        if not batches:
-            return None
-        paths = [f"{self.log_path}/{b}" for b in batches]
-        return spark.read.parquet(*paths)
+    @staticmethod
+    def _pending(snap: tablelog.Snapshot) -> list[str]:
+        """Batch ids of the delta commits not yet compacted."""
+        return sorted({f["commit"] for f in snap.of("delta")})
 
     # -- ingest (the whole point: no base read, no partition rewrite) -------
 
+    @tablelog.retried
     def append_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        """foreachBatch body: append the micro-batch to the delta log.
-
-        Unlike the CoW MERGE this never reads the base table and never
-        rewrites a partition — one parquet write of exactly the batch
-        rows. Latest-wins is deferred to ``_rt`` reads / compaction,
-        keyed on (ordering, tiebreak), so re-appended duplicates are
-        harmless (max_by picks the same winner)."""
+        """foreachBatch body: append the micro-batch as delta files —
+        one parquet write of exactly the batch rows; latest-wins waits
+        for ``_rt`` reads and compaction. A replayed batch id replaces
+        its own pending deltas, so a crash-replayed micro-batch is
+        published once."""
         spark = batch.sparkSession
-        if not self.base._exists(spark):
+        snap = tablelog.snapshot(spark, self.path)
+        if snap.version < 0:
             # initial bulk insert goes straight to base files, exactly
             # like DeltaStreamer's first commit.
             self.base.merge_batch(batch, batch_id)
             return
-        (batch.write.mode("overwrite")
-         .parquet(f"{self.log_path}/{self.LOG_COL}={batch_id:09d}"))
+        commit = f"{batch_id:09d}"
+        add = tablelog.write(batch, self.path, self.partition_by, "delta",
+                             commit)
+        snap = tablelog.commit(spark, self.path, snap, add,
+                               [f for f in snap.of("delta")
+                                if f["commit"] == commit])
         if (self.max_delta_commits is not None
-                and len(self._log_batches(spark)) >= self.max_delta_commits):
+                and len(self._pending(snap)) >= self.max_delta_commits):
             self.compact(spark)  # inline compaction (hoodie analog)
 
     # -- read views (S15: _ro / _rt) ----------------------------------------
 
     def read_optimized(self, spark: SparkSession) -> DataFrame:
-        """``_ro``: base files only — fast, possibly stale (pending log
-        entries are invisible until compaction folds them in)."""
+        """``_ro``: base files only — fast, possibly stale (pending
+        deltas are invisible until compaction folds them in)."""
         return self.base.read(spark)
 
     def read_realtime(self, spark: SparkSession) -> DataFrame:
-        """``_rt``: read-time merge of base ∪ log (W3 latest-wins over
-        the record key, delete rows dropped) — always current.
-
-        Base rows whose key never appears in the log bypass the merge
-        entirely via a broadcast anti join (no shuffle of the base);
-        only (base ⋉ log-keys) ∪ log enters the latest-wins window.
-
-        Retention mode merges against the STORED base state —
-        retained tombstones included — so a within-window isolated
-        replay in the log loses to the stored tombstone; tombstones
-        and the stamp column never surface in the returned frame."""
-        retain = self.base.retain_tombstones is not None
-        log = self._read_log(spark, self._log_batches(spark))
-        base = self.base._with_tomb(self.base._read_stored(spark)) \
-            if retain else self.read_optimized(spark)
-        if log is None:
-            out = self.base._live(base)
-            return out.drop(UpsertTable.TOMB_COL) if retain else out
-        log = self.base._with_tomb(log) if retain else log
-        log = log.select(*base.columns)
+        """``_rt``: read-time merge of base ∪ deltas (W3 latest-wins
+        over the record key, delete rows dropped) — always current.
+        Retention mode merges against the STORED base, tombstones
+        included; tombstones and the stamp column never surface."""
+        snap = tablelog.snapshot(spark, self.path)
+        base = self.base._stored(spark, snap)
+        deltas = snap.of("delta")
+        if not deltas:
+            return self.base._live(base).drop(UpsertTable.TOMB_COL)
+        # deltas read with the base schema: a column they lack (the
+        # retention stamp) reads as NULL
+        log = tablelog.read(spark, self.path, snap, deltas)
         keys = F.broadcast(log.select(*self.key_cols).distinct())
         untouched = base.join(keys, self.key_cols, "left_anti")
         affected = base.join(keys, self.key_cols, "left_semi")
-        if retain:
-            # untouched STORED rows can be retained tombstones — the
-            # live filter must cover both branches here, unlike the
-            # hard-delete path below (whose base stores live rows
-            # only, and whose plan shape is kept byte-identical).
-            merged = self.base._latest_wins(affected.unionByName(log))
+        merged = self.base._latest_wins(affected.unionByName(log))
+        if self.base.retain_tombstones is not None:
+            # untouched STORED rows can be retained tombstones: the
+            # live filter covers both branches (the hard-delete base
+            # stores live rows only)
             return self.base._live(untouched.unionByName(merged)) \
                 .drop(UpsertTable.TOMB_COL)
-        merged = self.base._live(
-            self.base._latest_wins(affected.unionByName(log)))
-        return untouched.unionByName(merged)
+        return untouched.unionByName(self.base._live(merged))
 
     def register_views(self, spark: SparkSession, name: str) -> None:
         """``{name}_ro`` / ``{name}_rt`` temp views — the Hive-synced
         pair the reference notebook queries (ipynb cells 8-11).
 
-        The views stay valid ACROSS compaction: :meth:`compact`
-        re-registers every name seen here against the post-compaction
-        file layout. (A raw DataFrame handle from
-        :meth:`read_realtime` held across a compact() is NOT
-        refreshed — its analyzed plan pins pre-compaction files — so
-        query through the views, or re-call read_realtime after
-        compacting.)"""
+        The views stay valid across :meth:`compact`, which re-registers
+        them; a frame from :meth:`read_realtime` held across a compact
+        is not refreshed."""
         self._view_names.add(name)
         self.read_optimized(spark).createOrReplaceTempView(f"{name}_ro")
         self.read_realtime(spark).createOrReplaceTempView(f"{name}_rt")
 
     # -- table service -------------------------------------------------------
 
+    @tablelog.retried
     def compact(self, spark: SparkSession) -> list[str]:
-        """Fold the delta log into base files (Hudi's MoR compaction,
-        ``hoodie.compact.inline.max.delta.commits`` analog) and delete
-        the consumed log batches. Afterwards ``_ro`` == ``_rt``.
-
-        Reuses the CoW MERGE for the fold, so only partitions the log
-        actually touches (incoming values ∪ partitions holding moved
-        keys) are rewritten — cost scales with the log, not the base.
-        The consumed-batch list is snapshotted BEFORE the fold so a
-        concurrent append lands in a later compaction, never lost."""
-        batches = self._log_batches(spark)
-        log = self._read_log(spark, batches)
-        if log is None:
+        """Fold the pending deltas into base files (Hudi's MoR
+        compaction) with the CoW MERGE: one commit adds the merged base
+        files and drops the rewritten ones and the consumed deltas.
+        Afterwards ``_ro`` == ``_rt``. Returns the consumed delta
+        commits as ``_delta=<batch id>``."""
+        snap = tablelog.snapshot(spark, self.path)
+        deltas = snap.of("delta")
+        if not deltas:
             return []
-        self.base.merge_batch(log.select(
-            *self.read_optimized(spark).columns))
-        fs, _ = _hadoop_fs(spark, self.log_path)
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-        for b in batches:
-            fs.delete(jvm_path(f"{self.log_path}/{b}"), True)
-        # refresh registered views: their lazy plans referenced the
-        # pre-compaction base files and the just-deleted log dirs.
-        # Snapshot first — register_views re-adds each name to the
-        # live set, and mutating a set mid-iteration is only benign
-        # today because re-adding an existing element keeps the size.
+        log = tablelog.read(spark, self.path, snap, deltas)
+        self.base._merge(log.drop(UpsertTable.TOMB_COL), snap, deltas)
+        # refresh registered views (register_views re-adds each name)
         for name in list(self._view_names):
             self.register_views(spark, name)
-        return batches
-
-
-class _dynamic_overwrite:
-    """Scoped spark.sql.sources.partitionOverwriteMode=dynamic, so the
-    overwrite replaces only partitions present in the written frame."""
-
-    def __init__(self, spark: SparkSession) -> None:
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                            "dynamic")
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                            self.prev)
+        return [f"{self.LOG_COL}={c}" for c in self._pending(snap)]

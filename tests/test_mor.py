@@ -4,15 +4,17 @@ subsystem (reference runs CoW AND MoR DeltaStreamer jobs,
 cells 8-11 query ``_ro`` vs ``_rt``).
 
 Covers the contracts the end-to-end ``cdc_upsert_mor`` oracle row
-cannot: log appends leave base files byte-untouched (the whole point
+cannot: delta appends leave base files byte-untouched (the whole point
 of MoR — no per-batch partition rewrite), ``_ro`` staleness vs ``_rt``
-currency, compaction folding the log so ``_ro`` catches up, and MoR/
+currency, compaction folding the deltas so ``_ro`` catches up, and MoR/
 CoW state equivalence under the same feed including deletes and
-cross-partition key moves.
+cross-partition key moves. Base and delta files are told apart by the
+table log, which the helpers below read.
 """
 
 import os
 
+from kafka_connect_msk_demo_spark import tablelog
 from kafka_connect_msk_demo_spark.streaming.upsert import (MergeOnReadTable,
                                                            UpsertTable)
 
@@ -29,23 +31,26 @@ def _mor(path, partition_by="part"):
                             partition_by=partition_by)
 
 
-def _base_file_state(root):
-    """{relpath: (size, mtime_ns)} of every file under base/."""
+def _base_file_state(spark, root):
+    """{relpath: (size, mtime_ns)} of every base file the log names."""
     state = {}
-    base = os.path.join(root, "base")
-    for dirpath, _, files in os.walk(base):
-        for f in files:
-            p = os.path.join(dirpath, f)
-            st = os.stat(p)
-            state[os.path.relpath(p, base)] = (st.st_size, st.st_mtime_ns)
+    for f in tablelog.snapshot(spark, root).of("base"):
+        st = os.stat(os.path.join(root, f["path"]))
+        state[f["path"]] = (st.st_size, st.st_mtime_ns)
     return state
+
+
+def _pending(spark, t):
+    """Batch ids of the delta commits the log holds, oldest first."""
+    return sorted({f["commit"] for f in
+                   tablelog.snapshot(spark, t.path).of("delta")})
 
 
 def test_append_never_rewrites_base(spark, tmp_path):
     t = _mor(tmp_path / "t")
     t.append_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
                                   (2, "b", "v1", 10, 0, "false")]), 0)
-    before = _base_file_state(str(tmp_path / "t"))
+    before = _base_file_state(spark, str(tmp_path / "t"))
     assert before, "bulk insert must create base files"
     # updates, a delete and a cross-partition move: under CoW every one
     # of these would rewrite partitions — under MoR none may.
@@ -53,7 +58,7 @@ def test_append_never_rewrites_base(spark, tmp_path):
     t.append_batch(_batch(spark, [(2, "b", "v1", 30, 0, "true"),
                                   (3, "c", "v1", 30, 0, "false")]), 2)
     t.append_batch(_batch(spark, [(1, "b", "v3", 40, 0, "false")]), 3)
-    assert _base_file_state(str(tmp_path / "t")) == before
+    assert _base_file_state(spark, str(tmp_path / "t")) == before
 
 
 def test_ro_stale_rt_current(spark, tmp_path):
@@ -76,12 +81,14 @@ def test_compact_folds_log_and_drains_it(spark, tmp_path):
     rt_before = {(r.id, r.val) for r in t.read_realtime(spark).collect()}
     consumed = t.compact(spark)
     assert consumed == ["_delta=000000001"]
-    assert t._log_batches(spark) == []
+    assert _pending(spark, t) == []
     ro = {(r.id, r.val) for r in t.read_optimized(spark).collect()}
     rt = {(r.id, r.val) for r in t.read_realtime(spark).collect()}
     assert ro == rt == rt_before == {(1, "v2")}
     # the delete vacated partition b in the folded base
-    assert not (tmp_path / "t" / "base" / "part=b").exists()
+    assert {f["partition"] for f in
+            tablelog.snapshot(spark, t.path).files} == {"part=a"}
+    assert not (tmp_path / "t" / "part=b").exists()
 
 
 def test_rt_matches_cow_same_feed(spark, tmp_path):
@@ -144,14 +151,14 @@ def test_rt_base_side_has_no_shuffle(spark, tmp_path):
     assert anti_idx, "base pass-through must be a broadcast anti join:\n" \
         + plan
     # the anti join's streamed (left) child must be the raw base scan —
-    # no Exchange/Sort between them (broadcasting the log keys is the
+    # no Exchange/Sort between them (broadcasting the delta keys is the
     # only data movement the untouched base ever sees)
     nxt = lines[anti_idx[0] + 1]
-    # the Location string is truncated in wide plans, so identify the
-    # base scan by its full column set (log scans are key-pruned) and
-    # by not being the log path
-    assert ("FileScan parquet" in nxt
-            and "val" in nxt and "/log" not in nxt), (
+    # base and delta files share the partition directories and the
+    # Location string is truncated in wide plans, so identify the base
+    # scan by its full column set (the broadcast delta scan is
+    # key-pruned)
+    assert "FileScan parquet" in nxt and "val" in nxt, (
         "base side of the anti join is not a bare scan:\n" + plan)
 
 
@@ -236,22 +243,22 @@ def test_randomized_feeds_mor_equals_cow_equals_reference(spark, tmp_path):
 
 
 def test_unpartitioned_mor(spark, tmp_path):
-    """partition_by=None: bulk insert + log appends + _rt merge + the
-    temp-dir-swap compaction path all work without a partition column."""
+    """partition_by=None: bulk insert + delta appends + _rt merge +
+    compaction all work without a partition column."""
     t = MergeOnReadTable(path=str(tmp_path / "t"), key_cols=["id"],
                          ordering_col="ts", tiebreak_col="seq",
                          partition_by=None)
     t.append_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
                                   (2, "a", "v1", 10, 0, "false")]), 0)
-    before = _base_file_state(str(tmp_path / "t"))
+    before = _base_file_state(spark, str(tmp_path / "t"))
     t.append_batch(_batch(spark, [(1, "a", "v2", 20, 0, "false"),
                                   (2, "a", "v1", 20, 0, "true"),
                                   (3, "a", "v1", 20, 0, "false")]), 1)
-    assert _base_file_state(str(tmp_path / "t")) == before
+    assert _base_file_state(spark, str(tmp_path / "t")) == before
     rt = {(r.id, r.val) for r in t.read_realtime(spark).collect()}
     assert rt == {(1, "v2"), (3, "v1")}
     t.compact(spark)
-    assert t._log_batches(spark) == []
+    assert _pending(spark, t) == []
     ro = {(r.id, r.val) for r in t.read_optimized(spark).collect()}
     assert ro == rt
 
@@ -266,9 +273,9 @@ def test_inline_compaction_bounds_log(spark, tmp_path):
                          partition_by="part", max_delta_commits=2)
     t.append_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false")]), 0)
     t.append_batch(_batch(spark, [(1, "a", "v2", 20, 0, "false")]), 1)
-    assert len(t._log_batches(spark)) == 1          # below bound
+    assert len(_pending(spark, t)) == 1          # below bound
     t.append_batch(_batch(spark, [(2, "b", "v1", 30, 0, "false")]), 2)
-    assert t._log_batches(spark) == []              # inline-compacted
+    assert _pending(spark, t) == []              # inline-compacted
     ro = {(r.id, r.val) for r in t.read_optimized(spark).collect()}
     assert ro == {(1, "v2"), (2, "v1")}             # _ro is current
 
@@ -276,7 +283,7 @@ def test_inline_compaction_bounds_log(spark, tmp_path):
 def test_views_valid_across_compact(spark, tmp_path):
     """ADVICE r6: a temp view registered BEFORE compact() must stay
     queryable AFTER it — the fold rewrites base files and deletes
-    consumed log dirs, so compact() re-registers every view name it
+    consumed delta files, so compact() re-registers every view name it
     has seen (the reference notebook's query-then-compact-then-query
     sequence)."""
     t = _mor(tmp_path / "t")
@@ -312,9 +319,10 @@ def test_cross_partition_key_move_through_log(spark, tmp_path):
     t.compact(spark)
     ro = {(r.id, r.part, r.val) for r in t.read_optimized(spark).collect()}
     assert ro == rt
-    # the vacated partition dir is gone from base (no stale files)
-    import os
-    assert not os.path.exists(str(tmp_path / "t" / "base" / "part=a"))
+    # the vacated partition left the log and the disk (no stale files)
+    assert "part=a" not in {f["partition"] for f in
+                            tablelog.snapshot(spark, t.path).files}
+    assert not (tmp_path / "t" / "part=a").exists()
     rt_after = {(r.id, r.part, r.val)
                 for r in t.read_realtime(spark).collect()}
     assert rt_after == rt
@@ -351,7 +359,7 @@ def test_inline_compaction_fires_mid_stream(spark, sf_small, tmp_path):
     orig_compact = mor.compact
 
     def counting_compact(s):
-        fired.append(len(mor._log_batches(s)))
+        fired.append(len(_pending(s, mor)))
         return orig_compact(s)
 
     mor.compact = counting_compact
@@ -361,7 +369,7 @@ def test_inline_compaction_fires_mid_stream(spark, sf_small, tmp_path):
     run_foreach_batch(cdc_unwrap(stream), mor.append_batch,
                       checkpoint_dir=str(tmp_path / "ckpt"))
     assert fired == [2, 2], "compaction must fire twice, at 2 commits"
-    assert len(mor._log_batches(spark)) == 1, "one pending commit"
+    assert len(_pending(spark, mor)) == 1, "one pending commit"
 
     # CoW twin over the same envelope, one batch (latest-wins is
     # arrival-order-insensitive, so a single MERGE is the same state)
@@ -381,9 +389,10 @@ def test_mor_stream_restart_is_exactly_once(spark, sf_small, tmp_path):
     DeltaStreamer is restarted routinely): kill the stream mid-feed,
     restart from the same checkpoint, and the final table must equal
     an uninterrupted run. Exactly-once holds because append_batch
-    writes the delta dir keyed by EPOCH id with overwrite semantics —
-    a replayed micro-batch (foreachBatch is at-least-once) replaces
-    its own commit instead of appending a duplicate."""
+    commits the deltas under the EPOCH id and drops that id's earlier
+    deltas in the same commit — a replayed micro-batch (foreachBatch is
+    at-least-once) replaces its own commit instead of appending a
+    duplicate."""
     import os
 
     from kafka_connect_msk_demo_spark.sources.cdc import (
@@ -425,8 +434,8 @@ def test_mor_stream_restart_is_exactly_once(spark, sf_small, tmp_path):
         run_foreach_batch(cdc_unwrap(make_stream()), crashing,
                           checkpoint_dir=str(tmp_path / "ckpt"))
     # restart from the SAME checkpoint with the plain writer; the
-    # uncommitted epoch replays (at-least-once) and must overwrite its
-    # own delta dir — the state-equality assertion below is the proof
+    # uncommitted epoch replays (at-least-once) and must replace its
+    # own delta commit — the state-equality assertion below is the proof
     run_foreach_batch(cdc_unwrap(make_stream()), mor.append_batch,
                       checkpoint_dir=str(tmp_path / "ckpt"))
     assert len(seen) == 4  # first run really died inside batch 4
@@ -482,8 +491,8 @@ def test_all_deletes_first_batch_then_recovery(spark, tmp_path):
     resolves to a tombstone used to leave a _SUCCESS-only partitioned
     dir that read as existing but had no parquet footer — the next
     merge crashed with UNABLE_TO_INFER_SCHEMA. Now: empty state is
-    readable (schema marker), _exists means has-data, and ingestion
-    recovers on the next batch. Exercised for CoW and MoR."""
+    readable (the log entry carries the schema) and ingestion recovers
+    on the next batch. Exercised for CoW and MoR."""
     cow = UpsertTable(path=str(tmp_path / "cow"), key_cols=["id"],
                       ordering_col="ts", tiebreak_col="seq",
                       partition_by="part")

@@ -233,17 +233,25 @@ def test_heavy_hitters_random_zipf(spark):
 
 
 def _mk_table(spark, path, partitioned):
+    """A table whose first merge wrote its 2000 rows with 10 tasks: 10
+    small files in each partition (the small-file debt)."""
     from kafka_connect_msk_demo_spark.streaming.upsert import UpsertTable
-    df = spark.range(2000).select(
-        F.col("id").alias("k"), F.lit(1).alias("v"),
-        (F.col("id") % 2).cast("string").alias("p"),
-        F.lit(0).alias("ts"), F.lit("false").alias("__deleted"))
-    w = df.repartition(10).write.mode("overwrite")
-    if partitioned:
-        w = w.partitionBy("p")
-    w.parquet(path)
-    return UpsertTable(path, ["k"], "ts", "k",
-                       partition_by="p" if partitioned else None)
+    t = UpsertTable(path, ["k"], "ts", "k",
+                    partition_by="p" if partitioned else None)
+    conf = {"spark.sql.shuffle.partitions": "10",
+            "spark.sql.adaptive.enabled": "false"}
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        t.merge_batch(spark.range(2000).repartition(10).select(
+            F.col("id").alias("k"), F.lit(1).alias("v"),
+            (F.col("id") % 2).cast("string").alias("p"),
+            F.lit(0).alias("ts"), F.lit("false").alias("__deleted")))
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    return t
 
 
 def test_compact_reduces_files_preserves_data_partitioned(spark, tmp_path):

@@ -163,7 +163,7 @@ def test_manifest_commit_exactly_once(spark, tmp_path):
 
     # a crashed writer's orphan file is never read
     pq.write_table(pa.table({"k": [999, 998]}),
-                   f"{path}/data/zz-orphan-00000.parquet")
+                   f"{path}/zz-orphan-00000.parquet")
     assert read_manifested(spark, path).count() == 10
 
     # retrying the SAME commit id republishes, not duplicates

@@ -4,13 +4,27 @@ end-to-end cdc_upsert oracle check cannot reach:
 * non-partitioned multi-batch merge (a naive overwrite of the path a
   lazy plan still reads destroys the table — FAILED_READ_FILE);
 * a partition fully vacated by deletes / cross-partition key moves must
-  not keep stale files under dynamic partition overwrite;
+  leave the table log and lose its directory;
 * NULL ``__deleted`` flags must be treated as live, not dropped.
+
+Stored state (retained tombstones included) and the merge sequence are
+read from the table log, the same place the table reads them.
 """
 
 import pytest
 
+from kafka_connect_msk_demo_spark import tablelog
 from kafka_connect_msk_demo_spark.streaming.upsert import UpsertTable
+
+
+def _stored(spark, t):
+    """Every stored row of the newest version, tombstones included."""
+    snap = tablelog.snapshot(spark, t.path)
+    return tablelog.read(spark, t.path, snap, snap.files)
+
+
+def _partitions(spark, t):
+    return {f["partition"] for f in tablelog.snapshot(spark, t.path).files}
 
 
 def _batch(spark, rows):
@@ -46,6 +60,7 @@ def test_partition_vacated_by_delete(spark, tmp_path):
     t.merge_batch(_batch(spark, [(2, "b", "v1", 20, 0, "true")]), 1)
     rows = t.read(spark).collect()
     assert {(r.id, r.part) for r in rows} == {(1, "a")}
+    assert _partitions(spark, t) == {"part=a"}
     assert not (tmp_path / "t" / "part=b").exists()
 
 
@@ -56,6 +71,7 @@ def test_cross_partition_key_move(spark, tmp_path):
     t.merge_batch(_batch(spark, [(1, "b", "v2", 20, 0, "false")]), 1)
     rows = t.read(spark).collect()
     assert {(r.id, r.part, r.val) for r in rows} == {(1, "b", "v2")}
+    assert _partitions(spark, t) == {"part=b"}
     assert not (tmp_path / "t" / "part=a").exists()
 
 
@@ -127,13 +143,11 @@ def test_retention_window_purges_after_n_batches(spark, tmp_path):
     t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
                                  (2, "a", "w1", 10, 0, "false")]), 0)
     t.merge_batch(_batch(spark, [(1, "a", "v1", 20, 0, "true")]), 1)
-    stored = {r.id for r in spark.read.parquet(str(tmp_path / "t"))
-              .collect()}
+    stored = {r.id for r in _stored(spark, t).collect()}
     assert stored == {1, 2}  # tombstone row 1 still stored
     # next merge (unrelated key) purges the aged tombstone
     t.merge_batch(_batch(spark, [(2, "a", "w2", 30, 0, "false")]), 2)
-    stored = {r.id for r in spark.read.parquet(str(tmp_path / "t"))
-              .collect()}
+    stored = {r.id for r in _stored(spark, t).collect()}
     assert stored == {2}
     # past the window an isolated replay resurrects again (documented)
     t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false")]), 3)
@@ -166,12 +180,10 @@ def test_retention_ages_by_merge_count_not_batch_id(spark, tmp_path,
     t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
                                  (2, "a", "w1", 10, 0, "false")]))
     t.merge_batch(_batch(spark, [(1, "a", "v1", 20, 0, "true")]))
-    stored = {r.id for r in spark.read.parquet(str(tmp_path / "a"))
-              .collect()}
+    stored = {r.id for r in _stored(spark, t).collect()}
     assert stored == {1, 2}  # tombstone still within its window
     t.merge_batch(_batch(spark, [(2, "a", "w2", 30, 0, "false")]))
-    stored = {r.id for r in spark.read.parquet(str(tmp_path / "a"))
-              .collect()}
+    stored = {r.id for r in _stored(spark, t).collect()}
     assert stored == {2}, "default batch_id=0 retained forever"
 
     # (b) batch-id jump 1 -> 1000 (checkpoint restart): window N=3
@@ -181,8 +193,7 @@ def test_retention_ages_by_merge_count_not_batch_id(spark, tmp_path,
     t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false")]), 0)
     t.merge_batch(_batch(spark, [(1, "a", "v1", 20, 0, "true")]), 1)
     t.merge_batch(_batch(spark, [(9, "a", "z1", 30, 0, "false")]), 1000)
-    stored = {r.id for r in spark.read.parquet(str(tmp_path / "b"))
-              .collect()}
+    stored = {r.id for r in _stored(spark, t).collect()}
     assert 1 in stored, "batch-id jump purged the window early"
     t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false")]), 1001)
     assert {(r.id, r.val) for r in t.read(spark).collect()} \
@@ -200,11 +211,11 @@ def test_compact_preserves_inwindow_tombstones(spark, tmp_path, part):
     t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
                                  (2, "a", "w1", 10, 0, "false")]))
     t.merge_batch(_batch(spark, [(1, "a", "v1", 20, 0, "true")]))
-    before = {tuple(r) for r in t._read_stored(spark).collect()}
+    before = {tuple(r) for r in _stored(spark, t).collect()}
     assert any(r[UpsertTable.TOMB_COL] is not None
-               for r in t._read_stored(spark).collect())
+               for r in _stored(spark, t).collect())
     t.compact(spark, target_bytes=1 << 30, min_files=0)
-    stored = t._read_stored(spark)
+    stored = _stored(spark, t)
     assert UpsertTable.TOMB_COL in stored.columns
     assert {tuple(r) for r in stored.collect()} == before
     # resurrection stays blocked across the compact
@@ -223,18 +234,18 @@ def test_cold_partition_tombstone_purged_at_age(spark, tmp_path):
     t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
                                  (2, "b", "w1", 10, 0, "false")]))
     t.merge_batch(_batch(spark, [(1, "a", "v1", 20, 0, "true")]))
-    tombs = [r for r in t._read_stored(spark).collect()
+    tombs = [r for r in _stored(spark, t).collect()
              if r[UpsertTable.TOMB_COL] is not None]
     assert [(r.id, r.part) for r in tombs] == [(1, "a")]
     # two further merges touch ONLY partition b; window N=1 expires
     # the part-a tombstone on the first of them
     t.merge_batch(_batch(spark, [(2, "b", "w2", 30, 0, "false")]))
-    stored = t._read_stored(spark)
+    stored = _stored(spark, t)
     assert stored.filter(
         stored[UpsertTable.TOMB_COL].isNotNull()).count() == 0
-    # ... and the vacated partition directory is gone too
-    import os
-    assert not os.path.exists(str(tmp_path / "t" / "part=a"))
+    # ... and the vacated partition left the log and the disk
+    assert _partitions(spark, t) == {"part=b"}
+    assert not (tmp_path / "t" / "part=a").exists()
     t.merge_batch(_batch(spark, [(2, "b", "w3", 40, 0, "false")]))
     assert {(r.id, r.val) for r in t.read(spark).collect()} \
         == {(2, "w3")}
@@ -242,30 +253,30 @@ def test_cold_partition_tombstone_purged_at_age(spark, tmp_path):
 
 def test_merge_seq_crash_replay_does_not_advance(spark, tmp_path,
                                                  monkeypatch):
-    """The counter persists AFTER the data write: a merge that crashes
-    between the two re-reads the old counter on replay, so the replay
-    stamps/ages as the SAME merge — tombstone windows never advance
-    past data the table didn't durably see."""
+    """The merge sequence lives in the log entry: a merge that crashes
+    after writing its files but before publishing its entry leaves the
+    sequence where it was, so the replay stamps/ages as the SAME merge
+    — tombstone windows never advance past data the table didn't
+    durably see."""
     t = _retaining(tmp_path / "t", 2)
     t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false")]))
-    assert t._read_merge_seq(spark) == 0
-    # crash injection: data lands, counter write dies
-    real = UpsertTable._write_merge_seq
+    assert tablelog.snapshot(spark, t.path).merge_seq == 0
 
-    def boom(self, spark_, seq):
-        raise OSError("injected crash before counter persist")
+    # crash injection: the files land, the log publish dies
+    def boom(*_):
+        raise OSError("injected crash before the log entry is published")
 
-    monkeypatch.setattr(UpsertTable, "_write_merge_seq", boom)
-    import pytest as _pytest
-    with _pytest.raises(OSError):
-        t.merge_batch(_batch(spark, [(1, "a", "v1", 20, 1, "true")]))
-    monkeypatch.setattr(UpsertTable, "_write_merge_seq", real)
-    assert t._read_merge_seq(spark) == 0          # counter unmoved
-    # replay of the same batch: stamps as merge 1 (old counter + 1),
+    with monkeypatch.context() as m:
+        m.setattr(tablelog, "_publish", boom)
+        with pytest.raises(OSError):
+            t.merge_batch(_batch(spark, [(1, "a", "v1", 20, 1, "true")]))
+    assert tablelog.snapshot(spark, t.path).merge_seq == 0  # unmoved
+    assert {(r.id, r.val) for r in t.read(spark).collect()} == {(1, "v1")}
+    # replay of the same batch: stamps as merge 1 (old sequence + 1),
     # identical to what the crashed attempt would have produced
     t.merge_batch(_batch(spark, [(1, "a", "v1", 20, 1, "true")]))
-    assert t._read_merge_seq(spark) == 1
-    stored = spark.read.parquet(str(tmp_path / "t"))
-    tombs = {(r.id, r[UpsertTable.TOMB_COL]) for r in stored.collect()
+    assert tablelog.snapshot(spark, t.path).merge_seq == 1
+    tombs = {(r.id, r[UpsertTable.TOMB_COL]) for r in
+             _stored(spark, t).collect()
              if r[UpsertTable.TOMB_COL] is not None}
     assert tombs == {(1, 1)}

@@ -46,8 +46,8 @@ Axes (matching the r7 report rows):
            in-contract replay of its batches + final compaction.
            Asserts convergence to the pure-Python latest-wins
            reference and ENUMERATES every transient read failure the
-           reader recovered from (compaction deletes log dirs /
-           swaps base files under a running read — retried reads must
+           reader recovered from (a commit deletes the files it
+           dropped under a running read — retried reads must
            succeed; divergence or a dead table is a failure).
            Contract notes: appends carry globally-distinct batch ids
            (two writers re-using an id is out of contract), and only
@@ -134,6 +134,7 @@ def _check(spark, names, sf_dir) -> list[str]:
 def axis_cdc(seeds: list[int], spark=None) -> int:
     from test_mor import _batch, _random_feed, _reference_state
 
+    from kafka_connect_msk_demo_spark import tablelog
     from kafka_connect_msk_demo_spark.streaming.upsert import (
         MergeOnReadTable, UpsertTable)
     if spark is None:
@@ -181,13 +182,16 @@ def axis_cdc(seeds: list[int], spark=None) -> int:
             if retain is not None:
                 # retention invariants: the stamp column never
                 # surfaces, and every STORED tombstone is within its
-                # window of the persisted merge counter (no unbounded
-                # tombstone accumulation, no early purge).
+                # window of the logged merge sequence (no unbounded
+                # tombstone accumulation, no early purge). Both come
+                # from the newest table log entry.
                 for name, tbl in (("CoW", cow), ("MoR_base", mor.base)):
                     if UpsertTable.TOMB_COL in tbl.read(spark).columns:
                         bad.append(f"{name}_stamp_surfaced")
-                    seq = tbl._read_merge_seq(spark)
-                    stored = tbl._read_stored(spark)
+                    snap = tablelog.snapshot(spark, tbl.path)
+                    seq = snap.merge_seq
+                    stored = tablelog.read(spark, tbl.path, snap,
+                                           snap.of("base"))
                     if UpsertTable.TOMB_COL in stored.columns:
                         stale = (stored
                                  .filter(stored[UpsertTable.TOMB_COL]
@@ -723,16 +727,17 @@ def axis_contention(seeds: list[int]) -> int:
     on one table + concurrent ``_rt`` reads + SIGKILL injection.
 
     In-contract concurrency being exercised: appends with distinct
-    batch ids are plain parquet writes to distinct log dirs (safe by
-    design); compact() snapshots its consumed-batch list BEFORE the
-    fold so a concurrent append lands in a later compaction; `_rt`
-    readers may transiently fail while compaction deletes consumed log
-    dirs or swaps base files — the axis counts those as
+    batch ids and an inline compaction are table-log commits that may
+    race; a commit that loses the publish moves onto the newer version
+    (an append only adds delta files, so it passes other appends and a
+    compaction) or, on a real conflict, retries from a fresh snapshot. `_rt` readers may
+    transiently fail while a commit deletes the files it dropped — the
+    axis counts those as
     recovered-from races (each must succeed on retry). A SIGKILLed
     writer is recovered the way Structured Streaming would: replay
     only from its first UNACKNOWLEDGED batch (the checkpoint-recovery
-    model — append is idempotent via per-batch-dir overwrite +
-    latest-wins), then compact.
+    model — append is idempotent: a batch id's commit replaces that
+    id's earlier deltas, and latest-wins), then compact.
 
     The table runs with ``retain_tombstones`` sized past the
     campaign's merge count: with two INDEPENDENT writers there is no
@@ -829,8 +834,8 @@ def axis_contention(seeds: list[int]) -> int:
                     bad.append(f"writer{w}_exit_{c}")
             # checkpoint-style recovery: replay from the killed
             # writer's first UNACKNOWLEDGED batch (idempotent — a
-            # batch acked after the write but killed before the print
-            # simply re-appends the same dir)
+            # batch committed but killed before the print simply
+            # replaces its own deltas)
             if killed is not None:
                 with open(os.path.join(tmp, f"w{killed}.out")) as fh:
                     acked = {int(line.split()[1]) for line in fh
