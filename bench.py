@@ -40,13 +40,9 @@ Methodology:
   (recovered from the stored tail when the parsed record is null), so
   the rule self-updates as queries speed up or slow down.
 * the sweep runs in FIXED ALPHABETICAL order, decoupled from the
-  registry's driver-rotation order (VERDICT r6 "What's wrong" #5):
-  rotation reorders ``ALL_QUERIES`` every round, so sweeping in
-  registry order put each query at a different position each round and
-  early positions paid unamortized warm-up — r5→r6 showed code-
-  untouched queries "regressing" 2-4x purely from rotation
-  (benford_audit 0.47→2.76). A fixed order plus the untimed warm-ups
-  makes per-query numbers comparable across rounds.
+  registry order: early positions pay unamortized warm-up, so a fixed
+  order plus the untimed warm-ups makes per-query numbers comparable
+  across rounds.
 """
 
 from __future__ import annotations
@@ -207,8 +203,8 @@ def run() -> None:
         _force(registry["revenue_by_region_bucketed"](spark, SF_DIR))
     # (d) first touch of the pipeline tables: file listing + footer +
     # OS page-cache warm-up. Without this the cost lands on whichever
-    # pipeline query the registry happens to put first (measured ~4x on
-    # lang_stats when the round-4 reorder moved it to position 1).
+    # pipeline query the sweep happens to put first (measured ~4x on
+    # lang_stats when a reorder moved it to position 1).
     from kafka_connect_msk_demo_spark.catalog import load_table
     for t in ("documents", "embeddings"):
         _force(load_table(spark, SF_DIR, t))
@@ -219,9 +215,7 @@ def run() -> None:
             if n}
     timings: dict[str, float] = {}
     position = 0
-    # fixed alphabetical sweep order — never the rotation order (see
-    # module docstring); the registry dict itself stays rotation-ordered
-    # for the correctness driver
+    # fixed alphabetical sweep order (see module docstring)
     for name, fn in sorted(registry.items()):
         if name in SKIP or (only and name not in only):
             continue

@@ -332,7 +332,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
     Arrow kernel feeds) runs as ONE task no matter how many cores the
     session has. When — and only when — the layout cannot feed the
     session's parallelism, the frame is hash-repartitioned on the
-    table's unique key to ``defaultParallelism`` partitions. On a
+    table's unique key (``_SPREAD_KEYS``; spreading a table without
+    one raises ``KeyError``) to ``defaultParallelism`` partitions. On a
     production layout (row groups >> cores) the condition is false and
     this is a literal no-op, so no extra corpus-scale exchange ever
     ships at 100 TB; the key-hash repartition avoids round-robin's
@@ -346,27 +347,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
         df = spark.read.schema(raw_schema(name)).parquet(path)
         df = finalize_timestamps(df, name, dict(_storage_units(path, name)))
     if spread:
+        keys = _SPREAD_KEYS[name]
         par = spark.sparkContext.defaultParallelism
         if _scan_splits(path, par) < par:
-            keys = _SPREAD_KEYS.get(name)
-            if keys:
-                df = df.repartition(par, *[F.col(k) for k in keys])
-            else:
-                df = df.repartition(par)
+            df = df.repartition(par, *[F.col(k) for k in keys])
     return df
 
 
-#: unique row keys per table — high-cardinality hash-repartition keys
-#: for the ``spread`` path (unique => even spread, guide §2.5)
+#: unique row keys of the tables callers spread — high-cardinality
+#: hash-repartition keys (unique => even spread, guide §2.5). Spreading
+#: any other table raises ``KeyError``.
 _SPREAD_KEYS: dict[str, tuple[str, ...]] = {
     "lineitem": ("l_orderkey", "l_linenumber"),
     "orders": ("o_orderkey",),
     "events": ("event_id",),
     "documents": ("doc_id",),
-    "embeddings": ("vec_id",),
     "customer": ("c_custkey",),
     "part": ("p_partkey",),
-    "supplier": ("s_suppkey",),
 }
 
 

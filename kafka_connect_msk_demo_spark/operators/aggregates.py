@@ -614,3 +614,122 @@ def hdr_quantiles(df: DataFrame, group_col: str, value_col: str,
     g = d.groupBy("g").agg(*aggs)
     return (g.select(F.col("g").alias(group_col), "n", *outs)
             .orderBy(group_col))
+
+
+# ---------------------------------------------------------------------------
+# HyperLogLog — deterministic register sketch
+# ---------------------------------------------------------------------------
+# Per-group distinct-count estimate from a deterministic 48-bit md5
+# hash (first 12 hex chars: Spark ``conv(substr(md5..),16,10)`` and
+# DuckDB ``CAST('0x'||substr(md5..) AS BIGINT)`` agree bit-for-bit),
+# unlike ``approx_count_distinct``, whose engine-private hash can never
+# be replayed by the oracle. m = 256 registers: register = top
+# ``HLL_B`` hash bits, rho = leading-zero count of the remainder + 1.
+# Everything is engine-replayable integer/dyadic arithmetic:
+#
+# * rho via the BINARY-STRING length of the remainder — no float log2,
+#   whose libm rounding differs across engines near powers of two;
+# * the harmonic-mean denominator sums ``2^-max_rho`` terms, each an
+#   exact dyadic rational in [2^-41, 1]; every partial sum fits a
+#   49-bit significand, so double addition is EXACT in any order;
+# * the raw estimate ``alpha * m^2 / denom`` is one multiply and one
+#   correctly-rounded division off a shared literal. The small-range
+#   linear-counting correction is deliberately omitted (it needs
+#   ``ln``, another libm dependency); ``n_true`` rides along for error
+#   accounting.
+#
+# MAX(rho) per (group, register) is the sketch state: commutative and
+# idempotent, so the shuffle carries at most m x groups rows per
+# partition, and micro-batch order in a streaming aggregation cannot
+# change it.
+
+#: register-index bits (m = 2^B registers) and remainder width.
+HLL_B = 8
+HLL_M = 1 << HLL_B
+HLL_REM_BITS = 48 - HLL_B
+#: Flajolet et al. 2007 bias constant for m >= 128.
+HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
+
+
+def hll_register_rows(df: DataFrame, key_col: str, group_col: str,
+                      salt: str = "hll") -> DataFrame:
+    """(group, reg, rho) per input row — the pre-aggregate HLL wire
+    format. MAX(rho) per (group, reg) is the sketch state; it is
+    commutative/idempotent, so the same rows feed the batch hash-agg
+    and a streaming complete-mode aggregation identically."""
+    h = F.conv(F.substring(
+        F.md5(F.concat_ws(":", F.lit(salt),
+                          F.col(key_col).cast("string"))), 1, 12),
+        16, 10).cast("long")
+    src = (df.filter(F.col(key_col).isNotNull())
+           .select(F.col(group_col), h.alias("h")))
+    rem_mod = 1 << HLL_REM_BITS
+    return (src.withColumn("reg", F.expr(f"h div {rem_mod}"))
+            .withColumn("rem", F.col("h") % F.lit(rem_mod))
+            .withColumn("rho", F.when(F.col("rem") == 0,
+                                      F.lit(HLL_REM_BITS + 1))
+                        .otherwise(F.lit(HLL_REM_BITS + 1)
+                                   - F.length(F.bin(F.col("rem")))))
+            .select(group_col, "reg", "rho"))
+
+
+def hll_estimate(regs: DataFrame, true: DataFrame,
+                 group_col: str) -> DataFrame:
+    """Finalize (group, reg, max_rho) register maxima into the raw HLL
+    estimate, joined with the exact count for error accounting."""
+    per_group = (regs.groupBy(group_col)
+                 .agg(F.count(F.lit(1)).alias("n_hit"),
+                      F.sum(F.expr(
+                          "cast(1 as double) / cast(shiftleft(1L, max_rho) as double)"
+                      )).alias("sum_pow")))
+    denom = (F.col("sum_pow")
+             + (F.lit(HLL_M) - F.col("n_hit")).cast("double"))
+    return (per_group.join(true, group_col)
+            .withColumn("est_raw",
+                        F.lit(HLL_ALPHA * HLL_M * HLL_M) / denom)
+            .withColumn("rel_err",
+                        (F.col("est_raw")
+                         - F.col("n_true").cast("double"))
+                        / F.col("n_true").cast("double"))
+            .select(group_col, "n_true", "n_hit", "est_raw", "rel_err")
+            .orderBy(group_col))
+
+
+def _sql_hll_distinct() -> str:
+    """DuckDB replay of the HLL estimate of distinct users per event
+    type (salt ``hll``), register for register."""
+    alpha_m2 = repr(HLL_ALPHA * HLL_M * HLL_M)
+    rem_mod = 1 << HLL_REM_BITS
+    return f"""
+WITH src AS (
+  SELECT event_type,
+         CAST('0x' || substr(md5('hll:' || CAST(user_id AS VARCHAR)),
+                             1, 12) AS BIGINT) AS h
+  FROM events WHERE user_id IS NOT NULL
+), d AS (
+  SELECT event_type, h // {rem_mod} AS reg, h % {rem_mod} AS rem
+  FROM src
+), r AS (
+  SELECT event_type, reg,
+         CASE WHEN rem = 0 THEN {HLL_REM_BITS + 1}
+              ELSE {HLL_REM_BITS + 1} - length(bin(rem)) END AS rho
+  FROM d
+), regs AS (
+  SELECT event_type, reg, MAX(rho) AS max_rho FROM r GROUP BY 1, 2
+), pg AS (
+  SELECT event_type, COUNT(*) AS n_hit,
+         SUM(CAST(1 AS DOUBLE) / (1::BIGINT << max_rho)) AS sum_pow
+  FROM regs GROUP BY 1
+), t AS (
+  SELECT event_type, COUNT(DISTINCT user_id) AS n_true
+  FROM events WHERE user_id IS NOT NULL GROUP BY 1
+), e AS (
+  SELECT pg.event_type AS event_type, n_true, n_hit,
+         {alpha_m2} / (sum_pow + ({HLL_M} - n_hit)) AS est_raw
+  FROM pg JOIN t USING (event_type)
+)
+SELECT event_type, n_true, n_hit, est_raw,
+       (est_raw - CAST(n_true AS DOUBLE)) / CAST(n_true AS DOUBLE)
+         AS rel_err
+FROM e ORDER BY event_type
+"""

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.aggregates import _sql_hll_distinct
 from . import clean, dedup, multimodal, similarity, text_analysis
 from .text_analysis import LANG_MARKERS, STOPWORDS
 from .textprep import duckdb_shingle_cte, tokens
@@ -2786,45 +2787,6 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sketches import hll_distinct
     events = load_table(spark, sf_dir, "events")
     return hll_distinct(events, "user_id", "event_type")
-
-
-def _sql_hll_distinct() -> str:
-    from .sketches import HLL_ALPHA, HLL_B, HLL_M, HLL_REM_BITS
-    alpha_m2 = repr(HLL_ALPHA * HLL_M * HLL_M)
-    rem_mod = 1 << HLL_REM_BITS
-    return f"""
-WITH src AS (
-  SELECT event_type,
-         CAST('0x' || substr(md5('hll:' || CAST(user_id AS VARCHAR)),
-                             1, 12) AS BIGINT) AS h
-  FROM events WHERE user_id IS NOT NULL
-), d AS (
-  SELECT event_type, h // {rem_mod} AS reg, h % {rem_mod} AS rem
-  FROM src
-), r AS (
-  SELECT event_type, reg,
-         CASE WHEN rem = 0 THEN {HLL_REM_BITS + 1}
-              ELSE {HLL_REM_BITS + 1} - length(bin(rem)) END AS rho
-  FROM d
-), regs AS (
-  SELECT event_type, reg, MAX(rho) AS max_rho FROM r GROUP BY 1, 2
-), pg AS (
-  SELECT event_type, COUNT(*) AS n_hit,
-         SUM(CAST(1 AS DOUBLE) / (1::BIGINT << max_rho)) AS sum_pow
-  FROM regs GROUP BY 1
-), t AS (
-  SELECT event_type, COUNT(DISTINCT user_id) AS n_true
-  FROM events WHERE user_id IS NOT NULL GROUP BY 1
-), e AS (
-  SELECT pg.event_type AS event_type, n_true, n_hit,
-         {alpha_m2} / (sum_pow + ({HLL_M} - n_hit)) AS est_raw
-  FROM pg JOIN t USING (event_type)
-)
-SELECT event_type, n_true, n_hit, est_raw,
-       (est_raw - CAST(n_true AS DOUBLE)) / CAST(n_true AS DOUBLE)
-         AS rel_err
-FROM e ORDER BY event_type
-"""
 
 
 _SQL_HLL_DISTINCT = _sql_hll_distinct()

@@ -38,6 +38,8 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.aggregates import hll_estimate, hll_register_rows
+
 #: 48-bit hash space: 12 hex chars of md5.
 HASH_SPACE = float(2 ** 48)
 
@@ -183,14 +185,6 @@ def kmv_distinct(df: DataFrame, key_col: str, group_col: str,
 # HyperLogLog — deterministic register sketch
 # ---------------------------------------------------------------------------
 
-#: register-index bits (m = 2^B registers) and remainder width.
-HLL_B = 8
-HLL_M = 1 << HLL_B
-HLL_REM_BITS = 48 - HLL_B
-#: Flajolet et al. 2007 bias constant for m >= 128.
-HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
-
-
 def hll_distinct(df: DataFrame, key_col: str, group_col: str,
                  salt: str = "hll") -> DataFrame:
     """Per-group HyperLogLog distinct-count estimate from the same
@@ -229,50 +223,6 @@ def hll_distinct(df: DataFrame, key_col: str, group_col: str,
             .groupBy(group_col)
             .agg(F.count_distinct(F.col(key_col)).alias("n_true")))
     return hll_estimate(regs, true, group_col)
-
-
-def hll_register_rows(df: DataFrame, key_col: str, group_col: str,
-                      salt: str = "hll") -> DataFrame:
-    """(group, reg, rho) per input row — the pre-aggregate HLL wire
-    format. MAX(rho) per (group, reg) is the sketch state; it is
-    commutative/idempotent, so the same rows feed the batch hash-agg
-    and a streaming complete-mode aggregation identically."""
-    h = F.conv(F.substring(
-        F.md5(F.concat_ws(":", F.lit(salt),
-                          F.col(key_col).cast("string"))), 1, 12),
-        16, 10).cast("long")
-    src = (df.filter(F.col(key_col).isNotNull())
-           .select(F.col(group_col), h.alias("h")))
-    rem_mod = 1 << HLL_REM_BITS
-    return (src.withColumn("reg", F.expr(f"h div {rem_mod}"))
-            .withColumn("rem", F.col("h") % F.lit(rem_mod))
-            .withColumn("rho", F.when(F.col("rem") == 0,
-                                      F.lit(HLL_REM_BITS + 1))
-                        .otherwise(F.lit(HLL_REM_BITS + 1)
-                                   - F.length(F.bin(F.col("rem")))))
-            .select(group_col, "reg", "rho"))
-
-
-def hll_estimate(regs: DataFrame, true: DataFrame,
-                 group_col: str) -> DataFrame:
-    """Finalize (group, reg, max_rho) register maxima into the raw HLL
-    estimate, joined with the exact count for error accounting."""
-    per_group = (regs.groupBy(group_col)
-                 .agg(F.count(F.lit(1)).alias("n_hit"),
-                      F.sum(F.expr(
-                          "cast(1 as double) / cast(shiftleft(1L, max_rho) as double)"
-                      )).alias("sum_pow")))
-    denom = (F.col("sum_pow")
-             + (F.lit(HLL_M) - F.col("n_hit")).cast("double"))
-    return (per_group.join(true, group_col)
-            .withColumn("est_raw",
-                        F.lit(HLL_ALPHA * HLL_M * HLL_M) / denom)
-            .withColumn("rel_err",
-                        (F.col("est_raw")
-                         - F.col("n_true").cast("double"))
-                        / F.col("n_true").cast("double"))
-            .select(group_col, "n_true", "n_hit", "est_raw", "rel_err")
-            .orderBy(group_col))
 
 
 # ---------------------------------------------------------------------------

@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, stream_table
-from ..operators.aggregates import dec
+from ..operators.aggregates import (_sql_hll_distinct, dec, hll_estimate,
+                                   hll_register_rows)
 from .runner import run_to_memory
 
 
@@ -445,10 +446,8 @@ def stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     register)) run as a complete-mode streaming aggregation — HLL
     state is commutative and idempotent, so micro-batch order cannot
     change it — and the harmonic estimate + exact-count join finalize
-    batch-side on the drained sketch. Same oracle as the batch
-    `hll_distinct`: streaming the sketch must not move the estimate."""
-    from ..pipeline.sketches import hll_estimate, hll_register_rows
-
+    batch-side on the drained sketch (operators/aggregates.py). The
+    oracle replays the same registers in DuckDB."""
     events = stream_table(spark, sf_dir, "events",
                           max_files_per_trigger=1)
     regs = (hll_register_rows(events, "user_id", "event_type")
@@ -462,12 +461,7 @@ def stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hll_estimate(drained, true, "event_type")
 
 
-def _sql_stream_hll() -> str:
-    from ..pipeline.queries import _SQL_HLL_DISTINCT
-    return _SQL_HLL_DISTINCT
-
-
-_SQL_STREAM_HLL = _sql_stream_hll()
+_SQL_STREAM_HLL = _sql_hll_distinct()
 
 
 def stream_topk_users(spark: SparkSession, sf_dir: str,
@@ -475,9 +469,9 @@ def stream_topk_users(spark: SparkSession, sf_dir: str,
     """Streaming top-k: per-(type, user) exact counts run as the
     complete-mode streaming aggregation (commutative state — the only
     sketch a top-k needs when the key domain fits state, which it does
-    here and at 100 TB would swap to the count-min + heap pattern in
-    pipeline/freq.py); the rank-and-keep-k finalizes batch-side on the
-    drained counts with a deterministic (count desc, user) order."""
+    here and at 100 TB would swap to a count-min + heap pattern); the
+    rank-and-keep-k finalizes batch-side on the drained counts with a
+    deterministic (count desc, user) order."""
     from pyspark.sql import Window
 
     events = stream_table(spark, sf_dir, "events",

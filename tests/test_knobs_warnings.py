@@ -91,6 +91,15 @@ def test_spread_on_remote_path_warns_once(caplog):
     assert len(hits) == 1 and "no-op" in hits[0].getMessage()
 
 
+def test_spread_of_unkeyed_table_raises(spark, sf_small):
+    """Only tables with a unique spread key can be spread; any other
+    table fails loudly instead of taking a round-robin repartition."""
+    from kafka_connect_msk_demo_spark.catalog import load_table
+
+    with pytest.raises(KeyError, match="supplier"):
+        load_table(spark, sf_small, "supplier", spread=True)
+
+
 def test_avro_fallback_to_python_codec_warns_once(spark, monkeypatch,
                                                   caplog):
     from kafka_connect_msk_demo_spark import serde

@@ -5,9 +5,7 @@ The driver's value hash is dtype-sensitive: equal values that cross the
 pandas boundary with different dtypes (object(Decimal) vs float64,
 int32 vs int64, ...) can hash-mismatch even when `oracle.compare`'s
 value comparison passes. This script runs every (query, oracle) pair at
-sf0.001 and reports per-column dtype pairs that differ, cross-referenced
-with the driver-green history so tolerated pairs can be told apart from
-hash-breaking ones.
+sf0.001 and reports per-column dtype pairs that differ.
 
 Usage: python tools/audit_dtypes.py [start [end]]  -> tools/dtype_audit.json
 """
@@ -19,8 +17,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_connect_msk_demo_spark.oracle import run_oracle
-from kafka_connect_msk_demo_spark.queries import (ALL_QUERIES,
-                                                  _driver_green_rounds)
+from kafka_connect_msk_demo_spark.queries import ALL_QUERIES
 from kafka_connect_msk_demo_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
@@ -40,7 +37,6 @@ def main() -> int:
     start = int(sys.argv[1]) if len(sys.argv) > 1 else 0
     end = int(sys.argv[2]) if len(sys.argv) > 2 else len(ALL_QUERIES)
     names = list(ALL_QUERIES)[start:end]
-    green = _driver_green_rounds()
     spark = get_spark("dtype-audit", master="local[16]",
                       shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
@@ -61,10 +57,8 @@ def main() -> int:
                 if lc != rc:
                     drift[c] = [lc, rc]
             if drift:
-                report[name] = {"drift": drift,
-                                "green_round": green.get(name)}
-                print(f"[{start+i:3d}] {name}: DRIFT {drift} "
-                      f"(green r{green.get(name)})", flush=True)
+                report[name] = {"drift": drift}
+                print(f"[{start+i:3d}] {name}: DRIFT {drift}", flush=True)
             else:
                 print(f"[{start+i:3d}] {name}: ok", flush=True)
         except Exception as exc:  # noqa: BLE001 - report and continue

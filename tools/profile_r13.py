@@ -8,7 +8,7 @@ claims in OPTIMIZATION_r13.md are verifiable without running Spark.
 
 Usage:
     python tools/profile_r13.py [--tag before] [--reps 3] q1 q2 ...
-    python tools/profile_r13.py --tag before --top 30   # slowest from bench_r13_idle.json
+    python tools/profile_r13.py --tag before --top 30   # slowest from tools/bench_last.json
 """
 
 from __future__ import annotations
@@ -45,7 +45,7 @@ def main() -> int:
 
     names = list(args.queries)
     if args.top:
-        with open(os.path.join(HERE, "bench_r13_idle.json")) as fh:
+        with open(os.path.join(HERE, "bench_last.json")) as fh:
             rec = json.load(fh)
         ranked = sorted(rec["queries"].items(), key=lambda kv: -kv[1])
         names += [n for n, _ in ranked[:args.top] if n not in names]
@@ -60,8 +60,7 @@ def main() -> int:
     spark.range(64).mapInPandas(lambda it: it, "id long").write \
         .format("noop").mode("overwrite").save()
     from kafka_connect_msk_demo_spark.catalog import load_table
-    for t in ("documents", "embeddings"):
-        _force(load_table(spark, SF_DIR, t))
+    _force(load_table(spark, SF_DIR, "documents"))
 
     results: dict[str, list[float]] = {}
     for name in names:
