@@ -42,6 +42,20 @@ def dec(col: str | Column, precision: int = 18, scale: int = 2) -> Column:
     return c.cast(f"decimal({precision},{scale})")
 
 
+def order_result(df: DataFrame, *cols: Column) -> DataFrame:
+    """Sort an aggregate's result for its one consumer, with no sampler.
+
+    ``orderBy`` plans a range exchange whose ``RangePartitioner`` runs
+    its own sampling job over the child. Over a streaming aggregate that
+    job is a second run of the stateful stage, so every micro-batch
+    restores, updates and commits each state-store partition twice. A
+    complete-mode result is one row per group, and the sink takes all of
+    it, so one partition sorted in place gives the same order with one
+    stateful pass. A batch aggregate takes the same path.
+    """
+    return df.repartition(1).sortWithinPartitions(*cols)
+
+
 def sum_count(df: DataFrame, group_cols: list[str], amount_col: str,
               sales_alias: str = "sales",
               count_alias: str = "orders") -> DataFrame:
@@ -82,10 +96,15 @@ def windowed_sum_count(df: DataFrame, group_cols: list[str], ts_col: str,
     window bounds as epoch seconds (``window_start``/``window_end``),
     matching the reference's summary topic encoding
     (``10_create_schemas.py:72-73``, ``12:107-108``).
+
+    The result is sorted on a single partition (:func:`order_result`):
+    a global ``orderBy`` would run the stateful aggregation twice per
+    micro-batch, once for the range partitioner's sample and once for
+    the emission.
     """
     window = (F.window(ts_col, window_duration, slide_duration)
               if slide_duration else F.window(ts_col, window_duration))
-    return (
+    return order_result(
         df.groupBy(*group_cols, window)
         .agg(
             F.sum(dec(amount_col)).cast("double").alias(sales_alias),
@@ -97,8 +116,8 @@ def windowed_sum_count(df: DataFrame, group_cols: list[str], ts_col: str,
             F.unix_timestamp("window.end").alias("window_end"),
             sales_alias,
             count_alias,
-        )
-        .orderBy(F.col("window_start").desc(), F.col(sales_alias).desc())
+        ),
+        F.col("window_start").desc(), F.col(sales_alias).desc(),
     )
 
 

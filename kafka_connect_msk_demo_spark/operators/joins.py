@@ -42,7 +42,11 @@ def enrich(fact: DataFrame, dim: DataFrame, on: list[str],
     TRUE fixed-size dims (the reference's 245-row regions CSV): forcing
     a broadcast of a table that scales with the data (customer) turns
     into an executor OOM at 100 TB instead of a plan choice. Default is
-    to let AQE pick — it broadcasts small sides at runtime anyway.
+    to let the planner pick. In a batch query AQE broadcasts a small
+    side at runtime. AQE is off for streaming, so a stream-static join
+    broadcasts only by the planner's static choice from the dimension's
+    estimated size (a cached dimension reports its real size), and the
+    broadcast re-runs as one job per micro-batch.
     """
     out = fact.join(F.broadcast(dim) if broadcast_dim else dim,
                     on, "left_outer")

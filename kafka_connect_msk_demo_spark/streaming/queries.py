@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, stream_table
 from ..operators.aggregates import (_sql_hll_distinct, dec, hll_estimate,
-                                   hll_register_rows)
+                                   hll_register_rows, order_result)
 from .runner import run_to_memory
 
 
@@ -35,9 +35,9 @@ def stream_sales_by_type(spark: SparkSession, sf_dir: str,
                           max_files_per_trigger=batches or 1)
     agg = (events.groupBy("event_type")
            .agg(F.sum(dec("value", 25, 8)).cast("double").alias("sales"),
-                F.count("value").alias("orders"))
-           .orderBy(F.col("sales").desc()))
-    return run_to_memory(agg, "complete")
+                F.count("value").alias("orders")))
+    return run_to_memory(order_result(agg, F.col("sales").desc()),
+                         "complete")
 
 
 _SQL_STREAM_SALES_BY_TYPE = """
@@ -95,8 +95,11 @@ def stream_enriched_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
            .cache())
     # No forced broadcast: customer scales with the data (unlike the
     # reference's fixed 245-row regions CSV), so a hard F.broadcast
-    # becomes an executor OOM at 100 TB. AQE broadcasts it at runtime
-    # while it is small and falls back to shuffle join when it is not.
+    # becomes an executor OOM at 100 TB. AQE is off for streaming: the
+    # planner broadcasts the cached dimension statically while its
+    # size is under the broadcast threshold, and the broadcast re-runs
+    # as one job per micro-batch; a larger dimension plans a shuffle
+    # join instead.
     enriched = (events.join(dim, ["user_id"], "left_outer")
                 .na.fill({"segment": "Unassigned"}))
     agg = (

@@ -62,6 +62,35 @@ def test_complete_mode_agg_spans_batches(spark, sf_small):
         sorted(map(tuple, truth.collect()))
 
 
+def test_sorted_window_agg_runs_one_stateful_pass(spark, sf_small):
+    """The sorted complete-mode window aggregate updates its state once
+    per micro-batch. A global sort's range-partition sampler runs the
+    stateful stage a second time, which commits every state partition
+    twice and doubles ``numRowsTotal`` against the groups emitted. The
+    final emission keeps the sort and equals the batch answer."""
+    from kafka_connect_msk_demo_spark.operators.aggregates import (
+        windowed_sum_count)
+
+    events = stream_table(spark, sf_small, "events",
+                          max_files_per_trigger=1)
+    progress: list = []
+    result = run_to_memory(
+        windowed_sum_count(events, ["event_type"], "ts", "value"),
+        "complete", collect_progress=progress)
+    data_batches = [p for p in progress if _input_rows(p) > 0]
+    assert len(data_batches) == STREAM_CHUNKS
+    for p in data_batches:
+        assert (p["stateOperators"][0]["numRowsTotal"]
+                == p["sink"]["numOutputRows"]), p["batchId"]
+
+    rows = result.collect()
+    order = [(r["window_start"], r["sales"]) for r in rows]
+    assert order == sorted(order, reverse=True)
+    truth = windowed_sum_count(load_table(spark, sf_small, "events"),
+                               ["event_type"], "ts", "value")
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, truth.collect()))
+
+
 def test_session_windows_merge_across_batches(spark, sf_small):
     """Session windows must MERGE state across micro-batches: a session
     whose events straddle a chunk boundary emits ONCE with the combined

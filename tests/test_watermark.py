@@ -146,6 +146,70 @@ def test_dedup_within_watermark_bounded_state(spark, tmp_path):
     assert got == [("A", 1.0), ("A", 3.0), ("B", 5.0), ("C", 7.0)], got
 
 
+def _orderby_window_sales(stream):
+    """The sorted window aggregate as ``windowed_sum_count`` planned it
+    with a global ``orderBy`` (range-partitioned sort)."""
+    from kafka_connect_msk_demo_spark.operators.aggregates import dec
+    return (stream.groupBy("k", F.window("ts", "10 minutes", "5 minutes"))
+            .agg(F.sum(dec("v")).cast("double").alias("sales"),
+                 F.count("v").alias("orders"))
+            .select("k",
+                    F.unix_timestamp("window.start").alias("window_start"),
+                    F.unix_timestamp("window.end").alias("window_end"),
+                    "sales", "orders")
+            .orderBy(F.col("window_start").desc(), F.col("sales").desc()))
+
+
+def _drain_window_sales(spark, src, ckpt, shape):
+    """One availableNow run of a complete-mode window aggregate; returns
+    the final emission and the query's last progress."""
+    stream = (spark.readStream.schema(KV_SCHEMA).parquet(src)
+              .withWatermark("ts", "10 minutes"))
+    last: list = []
+
+    def sink(df, _batch_id):
+        last[:] = df.collect()
+
+    q = (shape(stream).writeStream.foreachBatch(sink)
+         .option("checkpointLocation", ckpt).outputMode("complete")
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    return last, q.lastProgress
+
+
+def test_window_sales_resumes_checkpoint_of_orderby_plan(spark, tmp_path):
+    """A checkpoint written by the range-sorted plan keeps working when
+    the query restarts with ``windowed_sum_count``'s single-partition
+    sort: the restored state carries run 1's groups into run 2, whose
+    final emission equals the batch answer over both runs' input."""
+    from kafka_connect_msk_demo_spark.operators.aggregates import (
+        windowed_sum_count)
+
+    def sales(df):
+        return windowed_sum_count(df, ["k"], "ts", "v")
+
+    src = str(tmp_path / "stream")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(src)
+    now = int(time.time())
+
+    _write_kv(src, "b1.parquet",
+              [("2024-01-01 00:01:00", "A", 1.25),
+               ("2024-01-01 00:07:00", "B", 2.5),
+               ("2024-01-01 00:12:00", "A", 4.0)], now - 60)
+    first, p1 = _drain_window_sales(spark, src, ckpt, _orderby_window_sales)
+    assert first and p1["batchId"] == 0
+
+    _write_kv(src, "b2.parquet",
+              [("2024-01-01 00:03:00", "A", 8.0),
+               ("2024-01-01 00:21:00", "B", 16.5)], now - 30)
+    got, p2 = _drain_window_sales(spark, src, ckpt, sales)
+    assert p2["batchId"] == 1 and p2["numInputRows"] == 2
+
+    truth = sales(spark.read.schema(KV_SCHEMA).parquet(src)).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in truth]
+
+
 SESSION_SCHEMA = T.StructType([
     T.StructField("ts", T.TimestampType(), True),
     T.StructField("u", T.StringType(), True),
