@@ -1,12 +1,10 @@
-"""SchemaCatalog — the engine's local, network-free schema registry.
+"""Schemas and table loaders — the engine's explicit-schema catalog.
 
-The reference fetches Avro schemas from an Apicurio registry over REST at
-job start (``pyspark_scripts/10_create_schemas.py:77-118``,
-``11_incremental_sales_avro.py:112-119``, ``12:150-157``) and converts
-Avro JSON → StructType by reading an empty Avro source
-(``11:98-109``). Our engine replaces that with an in-process catalog:
-named StructTypes plus the equivalent Avro-JSON strings, no network and
-no dummy reads (``T.StructType`` is authored directly).
+The reference converts Avro JSON → StructType by reading an empty Avro
+source (``11_incremental_sales_avro.py:98-109``). Here the StructTypes
+are authored directly and :func:`struct_to_avro_json` derives the Avro
+JSON, no dummy reads; the registry's artifact lifecycle lives in
+``sources/registry.py``.
 
 Also provides the table loader for the deterministic parquet test
 tables (``/root/testdata/sf*``), always with explicit schemas-on-read
@@ -16,11 +14,13 @@ and never infer, mirroring the reference's discipline (SURVEY.md §1.3).
 
 from __future__ import annotations
 
+import errno
 import json
 import logging
 import os
+import shutil
+import stat
 import tempfile
-import time
 from functools import lru_cache
 from urllib.parse import urlparse
 
@@ -29,40 +29,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .session import env_int
+from .streaming.runner import file_stream, stamp_arrival_order
 
 _log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # Reference-domain schemas (SURVEY.md §1 / FIXTURES.md).
 # ---------------------------------------------------------------------------
-
-#: Core fact stream (reference: 01_seed_sales_kafka.py:36-44 decoded form
-#: 02_batch_read_kafka.py:66-74; Avro registry form 10_create_schemas.py:48-57)
-SALES = T.StructType([
-    T.StructField("payment_id", T.IntegerType(), False),
-    T.StructField("customer_id", T.IntegerType(), False),
-    T.StructField("amount", T.FloatType(), False),
-    T.StructField("payment_date", T.TimestampType(), False),
-    T.StructField("city", T.StringType(), True),
-    T.StructField("district", T.StringType(), True),
-    T.StructField("country", T.StringType(), False),
-])
-
-#: Static dimension (reference: 08_streaming_read_kafka_join_window.py:67-70)
-SALES_REGIONS = T.StructType([
-    T.StructField("country", T.StringType(), False),
-    T.StructField("region", T.StringType(), False),
-])
-
-#: Aggregated output topic (reference: 10_create_schemas.py:65-74,
-#: 07_batch_read_kafka.py:36-42)
-SALES_SUMMARY = T.StructType([
-    T.StructField("region", T.StringType(), False),
-    T.StructField("sales", T.FloatType(), False),
-    T.StructField("orders", T.IntegerType(), False),
-    T.StructField("window_start", T.LongType(), False),
-    T.StructField("window_end", T.LongType(), False),
-])
 
 #: Kafka transport envelope, as produced by the Kafka source (FIXTURES.md §4).
 #: A parquet table with these columns lets any pipeline run against a file
@@ -75,25 +48,6 @@ KAFKA_ENVELOPE = T.StructType([
     T.StructField("offset", T.LongType(), True),
     T.StructField("timestamp", T.TimestampType(), False),
     T.StructField("timestampType", T.IntegerType(), True),
-])
-
-#: Flattened (post-unwrap) Debezium CDC record for the artists table
-#: (reference: avro_samples envelope header + SMT config
-#: debezium_avro_source_connector_postgresql_06.json:19-24; FIXTURES.md §5).
-CDC_ARTISTS = T.StructType([
-    T.StructField("artist_id", T.IntegerType(), False),
-    T.StructField("name", T.StringType(), True),
-    T.StructField("nationality", T.StringType(), True),
-    T.StructField("gender", T.StringType(), True),
-    T.StructField("birth_year", T.IntegerType(), True),
-    T.StructField("death_year", T.IntegerType(), True),
-    T.StructField("__op", T.StringType(), False),
-    T.StructField("__db", T.StringType(), True),
-    T.StructField("__table", T.StringType(), True),
-    T.StructField("__schema", T.StringType(), True),
-    T.StructField("__lsn", T.LongType(), True),
-    T.StructField("__source_ts_ms", T.LongType(), False),
-    T.StructField("__deleted", T.StringType(), True),
 ])
 
 #: Debezium envelope (pre-unwrap): before/after/source/op/ts_ms
@@ -144,43 +98,6 @@ def struct_to_avro_json(name: str, schema: T.StructType) -> str:
     })
 
 
-class SchemaCatalog:
-    """Named schemas: artifact-id → (StructType, Avro JSON).
-
-    Mirrors the artifact ids the reference registers in Apicurio
-    (``10_create_schemas.py:21-74``) but resolves locally.
-    """
-
-    _BUILTINS: dict[str, T.StructType] = {
-        "pagila.sales": SALES,
-        "pagila.sales.regions": SALES_REGIONS,
-        "pagila.sales.summary": SALES_SUMMARY,
-        "kafka.envelope": KAFKA_ENVELOPE,
-        "cdc.artists": CDC_ARTISTS,
-        "cdc.artists.envelope": debezium_envelope(
-            T.StructType(CDC_ARTISTS.fields[:6])),
-    }
-
-    def __init__(self) -> None:
-        self._schemas = dict(self._BUILTINS)
-
-    def register(self, artifact_id: str, schema: T.StructType) -> None:
-        self._schemas[artifact_id] = schema
-
-    def struct(self, artifact_id: str) -> T.StructType:
-        return self._schemas[artifact_id]
-
-    def avro_json(self, artifact_id: str) -> str:
-        return struct_to_avro_json(artifact_id.replace(".", "_"),
-                                   self._schemas[artifact_id])
-
-    def ddl(self, artifact_id: str) -> str:
-        return self._schemas[artifact_id].simpleString()[7:-1]
-
-    def list(self) -> list[str]:
-        return sorted(self._schemas)
-
-
 # ---------------------------------------------------------------------------
 # Test-table loading (driver-generated parquet star schema, TESTDATA.md).
 #
@@ -201,15 +118,6 @@ _TS_COLUMNS: dict[str, dict[str, str]] = {
     "orders": {"o_orderdate": "ms"},
     "lineitem": {"l_shipdate": "ms"},
     "events": {"ts": "ns"},
-}
-
-#: deterministic id tiebreaks for the stream-staging sort (see
-#: _stream_dir): tied event times must land in the same total order a
-#: batch (ts, id)-ordered window uses
-_STREAM_TIEBREAK: dict[str, tuple[str, ...]] = {
-    "events": ("event_id",),
-    "orders": ("o_orderkey",),
-    "lineitem": ("l_orderkey", "l_linenumber"),
 }
 
 #: explicit read schemas (timestamps as LongType) for tables that have them
@@ -262,9 +170,9 @@ def _storage_units(path: str, name: str) -> tuple[tuple[str, str], ...]:
     read from the parquet footer: ``timestamp[unit]`` columns carry
     their unit; plain int64 columns fall back to the documented legacy
     unit in :data:`_TS_COLUMNS`. Memoized on (path, mtime, size) — the
-    same staleness stamp ``_stream_dir`` uses — so a testdata
-    regeneration with a different encoding invalidates the memo instead
-    of returning stale units to a long-lived process."""
+    source stamp that also names each ``_stream_dir`` stage — so a
+    testdata regeneration with a different encoding invalidates the
+    memo instead of returning stale units to a long-lived process."""
     st = os.stat(path)
     return _storage_units_cached(path, name, st.st_mtime_ns, st.st_size)
 
@@ -332,7 +240,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
     Arrow kernel feeds) runs as ONE task no matter how many cores the
     session has. When — and only when — the layout cannot feed the
     session's parallelism, the frame is hash-repartitioned on the
-    table's unique key (``_SPREAD_KEYS``; spreading a table without
+    table's unique key (``_ROW_KEYS``; spreading a table without
     one raises ``KeyError``) to ``defaultParallelism`` partitions. On a
     production layout (row groups >> cores) the condition is false and
     this is a literal no-op, so no extra corpus-scale exchange ever
@@ -347,17 +255,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
         df = spark.read.schema(raw_schema(name)).parquet(path)
         df = finalize_timestamps(df, name, dict(_storage_units(path, name)))
     if spread:
-        keys = _SPREAD_KEYS[name]
+        keys = _ROW_KEYS[name]
         par = spark.sparkContext.defaultParallelism
         if _scan_splits(path, par) < par:
             df = df.repartition(par, *[F.col(k) for k in keys])
     return df
 
 
-#: unique row keys of the tables callers spread — high-cardinality
-#: hash-repartition keys (unique => even spread, guide §2.5). Spreading
-#: any other table raises ``KeyError``.
-_SPREAD_KEYS: dict[str, tuple[str, ...]] = {
+#: unique row keys: the hash-repartition keys of ``spread=True``
+#: (unique => even spread, guide §2.5; spreading any other table raises
+#: ``KeyError``) and the id tiebreaks of the stream-staging sort, so
+#: tied event times land in the same total order a batch (ts, id)-
+#: ordered window uses
+_ROW_KEYS: dict[str, tuple[str, ...]] = {
     "lineitem": ("l_orderkey", "l_linenumber"),
     "orders": ("o_orderkey",),
     "events": ("event_id",),
@@ -438,160 +348,48 @@ def _stream_dir(sf_dir: str, name: str, chunks: int | None = None) -> str:
     time (the realistic arrival order: watermarks advance monotonically
     across batches, so append-mode results stay equal to the batch
     answer — late-data DROPPING is exercised separately by the
-    watermark tests with explicit out-of-order fixtures). A staleness
-    stamp (source mtime+size+chunk count) makes restaging idempotent
-    and safe across testdata regeneration."""
+    watermark tests with explicit out-of-order fixtures).
+
+    A stage is written once, like the input files a file source lists:
+    its name carries the source's mtime and size, the chunk count and
+    the layout version, so a regenerated source stages a new directory
+    and a reader of the old one keeps it whole. Racing stagers each
+    write a private copy and rename it into place; rename onto a
+    non-empty directory fails, so one copy wins and the rest are
+    dropped."""
     chunks = chunks or STREAM_CHUNKS
-    safe = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(tempfile.gettempdir(), "spark_graft_streams", safe,
-                     f"{name}-c{chunks}")
-    os.makedirs(d, exist_ok=True)
     target = f"{sf_dir}/{name}.parquet"
     st = os.stat(target)
-    # v3: composite (ts, id) staging order + strictly increasing chunk
-    # mtimes — bump on layout changes so previously staged dirs restage
-    # instead of serving the old order
-    stamp = f"{st.st_mtime_ns}:{st.st_size}:{chunks}:v3"
-    marker = os.path.join(d, "_STAGED")
-
-    def _staged() -> bool:
-        try:
-            with open(marker) as fh:
-                return fh.read() == stamp
-        except OSError:
-            return False
-
-    if _staged():
+    # per-uid and 0o700: a stage found under it was written by this uid
+    root = os.path.join(tempfile.gettempdir(),
+                        f"spark_graft_streams-{os.getuid()}")
+    os.makedirs(root, 0o700, exist_ok=True)
+    own = os.lstat(root)
+    if not stat.S_ISDIR(own.st_mode) or own.st_uid != os.getuid():
+        raise RuntimeError(f"stream staging root {root!r} is not a "
+                           f"directory owned by uid {os.getuid()}")
+    parent = os.path.join(root, sf_dir.strip("/").replace("/", "_"))
+    # v4: bump on layout changes so an old stage is never served
+    d = os.path.join(parent, f"{name}-c{chunks}-{st.st_mtime_ns}-"
+                             f"{st.st_size}-v4")
+    if os.path.isdir(d):
         return d
-    # Concurrency: two processes (pytest-xdist workers) that both see a
-    # stale/absent marker must not interleave the sweep with each
-    # other's writes — a torn stage under the strictly-increasing-mtime
-    # invariant is silently ORDER-corrupting, not merely duplicated.
-    # Stage into a private temp dir and atomically rename into place,
-    # serialized by an advisory flock on a PERSISTENT lock file. flock
-    # is released by the kernel when the holder's fd closes — including
-    # on SIGKILL — so there is no stale-lock state, no mtime-based
-    # breaking, and no unlink: the earlier O_EXCL-create/stale-break/
-    # unlink protocol had TOCTOU races on every one of those edges
-    # (a breaker could delete a freshly re-created lock; a slow holder
-    # whose lock was stolen unlinked the new owner's lock in finally).
-    # The lock file itself is never removed. /tmp is local, so NFS
-    # flock caveats don't apply.
-    # The lock path is PER-UID and 0o600 (ADVICE r8): only same-uid
-    # workers can actually collide on the staged dir (it is created by
-    # one uid; a foreign uid's write fails at makedirs regardless), so
-    # a shared world-writable lock on a predictable /tmp path bought
-    # no real cross-uid exclusion while letting any local user flock
-    # it and stall staging indefinitely. O_NOFOLLOW refuses a
-    # pre-planted symlink at the (still predictable, but now
-    # uid-scoped) path.
-    # Availability fallback: a pre-planted foreign-owned file (or
-    # symlink — O_NOFOLLOW turns it into ELOOP) at the predictable
-    # lock path must not crash staging forever. The lock's parent dir
-    # is OURS (we makedirs'd it; a foreign-owned tree fails later at
-    # makedirs regardless) and not sticky, so we may unlink a PLANTED
-    # entry and retry. ADVICE r9: the fallback must never unlink a
-    # same-uid regular file — that is another worker's freshly
-    # recreated lock, and unlinking it re-opens the unlink TOCTOU the
-    # flock protocol exists to close (two workers holding flocks on
-    # different inodes of the same path = interleaved staging). So the
-    # recovery is errno-scoped (ELOOP/EACCES/EPERM only — a transient
-    # EMFILE/ENFILE must not delete a healthy lock someone else holds),
-    # lstat-verified (only a symlink or a foreign-owned entry is ever
-    # unlinked; a same-uid regular file means retry the open), and the
-    # open->flock window is closed by an fstat/stat inode check after
-    # the flock: if the path no longer names our inode, someone
-    # replaced the entry while we waited — drop the fd and loop.
-    lock = f"{d}.lock.{os.getuid()}"
-    fd = _open_staging_lock(lock)
+    os.makedirs(parent, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=".stage-", dir=parent)
     try:
-        if _staged():
-            return d
-        import shutil
-        tmp = f"{d}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
         _write_chunks(target, name, chunks, tmp)
-        with open(os.path.join(tmp, "_STAGED"), "w") as fh:
-            fh.write(stamp)
-        shutil.rmtree(d, ignore_errors=True)
-        os.rename(tmp, d)
+        try:
+            os.rename(tmp, d)
+        except OSError as e:  # another stager published `d` first
+            if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
+                raise
     finally:
-        os.close(fd)  # releases the flock; the lock file persists
+        shutil.rmtree(tmp, ignore_errors=True)  # gone once renamed
     return d
 
 
-def _open_staging_lock(lock: str, attempts: int = 16) -> int:
-    """Open + flock the per-uid staging lock, returning a locked fd
-    whose inode is verified to still be what ``lock`` names.
-
-    Recovery discipline (ADVICE r9):
-
-    * Only errno ELOOP (O_NOFOLLOW hit a planted symlink), EACCES or
-      EPERM enter the recovery path. Anything else — EMFILE, ENFILE,
-      ENOSPC, ... — is transient or environmental and must NOT unlink
-      a healthy lock another worker may be holding; it propagates.
-    * Recovery lstats the path and unlinks ONLY a symlink or a
-      foreign-owned entry. A same-uid regular file is another worker's
-      just-recreated lock: retry the open instead of unlinking it.
-    * After flock, os.fstat(fd).st_ino is compared against
-      os.stat(lock).st_ino: a mismatch means the directory entry was
-      replaced while we waited for the lock (our flock serializes
-      nothing), so the fd is dropped and the open retried.
-    * Attempts after the first back off exponentially (1 ms doubling
-      to ~100 ms, ADVICE r10) — without it an active symlink-replant
-      race burns the whole attempts budget in microseconds, and the
-      unrecoverable same-uid EACCES case just spins 16 tight opens.
-    """
-    import errno
-    import fcntl
-    import time
-
-    flags = os.O_CREAT | os.O_RDWR | os.O_NOFOLLOW
-    last: OSError | None = None
-    for attempt in range(attempts):
-        if attempt:
-            time.sleep(min(0.1, 0.001 * (1 << min(attempt - 1, 7))))
-        try:
-            fd = os.open(lock, flags, 0o600)
-        except OSError as e:
-            last = e
-            if e.errno not in (errno.ELOOP, errno.EACCES, errno.EPERM):
-                raise
-            try:
-                st = os.lstat(lock)
-            except FileNotFoundError:
-                continue  # entry vanished — plain retry
-            except OSError as e2:
-                last = e2
-                continue
-            import stat as _stat
-            if _stat.S_ISLNK(st.st_mode) or st.st_uid != os.getuid():
-                try:  # planted symlink / foreign file: safe to clear
-                    os.unlink(lock)
-                except OSError as e2:
-                    last = e2
-            # same-uid regular file: another worker's lock — never
-            # unlink; fall through and retry the open
-            continue
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            if os.fstat(fd).st_ino == os.stat(lock).st_ino:
-                return fd
-            # entry replaced behind us; our flock is on a dead inode
-            os.close(fd)
-        except OSError as e:
-            last = e
-            os.close(fd)
-    raise RuntimeError(
-        f"staging lock {lock!r} is unusable after {attempts} attempts "
-        f"(pre-planted entry not owned by uid {os.getuid()}, or the "
-        f"path keeps being replaced): {last}"
-    ) from last
-
-
 def _write_chunks(target: str, name: str, chunks: int, d: str) -> None:
-    """Write the ordered, mtime-stamped chunk files into ``d``."""
+    """Write the ordered chunk files into ``d`` in arrival order."""
     import pyarrow.parquet as pq
     t = pq.read_table(target)
     order_col = next(iter(_TS_COLUMNS.get(name, {})), None)
@@ -602,25 +400,16 @@ def _write_chunks(target: str, name: str, chunks: int, d: str) -> None:
         # stateful operators in a different order than a batch
         # (ts, id)-ordered window sees — the id tiebreak pins both
         # sides to the same total order
-        tiebreak = [c for c in _STREAM_TIEBREAK.get(name, ())
+        tiebreak = [c for c in _ROW_KEYS.get(name, ())
                     if c in t.column_names]
         t = t.sort_by([(order_col, "ascending")]
                       + [(c, "ascending") for c in tiebreak])
     n = max(1, min(chunks, t.num_rows or 1))
     step = -(-max(t.num_rows, 1) // n)
-    # FileStreamSource orders pending files by modification time in
-    # MILLISECONDS; four small chunks written back-to-back land in the
-    # same millisecond and the tie order is whatever the directory
-    # listing yields — micro-batches can then deliver chunk 2 before
-    # chunk 1, silently re-ordering the event-time fold that the
-    # stateful operators (and their batch-twin oracles) depend on.
-    # Stamp strictly increasing whole-second mtimes so the source's
-    # ascending modTime sort IS the staged chunk order.
-    base = int(time.time()) - n - 1
-    for i in range(n):
-        part = os.path.join(d, f"part-{i:05d}.parquet")
+    parts = [os.path.join(d, f"part-{i:05d}.parquet") for i in range(n)]
+    for i, part in enumerate(parts):
         pq.write_table(t.slice(i * step, step), part)
-        os.utime(part, (base + i, base + i))
+    stamp_arrival_order(parts)
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str,
@@ -636,17 +425,14 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str,
     path = _stream_dir(sf_dir, name)
     source = f"{sf_dir}/{name}.parquet"
     # schema selection keys on _RAW_FIELDS (the explicit-schema table
-    # set), unit conversion on _TS_COLUMNS; a module-level assertion
+    # set), unit conversion on _TS_COLUMNS; a module-level check
     # pins the two key sets equal so membership checks can't diverge
     if name in _RAW_FIELDS:
         schema = raw_schema(name)
     else:
         schema = spark.read.parquet(source).schema
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    df = reader.load(path)
+    df = file_stream(spark, path, schema,
+                     max_files_per_trigger=max_files_per_trigger)
     # staged chunks are pyarrow rewrites of the source table, so the
     # source footer's storage units apply to them unchanged
     return finalize_timestamps(df, name, dict(_storage_units(source, name))) \

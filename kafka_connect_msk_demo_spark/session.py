@@ -51,7 +51,12 @@ def env_bytes(name: str, default: str) -> str:
 
 
 DEFAULT_SHUFFLE_PARTITIONS = env_int("SPARK_GRAFT_SHUFFLE", 32)
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
+#: local-mode core count: ``*`` (every core) or a positive integer
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*").strip()
+if DEFAULT_CPUS != "*" and not re.fullmatch(r"[0-9]*[1-9][0-9]*",
+                                            DEFAULT_CPUS):
+    raise ValueError(f"SPARK_GRAFT_CPUS={DEFAULT_CPUS!r}: expected * or "
+                     "a positive integer")
 #: local-mode JVM heap. In local mode the driver JVM IS every executor:
 #: PySpark's 1g default gives 32 task threads ~440 MB of combined
 #: execution+storage memory, so the dense-graph and dedup kernels spend
@@ -60,7 +65,7 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 #: process launches the JVM — a cluster deployment sizes
 #: spark.executor.memory instead and this knob reverts to meaning the
 #: (coordinator-only) driver heap.
-DEFAULT_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+DEFAULT_DRIVER_MEM = env_bytes("SPARK_GRAFT_DRIVER_MEM", "8g")
 
 
 def get_spark(app_name: str = "kafka_connect_msk_demo_spark",

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..streaming.runner import stamp_arrival_order
 
 RECORD_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
                "order_month"]
@@ -108,24 +109,20 @@ def write_envelope_stream_dir(spark: SparkSession, sf_dir: str,
     micro-batches (latest-wins is ordered by ts_ms, so arrival order
     within a phase doesn't matter — splitting a phase exercises that).
 
-    Files are renamed into arrival order with strictly increasing
-    whole-second mtimes: FileStreamSource orders pending files by
-    MILLISECOND modification time, and three back-to-back Spark write
-    jobs can land in the same millisecond — an uncontrolled tie could
-    deliver a phase-2 delete before the phase-0 snapshot that the
-    initial bulk-insert path depends on seeing first.
+    Files are renamed into arrival order and stamped with
+    :func:`stamp_arrival_order`: an uncontrolled
+    mtime tie could deliver a phase-2 delete before the phase-0
+    snapshot that the initial bulk-insert path depends on seeing first.
 
     Local-FS only (os.rename/utime): this is the TEST-FIXTURE
     materializer for the sandbox's file-stream Kafka stand-in; a real
     deployment reads the actual topic, where arrival order is the
     broker's per-partition order."""
     import os
-    import time
 
     env = orders_cdc_envelope(spark, sf_dir)
     stage = f"{out_dir.rstrip('/')}__stage"
-    seq = 0
-    base_ts = int(time.time()) - 3 * files_per_phase - 1
+    arrivals: list[str] = []
     os.makedirs(out_dir, exist_ok=True)
     for phase in (0, 1, 2):
         part = env.filter(F.col("__phase") == phase).drop("__phase")
@@ -138,9 +135,10 @@ def write_envelope_stream_dir(spark: SparkSession, sf_dir: str,
         files = sorted(f for f in os.listdir(stage)
                        if f.endswith(".parquet"))
         for f in files:
-            dst = os.path.join(out_dir, f"phase{phase}-{seq:04d}.parquet")
+            dst = os.path.join(out_dir,
+                               f"phase{phase}-{len(arrivals):04d}.parquet")
             os.replace(os.path.join(stage, f), dst)
-            os.utime(dst, (base_ts + seq, base_ts + seq))
-            seq += 1
+            arrivals.append(dst)
+    stamp_arrival_order(arrivals)
     import shutil
     shutil.rmtree(stage, ignore_errors=True)

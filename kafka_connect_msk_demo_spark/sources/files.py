@@ -41,6 +41,8 @@ from pyspark.sql import types as T
 from .. import tablelog
 from ..serde import avro_encode_block as _avro_encode_block
 from ..serde import avro_encode_rows  # noqa: F401 (re-exported for tests)
+from ..serde import _zigzag_decode
+from ..serde import _zigzag_encode as _zigzag
 
 # ---------------------------------------------------------------------------
 # CSV (S1 / S9)
@@ -80,19 +82,6 @@ _OCF_MAGIC = b"Obj\x01"
 _SYNC = b"spark-graft-sync"
 
 
-def _zigzag(n: int) -> bytes:
-    n = (n << 1) ^ (n >> 63)
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _ocf_bytes(pdf: pd.DataFrame, avro_json: str) -> bytes:
     """One Avro OCF: header (magic, metadata map, sync) + one block."""
     buf = io.BytesIO()
@@ -115,35 +104,24 @@ def _ocf_bytes(pdf: pd.DataFrame, avro_json: str) -> bytes:
 
 def _ocf_parse(blob: bytes) -> tuple[str, list[bytes], list[int]]:
     """OCF → (schema json, block payloads, per-block record counts)."""
-    assert blob[:4] == _OCF_MAGIC, "not an Avro object container file"
+    if blob[:4] != _OCF_MAGIC:
+        raise ValueError("not an Avro object container file")
     pos = 4
-
-    def _zz(p: int) -> tuple[int, int]:
-        shift = acc = 0
-        while True:
-            b = blob[p]
-            p += 1
-            acc |= (b & 0x7F) << shift
-            if not (b & 0x80):
-                break
-            shift += 7
-        return (acc >> 1) ^ -(acc & 1), p
-
     meta: dict[str, bytes] = {}
     while True:
-        n, pos = _zz(pos)
+        n, pos = _zigzag_decode(blob, pos)
         if n == 0:
             break
         if n < 0:
             # Avro spec: a negative map-block count is followed by a
             # long byte-size of the block; the item count is abs(n).
-            _, pos = _zz(pos)
+            _, pos = _zigzag_decode(blob, pos)
             n = -n
         for _ in range(n):
-            kl, pos = _zz(pos)
+            kl, pos = _zigzag_decode(blob, pos)
             k = blob[pos:pos + kl].decode()
             pos += kl
-            vl, pos = _zz(pos)
+            vl, pos = _zigzag_decode(blob, pos)
             meta[k] = blob[pos:pos + vl]
             pos += vl
     codec = meta.get("avro.codec", b"null")
@@ -164,13 +142,14 @@ def _ocf_parse(blob: bytes) -> tuple[str, list[bytes], list[int]]:
     payloads = []
     counts = []
     while pos < len(blob):
-        cnt, pos = _zz(pos)
-        size, pos = _zz(pos)
+        cnt, pos = _zigzag_decode(blob, pos)
+        size, pos = _zigzag_decode(blob, pos)
         body = blob[pos:pos + size]
         payloads.append(inflate(body) if inflate else body)
         counts.append(cnt)
         pos += size
-        assert blob[pos:pos + 16] == sync, "sync marker mismatch"
+        if blob[pos:pos + 16] != sync:
+            raise ValueError(f"Avro sync marker mismatch at byte {pos}")
         pos += 16
     return meta["avro.schema"].decode(), payloads, counts
 

@@ -12,7 +12,9 @@ watermark advancement — then stops. A production deployment passes a
 
 from __future__ import annotations
 
+import os
 import tempfile
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +32,17 @@ def file_stream(spark: SparkSession, path: str, schema: T.StructType,
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(path)
+
+
+def stamp_arrival_order(paths: list[str]) -> None:
+    """Give ``paths`` strictly increasing whole-second mtimes in the
+    past, in list order. FileStreamSource orders pending files by
+    MILLISECOND mtime, and files written back-to-back tie in listing
+    order — a stream could deliver a later file first and re-order
+    every stateful fold (and its batch-twin oracle) downstream."""
+    base = int(time.time()) - len(paths) - 1
+    for i, p in enumerate(paths):
+        os.utime(p, (base + i, base + i))
 
 
 def run_to_memory(df: DataFrame, output_mode: str = "complete",

@@ -35,6 +35,33 @@ def test_bad_stream_chunks_knob_names_the_variable(value):
     assert "ValueError: SPARK_GRAFT_STREAM_CHUNKS=" in err
 
 
+@pytest.mark.parametrize("value", ["0", "four", "-2", "2.5", "**", "8*"])
+def test_bad_cpus_knob_names_the_variable(value):
+    err = _import_error("kafka_connect_msk_demo_spark.session",
+                        "SPARK_GRAFT_CPUS", value)
+    assert "ValueError: SPARK_GRAFT_CPUS=" in err
+
+
+@pytest.mark.parametrize("value", ["lots", "8 g", "1.5g", "-1", "8q"])
+def test_bad_driver_mem_knob_names_the_variable(value):
+    err = _import_error("kafka_connect_msk_demo_spark.session",
+                        "SPARK_GRAFT_DRIVER_MEM", value)
+    assert "ValueError: SPARK_GRAFT_DRIVER_MEM=" in err
+
+
+def test_cpus_and_driver_mem_knobs_read_good_values():
+    code = ("from kafka_connect_msk_demo_spark import session as s; "
+            "print(s.DEFAULT_CPUS, s.DEFAULT_DRIVER_MEM)")
+    for cpus, mem in (("*", "8g"), (" 4 ", "512m"), ("12", "2048")):
+        r = subprocess.run([sys.executable, "-c", code],
+                           env={**os.environ, "SPARK_GRAFT_CPUS": cpus,
+                                "SPARK_GRAFT_DRIVER_MEM": mem},
+                           cwd=ROOT, capture_output=True, text=True,
+                           timeout=120)
+        assert r.returncode == 0, r.stderr
+        assert r.stdout.split() == [cpus.strip(), mem]
+
+
 def test_env_int_reads_good_values(monkeypatch):
     from kafka_connect_msk_demo_spark.session import env_int
     monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)

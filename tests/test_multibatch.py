@@ -188,39 +188,13 @@ def test_staged_chunks_have_strictly_increasing_mtimes(sf_small):
     assert all(b - a >= 1.0 for a, b in zip(mtimes, mtimes[1:])), mtimes
 
 
-def test_staging_recovers_from_planted_lock_entry(sf_small, tmp_path,
-                                                  monkeypatch):
-    """A pre-planted entry at the predictable per-uid lock path (a
-    symlink here — O_NOFOLLOW turns it into ELOOP, the same failure
-    shape as a foreign-owned 0o600 file's EACCES) must not crash
-    staging forever: the lock's parent dir is ours, so _stream_dir
-    unlinks the planted entry and retries once."""
-    import glob
-    import os
-    import tempfile
-
-    import kafka_connect_msk_demo_spark.catalog as cat
-
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    safe = sf_small.strip("/").replace("/", "_")
-    d = os.path.join(str(tmp_path), "spark_graft_streams", safe,
-                     "events-c3")
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    lock = f"{d}.lock.{os.getuid()}"
-    os.symlink("/nonexistent-target", lock)
-    staged = cat._stream_dir(sf_small, "events", chunks=3)
-    assert staged == d
-    assert not os.path.islink(lock), "planted symlink not replaced"
-    assert len(glob.glob(os.path.join(d, "part-*.parquet"))) == 3
-
-
 def test_concurrent_staging_yields_one_valid_dir(sf_small, tmp_path):
-    """ADVICE r6 (catalog lock TOCTOU): N processes racing to stage the
-    same stream dir must serialize through the flock and leave exactly
-    one coherent staged dir — marker matches the stamp, full chunk set,
-    strictly increasing mtimes, no leftover .tmp.* staging dirs. The
-    flock is kernel-released on process death, so no stale-lock
-    breaking (the TOCTOU class) exists anymore."""
+    """N processes racing to stage the same stream dir must leave
+    exactly one coherent staged dir — named for the source stamp, full
+    chunk set, strictly increasing mtimes, no leftover temporary
+    dirs. Each stager writes a private copy and publishes it with one
+    rename; rename onto a non-empty dir fails, so exactly one copy
+    wins and the losers return it."""
     import glob
     import multiprocessing as mp
     import os
@@ -244,6 +218,7 @@ def test_concurrent_staging_yields_one_valid_dir(sf_small, tmp_path):
     results = [q.get(timeout=120) for _ in procs]
     for p in procs:
         p.join(timeout=120)
+    assert not any(p.is_alive() for p in procs)
     assert all(isinstance(r, str) and not r.startswith("ERROR")
                for r in results), results
     assert len(set(results)) == 1
@@ -252,7 +227,64 @@ def test_concurrent_staging_yields_one_valid_dir(sf_small, tmp_path):
     assert len(parts) == 3
     mtimes = [os.stat(p).st_mtime for p in parts]
     assert all(b - a >= 1.0 for a, b in zip(mtimes, mtimes[1:])), mtimes
-    assert not glob.glob(d + ".tmp.*"), "leftover torn staging dirs"
-    marker = open(os.path.join(d, "_STAGED")).read()
     st = os.stat(f"{sf_small}/events.parquet")
-    assert marker == f"{st.st_mtime_ns}:{st.st_size}:3:v3"
+    assert os.path.basename(d) == \
+        f"events-c3-{st.st_mtime_ns}-{st.st_size}-v4"
+    assert os.listdir(os.path.dirname(d)) == [os.path.basename(d)], \
+        "leftover temporary staging dirs"
+
+
+def test_staging_refuses_a_symlinked_root(sf_small, tmp_path, monkeypatch):
+    """The per-uid staging root is where every stage is trusted from;
+    a symlink planted at its predictable path must make staging raise,
+    not serve whatever stage the link points at."""
+    import os
+    import tempfile
+
+    import pytest
+
+    import kafka_connect_msk_demo_spark.catalog as cat
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    elsewhere = tmp_path / "elsewhere"
+    elsewhere.mkdir()
+    os.symlink(elsewhere, tmp_path / f"spark_graft_streams-{os.getuid()}")
+    with pytest.raises(RuntimeError, match="staging root"):
+        cat._stream_dir(sf_small, "events", chunks=3)
+    assert not os.listdir(elsewhere)
+
+
+def test_restaging_after_source_change_leaves_old_stage_whole(
+        sf_small, tmp_path, monkeypatch):
+    """A stage is never rewritten: once the source's mtime changes,
+    staging returns a NEW directory, and the old one keeps every chunk
+    it had for a reader still listing it."""
+    import os
+    import shutil
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    import kafka_connect_msk_demo_spark.catalog as cat
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tmp_path / "tmp")
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src = sf / "events.parquet"
+    shutil.copyfile(f"{sf_small}/events.parquet", src)
+    old = cat._stream_dir(str(sf), "events", chunks=3)
+    before = {f: os.stat(os.path.join(old, f)).st_mtime_ns
+              for f in os.listdir(old)}
+    assert cat._stream_dir(str(sf), "events", chunks=3) == old
+    st = os.stat(src)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    new = cat._stream_dir(str(sf), "events", chunks=3)
+    assert new != old and os.path.dirname(new) == os.path.dirname(old)
+    assert {f: os.stat(os.path.join(old, f)).st_mtime_ns
+            for f in os.listdir(old)} == before
+    assert sorted(os.listdir(new)) == sorted(before)
+    rows = sum(pq.read_metadata(os.path.join(old, f)).num_rows
+               for f in before)
+    assert rows == pq.read_metadata(src).num_rows
+    shutil.rmtree(old)

@@ -132,6 +132,24 @@ def test_ocf_parse_negative_map_block_count():
     assert (schema_json2, payloads2, counts2) == (schema_json, payloads, counts)
 
 
+def test_ocf_parse_rejects_bad_magic_and_bad_sync_marker():
+    """The file comes from outside the program, so a wrong magic or a
+    torn block raises ValueError — a check that ``python -O`` keeps."""
+    import pandas as pd
+    import pytest
+
+    from kafka_connect_msk_demo_spark.sources import files as fmod
+
+    pdf = pd.DataFrame({"id": [1, 2]})
+    aj = '{"type":"record","name":"r","fields":[{"name":"id","type":"int"}]}'
+    blob = fmod._ocf_bytes(pdf, aj)
+    with pytest.raises(ValueError, match="not an Avro object container"):
+        fmod._ocf_parse(b"PAR1" + blob[4:])
+    torn = blob[:-16] + b"x" * 16  # the block's trailing sync marker
+    with pytest.raises(ValueError, match="sync marker mismatch"):
+        fmod._ocf_parse(torn)
+
+
 def test_avro_schema_resolution_block():
     """Writer→reader resolution: promotions, dropped fields, defaults,
     and nullable-union handling at the codec level."""

@@ -27,7 +27,8 @@ Axes (matching the r7 report rows):
   session  hostile session configs (AQE off, ANSI off, Arrow toggled,
            Asia/Kolkata) over the config-sensitive query subset
   staging  N forked processes staging the same stream table
-           concurrently -> one winner, intact mtime order
+           concurrently -> one published dir, no temporary leftovers,
+           intact mtime order
   avro     randomized write_avro/read_avro roundtrips: random
            primitive schemas, nulls, >2^53 longs
   extremes shuffle-partition EXTREMES (1 and 256) across the cdc and
@@ -375,36 +376,45 @@ def axis_session() -> int:
 
 
 def axis_staging(n_procs: int = 4) -> int:
-    """Fork N processes that all stage the same stream table into the
-    same target; exactly one staged dir must result, chunks in
-    strictly-increasing mtime order."""
+    """Fork N processes that all stage the same stream table into a
+    fresh temporary root. Each writes a private copy and publishes it
+    with one rename, so exactly one staged dir must result — the only
+    entry of its parent, no temporary dirs left — with its chunks in
+    strictly increasing mtime order."""
     import subprocess
-    env = dict(os.environ)
+    root = tempfile.mkdtemp(prefix="stress-staging-")
+    env = dict(os.environ, TMPDIR=root)  # every fork races the real work
     code = (
         "import sys; sys.path.insert(0, %r); "
         "from kafka_connect_msk_demo_spark.catalog import _stream_dir; "
         "d = _stream_dir(%r, 'events'); print(d)"
         % (ROOT, SF_SMALL))
-    # clear any pre-staged dir so every fork races the real work
-    import kafka_connect_msk_demo_spark.catalog as cat
-    probe = cat._stream_dir(SF_SMALL, "events")
-    shutil.rmtree(probe, ignore_errors=True)
-    procs = [subprocess.Popen([sys.executable, "-c", code], env=env,
-                              stdout=subprocess.PIPE)
-             for _ in range(n_procs)]
-    outs = [p.communicate()[0].decode().strip() for p in procs]
-    codes = [p.returncode for p in procs]
-    dirs = set(outs)
-    ok = all(c == 0 for c in codes) and len(dirs) == 1
-    if ok:
-        d = dirs.pop()
-        files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-        mtimes = [os.stat(os.path.join(d, f)).st_mtime_ns for f in files]
-        ok = mtimes == sorted(mtimes) and len(set(mtimes)) == len(mtimes)
-        print(f"  {n_procs} forks -> 1 dir, {len(files)} chunks, "
-              f"mtime order {'ok' if ok else 'BROKEN'}", flush=True)
-    else:
-        print(f"  FAILED: exit codes {codes}, dirs {dirs}", flush=True)
+    try:
+        procs = [subprocess.Popen([sys.executable, "-c", code], env=env,
+                                  stdout=subprocess.PIPE)
+                 for _ in range(n_procs)]
+        outs = [p.communicate()[0].decode().strip() for p in procs]
+        codes = [p.returncode for p in procs]
+        dirs = set(outs)
+        ok = all(c == 0 for c in codes) and len(dirs) == 1
+        if ok:
+            d = dirs.pop()
+            files = sorted(f for f in os.listdir(d)
+                           if f.endswith(".parquet"))
+            mtimes = [os.stat(os.path.join(d, f)).st_mtime_ns
+                      for f in files]
+            ok = mtimes == sorted(mtimes) and \
+                len(set(mtimes)) == len(mtimes)
+            alone = os.listdir(os.path.dirname(d)) == [os.path.basename(d)]
+            print(f"  {n_procs} forks -> 1 dir, {len(files)} chunks, "
+                  f"mtime order {'ok' if ok else 'BROKEN'}, "
+                  f"{'no' if alone else 'LEFTOVER'} temporary dirs",
+                  flush=True)
+            ok = ok and alone
+        else:
+            print(f"  FAILED: exit codes {codes}, dirs {dirs}", flush=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
     return 0 if ok else 1
 
 
