@@ -42,9 +42,17 @@ Each Copy-on-Write MERGE:
 1. reduces the incoming batch to one winner per key (``max_by`` — one
    shuffle on the key, map-side partials);
 2. finds the partitions it must rewrite: where incoming rows land and
-   where a version of an incoming key lives now — a (key, partition,
-   file) scan of the base semi-joined with the batch, so a key is found
-   wherever it lives;
+   where a version of an incoming key lives now. Each base file has a
+   sidecar fingerprint of its keys (the low 32 bits of their
+   ``xxhash64``), the membership summary behind Hudi's
+   ``GLOBAL_BLOOM`` index, so a key is found wherever it lives without
+   reading the base. One scan-only collect gets the batch's hashes and
+   partition values, plus the (file, hash) pairs of the files no merge
+   has fingerprinted yet (the ones the previous merge wrote), whose
+   sidecars this merge writes and its entry records. The driver holds
+   4 bytes per key of every base file while it picks, and the first
+   merge after a bulk write collects a pair per row it wrote. A hash
+   collision only rewrites a partition that did not need it;
 3. re-merges the rows of those partitions with the batch and writes the
    result as new files, each row under its new partition value;
 4. commits the new files in and the rewritten ones out, in one entry,
@@ -60,11 +68,15 @@ from __future__ import annotations
 
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import tablelog
+
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 class UpsertTable:
@@ -151,35 +163,102 @@ class UpsertTable:
             return df
         return df.withColumn(self.TOMB_COL, F.lit(None).cast("long"))
 
+    def _key_hash(self, schema: T.StructType) -> Column:
+        """The low 32 bits of ``xxhash64`` over the key columns, each
+        taken under its stored type in ``schema``: Spark hashes ``int
+        5`` and ``bigint 5`` apart, while the merge matches them. A
+        numeric key then hashes as a double, so a fingerprint outlives
+        the widening of its column (an ``int`` key turns ``bigint`` when
+        a ``bigint`` batch merges in). A batch value the stored type
+        cannot hold hashes as NULL, which at worst picks a partition
+        too many: no stored key equals it."""
+        cols = []
+        for k in self.key_cols:
+            t = schema[k].dataType
+            c = F.col(k).try_cast(t)
+            cols.append(c.cast("double") if isinstance(t, T.NumericType)
+                        else c)
+        return F.xxhash64(*cols).bitwiseAND(F.lit(0xFFFFFFFF)).alias("_h")
+
     def _touched(self, snap: tablelog.Snapshot, batch: DataFrame,
-                 merge_seq: int) -> list[dict]:
+                 merge_seq: int) -> tuple[list[dict], dict[str, dict]]:
         """Base files this merge rewrites: every file of each partition
         that receives a row of the batch, holds a version of an incoming
         key (a moved key leaves its old one) or, with retention, holds a
         tombstone this merge ages out (so it is purged even if no later
         batch touches it). Whole partitions, as the reference rewrites
         whole file groups, keep a partition to the files of one write.
-        The lookup scans (key, partition, file) only; an unpartitioned
-        table is one partition."""
+        An unpartitioned table is one partition.
+
+        Keys are matched by fingerprint: a base file's sidecar and its
+        record's ``tomb`` (``tablelog``). One scan-only collect reads
+        the batch's hashes and partition values, and the key hashes and
+        tombstone stamps of the base files with no readable sidecar (in
+        steady state the ones the previous merge wrote), a (path, hash)
+        row per stored row. Their sidecars are written here; the second
+        value returned holds their record fields, for the commit to add
+        to the ones it keeps."""
         files, p = snap.of("base"), self.partition_by
         if not files or not p:
-            return files
-        spark = batch.sparkSession
-        base = tablelog.read(spark, self.path, snap, files)
-        f = F.col("_metadata.file_path").alias("_f")
-        hit = (base.select(*self.key_cols, f)
-               .join(batch.select(*self.key_cols), self.key_cols,
-                     "left_semi").select("_f")
-               .unionByName(base.select(p, f).join(batch.select(p), p,
-                                                   "left_semi").select("_f")))
-        if self.retain_tombstones is not None:
-            hit = hit.unionByName(base.filter(
-                F.col(self.TOMB_COL) <= merge_seq - self.retain_tombstones)
-                .select(f))
-        # the partition directory of each file, as the log records it
-        parts = {unquote(r[0]) for r in hit.select(F.regexp_extract(
-            "_f", r"([^/]+)/[^/]+$", 1)).distinct().collect()}
-        return [r for r in files if r["partition"] in parts]
+            return files, {}
+        spark, h = batch.sparkSession, self._key_hash(snap.schema)
+        stored = tablelog.read_sidecars(
+            spark, self.path, [f["path"] for f in files if "keys" in f])
+        keys = {f["path"]: np.frombuffer(data, "<u4") for f in files
+                if (data := stored.get(f["path"])) is not None
+                and len(data) == 4 * f["keys"]}
+        fresh = [f["path"] for f in files if f["path"] not in keys]
+        # under the stored type, as the partition directories were
+        # named; Spark writes NULL and '' to the default one
+        land = F.coalesce(F.nullif(F.col(p).try_cast(
+            snap.schema[p].dataType).cast("string"), F.lit("")),
+            F.lit(_DEFAULT_PARTITION))
+        none = F.lit(None)
+        rows = batch.select(none.cast("string").alias("_f"),
+                            land.alias("_p"), h,
+                            none.cast("long").alias("_t"))
+        if fresh:
+            tomb = (none if self.retain_tombstones is None
+                    else F.col(self.TOMB_COL))
+            rows = rows.unionByName(tablelog.read(
+                spark, self.path, snap,
+                [f for f in files if f["path"] not in keys]).select(
+                # the file's path as the log records it, URI-encoded
+                F.regexp_extract("_metadata.file_path", r"[^/]+/[^/]+$",
+                                 0).alias("_f"),
+                none.cast("string").alias("_p"), h,
+                tomb.cast("long").alias("_t")))
+        # one scan stage, no shuffle: the rows are grouped here, in Python
+        got = rows.toArrow()
+        ours = pc.is_null(got["_f"])
+        mine = got.filter(ours)
+        incoming = np.unique(mine["_h"].to_numpy().astype(np.uint32))
+        landed = set(mine["_p"].to_pylist())
+        scanned = {unquote(r["_f"]): r for r in got.filter(pc.invert(ours))
+                   .group_by("_f").aggregate([("_h", "distinct"),
+                                              ("_t", "min")]).to_pylist()}
+        if unknown := set(scanned) - set(fresh):
+            raise RuntimeError(f"{self.path}: read files its log does not "
+                               f"name: {sorted(unknown)[:3]}")
+        notes = {}
+        for path in fresh:  # a file with no row has no key
+            r = scanned.get(path, {})
+            keys[path] = np.unique(np.array(r.get("_h_distinct", []),
+                                            "<u4"))
+            notes[path] = {"keys": len(keys[path]), **(
+                {} if r.get("_t_min") is None else {"tomb": r["_t_min"]})}
+        tablelog.write_sidecars(spark, self.path, {
+            path: keys[path].tobytes() for path in fresh})
+        parts = set()
+        for f in files:
+            oldest = notes.get(f["path"], f).get("tomb")
+            if (np.isin(incoming, keys[f["path"]], assume_unique=True).any()
+                    or unquote(f["partition"].partition("=")[2]) in landed
+                    or (self.retain_tombstones is not None
+                        and oldest is not None
+                        and oldest <= merge_seq - self.retain_tombstones)):
+                parts.add(f["partition"])
+        return [f for f in files if f["partition"] in parts], notes
 
     # -- the MERGE --------------------------------------------------------
 
@@ -201,7 +280,7 @@ class UpsertTable:
         incoming = self._latest_wins(batch)
         if self.retain_tombstones is not None:
             incoming = self._with_tomb(incoming)
-        touched = self._touched(snap, batch, seq)
+        touched, fingerprints = self._touched(snap, batch, seq)
         if touched:
             affected = tablelog.read(batch.sparkSession, self.path, snap,
                                      touched).select(*incoming.columns)
@@ -214,7 +293,8 @@ class UpsertTable:
         add = tablelog.write(live, self.path, p, "base",
                              f"v{snap.version + 1}")
         tablelog.commit(batch.sparkSession, self.path, snap, add,
-                        touched + list(consumed), schema, seq)
+                        touched + list(consumed), schema, seq,
+                        fingerprints)
 
     # -- read views (S15: Hudi _ro/_rt analog) -----------------------------
 

@@ -5,10 +5,27 @@ kind: the Copy-on-Write and Merge-on-Read upsert tables
 
 Data files live in the table directory, in hive ``col=value``
 subdirectories when the table is partitioned. ``_log/<version>.json``
-is a full snapshot of one version: the live files (relative path,
-partition directory, kind ``base`` or ``delta``, commit id, size), the
-schema and the retention merge sequence. A reader opens the newest
-entry only. A commit deletes the entries before the previous one.
+is a full snapshot of one version: the live files, the schema and the
+retention merge sequence. A reader opens the newest entry only. A
+commit deletes the entries before the previous one. Each file record
+holds:
+
+* ``path`` (relative, hive-escaped as on disk), ``partition`` (its
+  directory), ``kind`` (``base`` or ``delta``), ``commit`` (the id of
+  the write) and ``size``;
+* on an upsert table's base file, once a merge has scanned it,
+  ``keys``: the number of key hashes in the file's sidecar (below),
+  and in retention mode ``tomb``, the file's oldest tombstone stamp
+  (absent when it holds none) (``streaming/upsert.py``).
+
+A sidecar is a small write-once file beside its data file, named
+``.<data file name>.keys`` (hidden, so Spark's directory listing skips
+it), written before the commit that records it and deleted with its
+data file. An upsert base file's sidecar holds the sorted unique low 32
+bits of ``xxhash64`` over its key columns, as little-endian uint32.
+Data files are write-once, so a sidecar never goes stale; the log
+entry stays proportional to the number of files, and only a merge's
+lookup reads sidecars.
 
 Commit order:
 
@@ -16,8 +33,8 @@ Commit order:
    of their own, then moves them into the table directory.
 2. :func:`commit` puts the next entry in place under the next version's
    name, never over an existing entry. That is the commit point.
-3. Then the files the new version dropped are deleted, and each
-   partition directory they leave empty.
+3. Then the files the new version dropped are deleted, with their
+   sidecars, and each partition directory they leave empty.
 
 A crash before step 2 or 3 leaves files no entry names, never read.
 Writers may run side by side: a commit that finds its version taken
@@ -102,22 +119,39 @@ def _versions(fs, log) -> list[int]:
         if fs.exists(log) else []
 
 
+def _read(spark: SparkSession, fs, jpath) -> bytes | None:
+    """The bytes of the file at ``jpath``, or None when it is gone."""
+    try:
+        stream = fs.open(jpath)
+    except Py4JJavaError as exc:
+        if "FileNotFoundException" not in str(exc.java_exception):
+            raise
+        return None
+    try:
+        return bytes(spark._jvm.org.apache.commons.io.IOUtils
+                     .toByteArray(stream))
+    finally:
+        stream.close()
+
+
+def _create(fs, jpath, data: bytes) -> None:
+    """Write ``data`` as the file at ``jpath``, replacing one there."""
+    out = fs.create(jpath, True)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+
+
 def snapshot(spark: SparkSession, root: str) -> Snapshot:
     """The newest committed version of the table at ``root``."""
     fs, log = _fs(spark, f"{root}/{LOG_DIR}")
     while versions := _versions(fs, log):
-        try:
-            stream = fs.open(spark._jvm.org.apache.hadoop.fs.Path(
-                log, f"{versions[-1]:010d}.json"))
-        except Py4JJavaError as exc:  # pruned since the listing
-            if "FileNotFoundException" not in str(exc.java_exception):
-                raise
+        data = _read(spark, fs, spark._jvm.org.apache.hadoop.fs.Path(
+            log, f"{versions[-1]:010d}.json"))
+        if data is None:  # pruned since the listing
             continue
-        try:
-            entry = json.loads(spark._jvm.org.apache.commons.io.IOUtils
-                               .toString(stream, "UTF-8"))
-        finally:
-            stream.close()
+        entry = json.loads(data)
         return Snapshot(entry["version"],
                         T.StructType.fromJson(entry["schema"]),
                         entry["merge_seq"], tuple(entry["files"]))
@@ -177,17 +211,22 @@ def _rename(src: str, dst: str) -> None:
 
 def commit(spark: SparkSession, root: str, prev: Snapshot, add=(),
            drop=(), schema: T.StructType | None = None,
-           merge_seq: int | None = None) -> Snapshot:
+           merge_seq: int | None = None,
+           notes: dict[str, dict] | None = None) -> Snapshot:
     """Publish the version after ``prev``: its files minus ``drop``
     plus ``add``. ``schema`` and ``merge_seq`` default to ``prev``'s.
-    If another writer published first, move onto the newest version
-    when :func:`_rebases` allows it; otherwise delete ``add`` and raise
+    ``notes`` maps a file path to fields added to that file's record
+    (the ``keys`` and ``tomb`` of a merge's lookup); a note on a file
+    the new version does not hold is dropped. If another writer
+    published first, move onto the newest version when
+    :func:`_rebases` allows it; otherwise delete ``add`` and raise
     :class:`Conflict`."""
-    gone = {f["path"] for f in drop}
+    gone, notes = {f["path"] for f in drop}, notes or {}
     while True:
         new = Snapshot(prev.version + 1, schema or prev.schema,
                        prev.merge_seq if merge_seq is None else merge_seq,
-                       tuple(f for f in prev.files if f["path"] not in gone)
+                       tuple({**f, **notes.get(f["path"], {})}
+                             for f in prev.files if f["path"] not in gone)
                        + tuple(add))
         if _publish(spark, root, new):
             _delete(spark, root, prev, new)
@@ -223,14 +262,10 @@ def _publish(spark: SparkSession, root: str, snap: Snapshot) -> bool:
     Path = spark._jvm.org.apache.hadoop.fs.Path
     dst = Path(log, f"{snap.version:010d}.json")
     tmp = Path(log, f".{snap.version:010d}.{uuid.uuid4().hex}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps({
-            "version": snap.version, "schema": snap.schema.jsonValue(),
-            "merge_seq": snap.merge_seq, "files": list(snap.files)})
-            .encode("utf-8")))
-    finally:
-        out.close()
+    _create(fs, tmp, json.dumps({
+        "version": snap.version, "schema": snap.schema.jsonValue(),
+        "merge_seq": snap.merge_seq, "files": list(snap.files)})
+        .encode("utf-8"))
     try:
         if _versions(fs, log)[-1:] >= [snap.version]:
             return False
@@ -268,6 +303,9 @@ def _delete(spark: SparkSession, root: str, old: Snapshot,
     gone = [f for f in old.files if f["path"] not in live]
     for f in gone:
         fs.delete(Path(f"{root}/{f['path']}"), False)
+        if f["kind"] == "base":  # recorded or not: a writer whose
+            # commit lost may have written one
+            fs.delete(Path(f"{root}/{_sidecar(f['path'])}"), False)
     for part in ({f["partition"] for f in gone} - {""}
                  - {f["partition"] for f in new.files}):
         jpart = Path(f"{root}/{part}")
@@ -278,6 +316,59 @@ def _delete(spark: SparkSession, root: str, old: Snapshot,
                 os.rmdir(local)
         except (OSError, Py4JJavaError):
             pass
+
+
+def _sidecar(path: str) -> str:
+    d, _, name = path.rpartition("/")
+    return f"{d}/.{name}.keys" if d else f".{name}.keys"
+
+
+def write_sidecars(spark: SparkSession, root: str,
+                   sidecars: dict[str, bytes]) -> None:
+    """Give each data file (relative path, as its record names it) its
+    sidecar. The content must follow from the data file alone: two
+    writers may race to write one, and the one that loses the rename
+    leaves the same bytes in place. On the local disk, sidecars are
+    read and written with os: a merge handles hundreds, and per-file
+    py4j round trips cost more."""
+    fs, jroot = _fs(spark, root)
+    local = _local(fs, jroot)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    for path, data in sidecars.items():
+        tmp = f"{_sidecar(path)}.{uuid.uuid4().hex}.tmp"
+        if local is not None:
+            try:
+                with open(os.path.join(local, tmp), "wb") as fh:
+                    fh.write(data)
+                os.replace(os.path.join(local, tmp),
+                           os.path.join(local, _sidecar(path)))
+            except FileNotFoundError:  # a concurrent commit dropped the
+                pass  # file and its directory: this commit will conflict
+            continue
+        _create(fs, Path(jroot, tmp), data)
+        try:
+            fs.rename(Path(jroot, tmp), Path(jroot, _sidecar(path)))
+        finally:
+            fs.delete(Path(jroot, tmp), False)
+
+
+def read_sidecars(spark: SparkSession, root: str,
+                  paths) -> dict[str, bytes | None]:
+    """Each data file's sidecar, None for one it has not."""
+    fs, jroot = _fs(spark, root)
+    local = _local(fs, jroot)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    out = {}
+    for path in paths:
+        if local is None:
+            out[path] = _read(spark, fs, Path(jroot, _sidecar(path)))
+            continue
+        try:
+            with open(os.path.join(local, _sidecar(path)), "rb") as fh:
+                out[path] = fh.read()
+        except FileNotFoundError:
+            out[path] = None
+    return out
 
 
 def read(spark: SparkSession, root: str, snap: Snapshot, files,

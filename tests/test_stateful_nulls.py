@@ -13,7 +13,6 @@ same data.
 
 import glob
 import os
-import time
 
 import pandas as pd
 import pyarrow as pa
@@ -22,7 +21,8 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from kafka_connect_msk_demo_spark.streaming.runner import run_to_memory
+from kafka_connect_msk_demo_spark.streaming.runner import (
+    run_to_memory, stamp_arrival_order)
 from kafka_connect_msk_demo_spark.streaming.stateful import (
     ewma_stream, latest_emission, record_high_stream,
     rolling_anomaly_stream, running_user_stats)
@@ -36,7 +36,7 @@ def _stage(tmp_path, chunks):
     invariant catalog staging pins)."""
     d = str(tmp_path / "stream")
     os.makedirs(d, exist_ok=True)
-    base = int(time.time()) - 3600
+    paths = []
     for i, rows in enumerate(chunks):
         tbl = pa.table({
             "user_id": pa.array([r[0] for r in rows], pa.int64()),
@@ -48,7 +48,8 @@ def _stage(tmp_path, chunks):
         })
         p = os.path.join(d, f"part-{i:05d}.parquet")
         pq.write_table(tbl, p)
-        os.utime(p, (base + i, base + i))
+        paths.append(p)
+    stamp_arrival_order(paths)
     return d
 
 

@@ -5,11 +5,20 @@ end-to-end cdc_upsert oracle check cannot reach:
   lazy plan still reads destroys the table — FAILED_READ_FILE);
 * a partition fully vacated by deletes / cross-partition key moves must
   leave the table log and lose its directory;
-* NULL ``__deleted`` flags must be treated as live, not dropped.
+* NULL ``__deleted`` flags must be treated as live, not dropped;
+* the key-fingerprint lookup never misses a partition a merge must
+  rewrite (``cdc_upsert`` cannot tell: every partition holding a
+  version of an incoming key there also receives a row of the batch),
+  and opens no base file whose log record has a fingerprint.
 
 Stored state (retained tombstones included) and the merge sequence are
 read from the table log, the same place the table reads them.
 """
+
+import json
+import os
+from collections import Counter
+from decimal import Decimal
 
 import pytest
 
@@ -280,3 +289,265 @@ def test_merge_seq_crash_replay_does_not_advance(spark, tmp_path,
              _stored(spark, t).collect()
              if r[UpsertTable.TOMB_COL] is not None}
     assert tombs == {(1, 1)}
+
+
+# -- the key-fingerprint lookup ---------------------------------------------
+# The first merge after the bootstrap scans the bootstrap files and
+# fingerprints the ones it keeps; a third merge then finds their keys
+# in the log alone.
+
+def _base(spark, t):
+    """Partition -> base file records of the newest version."""
+    out = {}
+    for f in tablelog.snapshot(spark, t.path).of("base"):
+        out.setdefault(f["partition"], []).append(f)
+    return out
+
+
+def _rows(spark, t):
+    return {(r.id, r.part, r.val) for r in t.read(spark).collect()}
+
+
+def _sidecars(t):
+    """Relative path -> size of every sidecar in the table directory."""
+    return {os.path.relpath(os.path.join(d, n), t.path):
+            os.path.getsize(os.path.join(d, n))
+            for d, _, names in os.walk(t.path) for n in names
+            if n.endswith(".keys")}
+
+
+def _recorded(spark, t):
+    """The sidecars the newest entry records, relative path -> size."""
+    out = {}
+    for f in tablelog.snapshot(spark, t.path).of("base"):
+        if "keys" in f:
+            d, _, name = f["path"].rpartition("/")
+            out[f"{d}/.{name}.keys"] = 4 * f["keys"]
+    return out
+
+
+def test_lookup_reads_no_fingerprinted_file(spark, tmp_path):
+    t = _table(tmp_path / "t", partition_by="part")
+    t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
+                                 (2, "b", "v1", 10, 0, "false"),
+                                 (3, "c", "v1", 10, 0, "false")]))
+    t.merge_batch(_batch(spark, [(3, "c", "v2", 20, 0, "false")]))
+    [cold] = _base(spark, t)["part=b"]
+    assert cold["keys"]
+    # a truncated file fails any read of it
+    path = os.path.join(t.path, cold["path"])
+    os.truncate(path, os.path.getsize(path) // 2)
+    # lands in c, updates key 1 in a: partition b is not needed
+    t.merge_batch(_batch(spark, [(1, "a", "v2", 30, 0, "false"),
+                                 (4, "c", "v1", 30, 0, "false")]))
+    assert _base(spark, t)["part=b"] == [cold]
+
+
+def test_entry_without_fingerprints_merges_and_gains_them(spark,
+                                                          tmp_path):
+    """A table whose newest entry has no fingerprint (as tables were
+    written before them) is scanned once, and that merge's entry
+    fingerprints every base file it keeps."""
+    t = _table(tmp_path / "t", partition_by="part")
+    t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
+                                 (2, "b", "v1", 10, 0, "false"),
+                                 (3, "c", "v1", 10, 0, "false")]))
+    t.merge_batch(_batch(spark, [(3, "c", "v2", 20, 0, "false")]))
+    log = tmp_path / "t" / tablelog.LOG_DIR
+    newest = max(log.glob("*.json"))
+    entry = json.loads(newest.read_text())
+    assert any("keys" in f for f in entry["files"])
+    for f in entry["files"]:
+        f.pop("keys", None)
+    newest.write_text(json.dumps(entry))
+    stripped = {f["path"] for f in entry["files"]}
+    # key 2 moves out of b, where no row of the batch lands
+    t.merge_batch(_batch(spark, [(2, "d", "v2", 30, 0, "false"),
+                                 (5, "c", "v1", 30, 0, "false")]))
+    assert _rows(spark, t) == {(1, "a", "v1"), (2, "d", "v2"),
+                               (3, "c", "v2"), (5, "c", "v1")}
+    assert set(_base(spark, t)) == {"part=a", "part=c", "part=d"}
+    kept = [f for fs in _base(spark, t).values() for f in fs
+            if f["path"] in stripped]
+    assert kept and all(f["keys"] for f in kept)
+    assert _sidecars(t) == _recorded(spark, t)
+
+
+def test_lost_sidecar_is_scanned_again(spark, tmp_path):
+    """A recorded sidecar that is gone or short counts as no
+    fingerprint: the file is scanned and the sidecar written again.
+    A dropped file takes its sidecar with it."""
+    t = _table(tmp_path / "t", partition_by="part")
+    t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
+                                 (2, "b", "v1", 10, 0, "false"),
+                                 (3, "c", "v1", 10, 0, "false")]))
+    t.merge_batch(_batch(spark, [(3, "c", "v2", 20, 0, "false")]))
+    want = _recorded(spark, t)
+    assert _sidecars(t) == want and len(want) == 2  # c is new
+    [a] = [p for p in want if p.startswith("part=a/")]
+    [b] = [p for p in want if p.startswith("part=b/")]
+    os.remove(os.path.join(t.path, a))
+    with open(os.path.join(t.path, b), "r+b") as fh:
+        fh.truncate(2)
+    # keys 1 and 2 move out of a and b, where no row of the batch lands
+    t.merge_batch(_batch(spark, [(1, "d", "v2", 30, 0, "false"),
+                                 (2, "d", "v2", 30, 0, "false")]))
+    assert _rows(spark, t) == {(1, "d", "v2"), (2, "d", "v2"),
+                               (3, "c", "v2")}
+    assert set(_base(spark, t)) == {"part=c", "part=d"}
+    assert _sidecars(t) == _recorded(spark, t)
+
+
+def test_bigint_batch_finds_int_stored_keys(spark, tmp_path):
+    """Spark hashes ``int 5`` and ``bigint 5`` apart; the lookup hashes
+    batch keys under the stored type, also after the merge widened the
+    stored column to ``bigint``. A value the stored ``int`` cannot hold
+    may only add partitions."""
+    t = _table(tmp_path / "t", partition_by="part")
+    t.merge_batch(_batch(spark, [(5, "a", "v1", 10, 0, "false"),
+                                 (6, "d", "v1", 10, 0, "false"),
+                                 (7, "c", "v1", 10, 0, "false")]))
+    t.merge_batch(_batch(spark, [(7, "c", "v2", 20, 0, "false")]))
+    assert all(f["keys"] for p in ("part=a", "part=d")
+               for f in _base(spark, t)[p])
+
+    def wide(rows):
+        return spark.createDataFrame(
+            rows, "id bigint, part string, val string, ts bigint, "
+                  "seq int, __deleted string")
+
+    t.merge_batch(wide([(5, "b", "v2", 30, 0, "false"),
+                        (2 ** 40, "b", "v1", 30, 0, "false")]))
+    assert (tablelog.snapshot(spark, t.path).schema["id"].dataType
+            .typeName() == "long")
+    # d's fingerprint was taken while the column was int
+    t.merge_batch(wide([(6, "e", "v2", 40, 0, "false")]))
+    assert _rows(spark, t) == {(5, "b", "v2"), (2 ** 40, "b", "v1"),
+                               (6, "e", "v2"), (7, "c", "v2")}
+    assert set(_base(spark, t)) == {"part=b", "part=c", "part=e"}
+
+
+def test_composite_key_with_null_component_moves(spark, tmp_path):
+    t = UpsertTable(str(tmp_path / "t"), ["k", "n"], "ts", "seq",
+                    partition_by="part")
+
+    def batch(rows):
+        return spark.createDataFrame(
+            rows, "k string, n int, part string, val string, ts bigint, "
+                  "seq int, __deleted string")
+
+    t.merge_batch(batch([("x", None, "a", "v1", 10, 0, "false"),
+                         (None, 1, "b", "v1", 10, 0, "false"),
+                         ("x", 1, "c", "v1", 10, 0, "false")]))
+    t.merge_batch(batch([("x", 1, "c", "v2", 20, 0, "false")]))
+    # both NULL-bearing keys move out of partitions no row lands in
+    t.merge_batch(batch([("x", None, "d", "v2", 30, 0, "false"),
+                         (None, 1, "e", "v2", 30, 0, "false")]))
+    assert {(r.k, r.n, r.part, r.val) for r in t.read(spark).collect()} \
+        == {("x", None, "d", "v2"), (None, 1, "e", "v2"),
+            ("x", 1, "c", "v2")}
+    assert set(_base(spark, t)) == {"part=c", "part=d", "part=e"}
+
+
+def test_key_moves_out_of_fingerprinted_partition(spark, tmp_path):
+    t = _table(tmp_path / "t", partition_by="part")
+    t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
+                                 (2, "b", "v1", 10, 0, "false")]))
+    t.merge_batch(_batch(spark, [(2, "b", "v2", 20, 0, "false")]))
+    assert _base(spark, t)["part=a"][0]["keys"]
+    t.merge_batch(_batch(spark, [(1, "c", "v2", 30, 0, "false")]))
+    assert _rows(spark, t) == {(1, "c", "v2"), (2, "b", "v2")}
+    assert set(_base(spark, t)) == {"part=b", "part=c"}
+    assert not (tmp_path / "t" / "part=a").exists()
+
+
+def test_fingerprinted_tombstone_purged_at_age(spark, tmp_path):
+    """The oldest tombstone stamp in a file's record ages the file out
+    with no read of it, in a partition no later batch touches."""
+    t = _retaining(tmp_path / "t", 2, partition_by="part")
+    t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
+                                 (2, "b", "w1", 10, 0, "false")]))
+    t.merge_batch(_batch(spark, [(1, "a", "v1", 20, 0, "true")]))  # seq 1
+    t.merge_batch(_batch(spark, [(2, "b", "w2", 30, 0, "false")]))
+    [rec] = _base(spark, t)["part=a"]
+    assert rec["keys"] and rec["tomb"] == 1
+    assert "tomb" not in _base(spark, t)["part=b"][0]
+    # merge 3 ages out tombstones stamped at 3 - 2 = 1 or before
+    t.merge_batch(_batch(spark, [(2, "b", "w3", 40, 0, "false")]))
+    stored = _stored(spark, t)
+    assert stored.filter(
+        stored[UpsertTable.TOMB_COL].isNotNull()).count() == 0
+    assert set(_base(spark, t)) == {"part=b"}
+    assert _rows(spark, t) == {(2, "b", "w3")}
+
+
+def test_escaped_partition_values_keep_one_file(spark, tmp_path):
+    """Batch rows are matched to the log's hive-escaped directory
+    names, so a partition a row lands in is rewritten whole, not
+    given a second file."""
+    values = ["a b", "x/y", "50%", None]
+    t = _table(tmp_path / "t", partition_by="part")
+    want = set()
+    for n in range(3):
+        rows = [(10 * n + i, v, "v1", 10 * n, 0, "false")
+                for i, v in enumerate(values)]
+        t.merge_batch(_batch(spark, rows))
+        want |= {r[:3] for r in rows}
+        assert Counter(f["partition"] for f in
+                       tablelog.snapshot(spark, t.path).of("base")) \
+            == {p: 1 for p in ("part=a b", "part=x%2Fy", "part=50%25",
+                               "part=__HIVE_DEFAULT_PARTITION__")}
+    assert _rows(spark, t) == want
+
+
+@pytest.mark.parametrize("stored, sent, value, sent_value", [
+    ("double", "int", 5.0, 5),
+    ("decimal(10,4)", "decimal(3,2)", Decimal("1.5"), Decimal("1.50"))])
+def test_numeric_partition_values_keep_one_file(spark, tmp_path, stored,
+                                                sent, value, sent_value):
+    """A batch's partition value is matched under the stored type: an
+    ``int 5`` lands in the directory a ``double`` column named
+    ``5.0``, a ``decimal(3,2)`` 1.50 in ``1.5000``."""
+    def batch(rows, typ):
+        return spark.createDataFrame(
+            rows, f"id int, part {typ}, val string, ts bigint, seq int, "
+                  "__deleted string")
+
+    t = _table(tmp_path / "t", partition_by="part")
+    t.merge_batch(batch([(1, value, "v1", 10, 0, "false")], stored))
+    t.merge_batch(batch([(2, sent_value, "v1", 20, 0, "false")], sent))
+    t.merge_batch(batch([(3, sent_value, "v1", 30, 0, "false")], sent))
+    assert [n for n in Counter(
+        f["partition"] for f in
+        tablelog.snapshot(spark, t.path).of("base")).values()] == [1]
+    assert {r.id for r in t.read(spark).collect()} == {1, 2, 3}
+
+
+def test_lookup_through_the_hadoop_api(spark, tmp_path, monkeypatch):
+    """With the local-disk shortcuts off, the table log and the sidecars
+    go through the Hadoop FileSystem API, as on HDFS: the same rows,
+    partitions and sidecars."""
+    monkeypatch.setattr(tablelog, "_local", lambda fs, jpath: None)
+    t = _table(tmp_path / "t", partition_by="part")
+    t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
+                                 (2, "b", "v1", 10, 0, "false"),
+                                 (3, "c", "v1", 10, 0, "false")]))
+    t.merge_batch(_batch(spark, [(3, "c", "v2", 20, 0, "false")]))
+    assert len(_recorded(spark, t)) == 2
+    # b is not needed: only its sidecar may be read
+    [cold] = _base(spark, t)["part=b"]
+    path = os.path.join(t.path, cold["path"])
+    with open(path, "rb") as fh:
+        whole = fh.read()
+    os.truncate(path, len(whole) // 2)
+    # key 1 moves out of a, where no row of the batch lands
+    t.merge_batch(_batch(spark, [(1, "d", "v2", 30, 0, "false")]))
+    assert set(_base(spark, t)) == {"part=b", "part=c", "part=d"}
+    assert _base(spark, t)["part=b"] == [cold]
+    with open(path, "wb") as fh:
+        fh.write(whole)
+    assert _rows(spark, t) == {(1, "d", "v2"), (2, "b", "v1"),
+                               (3, "c", "v2")}
+    assert _sidecars(t) == _recorded(spark, t)
+    assert not any(n.endswith(".tmp") for _, _, names in os.walk(t.path)
+                   for n in names)
