@@ -9,7 +9,10 @@ Reference semantics (SURVEY.md §2.7):
   re-emissions on read (``13_batch_read_results_avro.py:59-70``).
 * W5 — Hudi ordering-field upsert (latest ``__source_ts_ms`` wins per
   record key) is the same pattern applied as a MERGE
-  (``deltastreamer_jobs_bulk.sh:13,20``); see ``streaming/upsert.py``.
+  (``deltastreamer_jobs_bulk.sh:13,20``); ``streaming/upsert.py`` runs
+  its Copy-on-Write merge and Merge-on-Read ``_rt`` read on
+  :func:`latest_by_key`, and ``streaming/stateful.latest_emission``
+  reconciles update-mode emissions with :func:`ranked_keep_first`.
 
 The reference's ORDER BY has unstable ties (SURVEY.md §7 risk d); every
 entry point here requires an explicit deterministic ``tiebreak`` column.
@@ -18,9 +21,12 @@ Scale notes
 -----------
 ``row_number`` over PARTITION BY k shuffles on k once — same cost class
 as the groupBy it replaces. For the common "latest row per key" case
-:func:`latest_by_key` uses ``max_by`` (one hash-agg, no sort, no window
-state) which is cheaper than a window at 100 TB: the shuffle carries one
-candidate row per key per map partition instead of every row.
+:func:`latest_by_key` uses ``max_by`` over a (ts, tiebreak) struct.
+Its buffer is not fixed-width, so it plans as a ``SortAggregate``: a
+sort before the partial aggregate, one exchange on the key, a sort
+before the final one. It is still cheaper than a window at 100 TB:
+the partial aggregate leaves one candidate row per key per map
+partition, so the shuffle carries those instead of every row.
 """
 
 from __future__ import annotations

@@ -914,6 +914,24 @@ def q_avro_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority")
 
 
+def _cdc_stream(spark: SparkSession, sf_dir: str, prefix: str,
+                files_per_phase: int = 1) -> tuple[str, DataFrame]:
+    """``(base, stream)``: the Debezium envelope feed over ``orders``
+    (sources/cdc.py) staged in a fresh temporary directory ``base``,
+    read one file per micro-batch and unwrapped (P11)."""
+    import tempfile
+
+    from .sources.cdc import write_envelope_stream_dir
+    from .transforms import cdc_unwrap
+
+    base = tempfile.mkdtemp(prefix=prefix)
+    env_dir = f"{base}/envelope"
+    write_envelope_stream_dir(spark, sf_dir, env_dir, files_per_phase)
+    stream = (spark.readStream.schema(spark.read.parquet(env_dir).schema)
+              .option("maxFilesPerTrigger", "1").parquet(env_dir))
+    return base, cdc_unwrap(stream)
+
+
 def q_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.3 end-to-end: Debezium envelope stream → unwrap (P11) →
     foreachBatch latest-wins MERGE into a partitioned table with delete
@@ -921,23 +939,14 @@ def q_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The change stream is deterministically derived from ``orders``
     (see sources/cdc.py), so the merged table is SQL-expressible."""
-    import tempfile
-
-    from .sources.cdc import write_envelope_stream_dir
     from .streaming.runner import run_foreach_batch
     from .streaming.upsert import UpsertTable
-    from .transforms import cdc_unwrap
 
-    base = tempfile.mkdtemp(prefix="cdc_upsert_")
-    env_dir = f"{base}/envelope"
-    write_envelope_stream_dir(spark, sf_dir, env_dir)
-    env_schema = spark.read.parquet(env_dir).schema
-    stream = (spark.readStream.schema(env_schema)
-              .option("maxFilesPerTrigger", "1").parquet(env_dir))
+    base, stream = _cdc_stream(spark, sf_dir, "cdc_upsert_")
     table = UpsertTable(f"{base}/table", key_cols=["o_orderkey"],
                         ordering_col="__source_ts_ms", tiebreak_col="__lsn",
                         partition_by="order_month")
-    run_foreach_batch(cdc_unwrap(stream), table.merge_batch,
+    run_foreach_batch(stream, table.merge_batch,
                       checkpoint_dir=f"{base}/ckpt")
     return table.read(spark).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
@@ -969,24 +978,15 @@ def q_cdc_upsert_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: ``deltastreamer_jobs_bulk.sh:7-79`` runs CoW and
     MoR DeltaStreamer jobs over the same topics;
     ``moma_debezium_hudi_demo.ipynb`` cells 8-11 query ``_ro``/``_rt``."""
-    import tempfile
-
-    from .sources.cdc import write_envelope_stream_dir
     from .streaming.runner import run_foreach_batch
     from .streaming.upsert import MergeOnReadTable
-    from .transforms import cdc_unwrap
 
-    base = tempfile.mkdtemp(prefix="cdc_upsert_mor_")
-    env_dir = f"{base}/envelope"
-    write_envelope_stream_dir(spark, sf_dir, env_dir)
-    env_schema = spark.read.parquet(env_dir).schema
-    stream = (spark.readStream.schema(env_schema)
-              .option("maxFilesPerTrigger", "1").parquet(env_dir))
+    base, stream = _cdc_stream(spark, sf_dir, "cdc_upsert_mor_")
     table = MergeOnReadTable(f"{base}/table", key_cols=["o_orderkey"],
                              ordering_col="__source_ts_ms",
                              tiebreak_col="__lsn",
                              partition_by="order_month")
-    run_foreach_batch(cdc_unwrap(stream), table.append_batch,
+    run_foreach_batch(stream, table.append_batch,
                       checkpoint_dir=f"{base}/ckpt")
     table.register_views(spark, "mor_orders")
     return spark.table("mor_orders_rt").select(
@@ -1011,25 +1011,17 @@ def q_cdc_upsert_mor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     must still hash-match the CoW table state after the same feed
     (oracle ``_SQL_CDC_UPSERT`` verbatim, same as the other two CDC
     queries)."""
-    import tempfile
-
-    from .sources.cdc import write_envelope_stream_dir
     from .streaming.runner import run_foreach_batch
     from .streaming.upsert import MergeOnReadTable
-    from .transforms import cdc_unwrap
 
-    base = tempfile.mkdtemp(prefix="cdc_upsert_mor_stream_")
-    env_dir = f"{base}/envelope"
-    write_envelope_stream_dir(spark, sf_dir, env_dir, files_per_phase=2)
-    env_schema = spark.read.parquet(env_dir).schema
-    stream = (spark.readStream.schema(env_schema)
-              .option("maxFilesPerTrigger", "1").parquet(env_dir))
+    base, stream = _cdc_stream(spark, sf_dir, "cdc_upsert_mor_stream_",
+                               files_per_phase=2)
     table = MergeOnReadTable(f"{base}/table", key_cols=["o_orderkey"],
                              ordering_col="__source_ts_ms",
                              tiebreak_col="__lsn",
                              partition_by="order_month",
                              max_delta_commits=2)
-    run_foreach_batch(cdc_unwrap(stream), table.append_batch,
+    run_foreach_batch(stream, table.append_batch,
                       checkpoint_dir=f"{base}/ckpt")
     table.register_views(spark, "mor_stream_orders")
     return spark.table("mor_stream_orders_rt").select(

@@ -424,26 +424,19 @@ def _field_decoder(typ: str):
     raise NotImplementedError(f"avro type {typ}")
 
 
-def _decode_plan(avro_json: str):
-    """(decoders, fresh column dict, appends) for a record schema."""
-    fields = _parse_schema(avro_json)
-    decoders = [(_field_decoder(typ), null_branch)
-                for _, typ, null_branch in fields]
-    cols: dict[str, list] = {name: [] for name, _, _ in fields}
-    appends = [cols[name].append for name, _, _ in fields]
-    return decoders, cols, appends
-
-
-def _decode_record(buf: bytes, pos: int, decoders, appends) -> int:
-    for (dec, null_branch), add in zip(decoders, appends):
-        if null_branch is not None:
-            branch, pos = _zigzag_decode(buf, pos)
-            if branch == null_branch:
-                add(None)
-                continue
-        val, pos = dec(buf, pos)
-        add(val)
-    return pos
+def _record_loop(buf: bytes, n: int, steps) -> None:
+    """Decode ``n`` records laid end to end in ``buf`` through the
+    steps of :func:`resolve_decode_plan` — the one record loop."""
+    pos = 0
+    for _ in range(n):
+        for dec, null_branch, add in steps:
+            if null_branch is not None:
+                branch, pos = _zigzag_decode(buf, pos)
+                if branch == null_branch:
+                    add(None)
+                    continue
+            val, pos = dec(buf, pos)
+            add(val)
 
 
 def _as_object_frame(cols: dict[str, list]) -> pd.DataFrame:
@@ -456,21 +449,22 @@ def _as_object_frame(cols: dict[str, list]) -> pd.DataFrame:
 
 def avro_decode_rows(blobs: pd.Series, avro_json: str) -> pd.DataFrame:
     """Decode one Avro-binary record per cell."""
-    decoders, cols, appends = _decode_plan(avro_json)
+    steps, cols = resolve_decode_plan(avro_json)
     for blob in blobs:
-        _decode_record(blob, 0, decoders, appends)
+        _record_loop(blob, 1, steps)
     return _as_object_frame(cols)
 
 
-def avro_decode_block(body: bytes, n: int, avro_json: str) -> pd.DataFrame:
+def avro_decode_block(body: bytes, n: int, writer_json: str,
+                      reader_json: str | None = None) -> pd.DataFrame:
     """Decode ``n`` concatenated records (an OCF data block) in one
     sequential pass — Avro binary is not self-delimiting, so block
     decoding is strictly cheaper than split-then-decode (which must
-    walk every field twice)."""
-    decoders, cols, appends = _decode_plan(avro_json)
-    pos = 0
-    for _ in range(n):
-        pos = _decode_record(body, pos, decoders, appends)
+    walk every field twice). With ``reader_json`` the records come out
+    in the READER's shape (schema resolution, below); without it, in
+    the writer's own."""
+    steps, cols = resolve_decode_plan(writer_json, reader_json)
+    _record_loop(body, n, steps)
     return _as_object_frame(cols)
 
 
@@ -505,6 +499,25 @@ def _as_wire_types(df: DataFrame, use: list[str]) -> list[Column]:
     return cols
 
 
+def _millis_wire(schema: T.StructType):
+    """``(wire schema, restore)`` for Avro decoded in Python: timestamp
+    fields cross the Arrow boundary as the epoch-ms longs of their
+    ``timestamp-millis`` wire form, and ``restore`` turns a decoded
+    frame's longs back into timestamps with ``timestamp_millis`` —
+    exact in any session timezone."""
+    ts = set(_ts_fields(schema))
+    wire = T.StructType([
+        T.StructField(f.name, T.LongType() if f.name in ts else f.dataType,
+                      f.nullable)
+        for f in schema.fields])
+
+    def restore(flat: DataFrame) -> DataFrame:
+        return flat.select(*[
+            F.timestamp_millis(c).alias(c) if c in ts else F.col(c)
+            for c in flat.columns])
+    return wire, restore
+
+
 def to_avro_column(df: DataFrame, avro_json: str,
                    cols: list[str] | None = None) -> Column:
     """E6 (11:76-77): encode columns as one Avro-binary value column.
@@ -533,20 +546,14 @@ def from_avro_column(df: DataFrame, avro_json: str,
         return df.withColumn("data", from_avro(F.col(value_col), avro_json)) \
                  .select("data.*")
 
-    ts = set(_ts_fields(schema))
-    wire_schema = T.StructType([
-        T.StructField(f.name, T.LongType() if f.name in ts else f.dataType,
-                      f.nullable)
-        for f in schema.fields])
+    wire, restore = _millis_wire(schema)
 
-    @F.pandas_udf(wire_schema)
+    @F.pandas_udf(wire)
     def _dec(blobs: pd.Series) -> pd.DataFrame:
         return avro_decode_rows(blobs, avro_json)
 
-    flat = df.select(_dec(F.col(value_col)).alias("data")).select("data.*")
-    return flat.select(*[
-        F.timestamp_millis(c).alias(c) if c in ts else F.col(c)
-        for c in flat.columns])
+    return restore(df.select(_dec(F.col(value_col)).alias("data"))
+                   .select("data.*"))
 
 
 # ---------------------------------------------------------------------------
@@ -608,77 +615,61 @@ def _base_type(typ: str) -> str:
     return typ.split(":", 1)[0]
 
 
-def _promote_converter(w_typ: str, r_typ: str):
-    """value converter for a legal promotion (identity when same)."""
+def _promoted(w_typ: str, r_typ: str):
+    """Decoder of a ``w_typ`` field read as ``r_typ``: the writer's
+    field decoder, converting the value when the types differ by a
+    legal promotion."""
+    dec = _field_decoder(w_typ)
     w, r = _base_type(w_typ), _base_type(r_typ)
     if w == r:
-        return None
+        return dec
     if (w, r) not in _PROMOTIONS:
-        raise ValueError(
-            f"illegal Avro promotion {w_typ} -> {r_typ}")
-    if r in ("float", "double"):
-        return float
+        raise ValueError(f"illegal Avro promotion {w_typ} -> {r_typ}")
     if r == "long":
-        return None          # python ints are width-free
-    if r == "bytes":
-        return lambda v: v.encode("utf-8")
-    if r == "string":
-        return lambda v: v.decode("utf-8")
-    raise ValueError(f"illegal Avro promotion {w_typ} -> {r_typ}")
+        return dec  # python ints are width-free
+    conv = {"float": float, "double": float,
+            "bytes": lambda v: v.encode("utf-8"),
+            "string": lambda v: v.decode("utf-8")}[r]
+
+    def _conv(buf, pos):
+        val, pos = dec(buf, pos)
+        return conv(val), pos
+    return _conv
 
 
-def resolve_decode_plan(writer_json: str, reader_json: str):
-    """Build the writer-order decode steps + reader-order column dict.
+def _discard(_val) -> None:
+    """The append of a writer-only field: decoded, then dropped."""
 
-    Returns ``(steps, cols, defaults)`` where ``steps`` is one
-    ``(decoder, null_branch, convert, append_or_None)`` per WRITER field
-    (``None`` append = decode-and-discard), ``cols`` maps reader field
-    names to fresh lists, and ``defaults`` is ``[(append, value), ...]``
-    for reader-only fields, applied once per record.
-    """
+
+def resolve_decode_plan(writer_json: str, reader_json: str | None = None):
+    """Decode plan of writer-encoded records in the READER's shape
+    (the writer's own when ``reader_json`` is None).
+
+    Returns ``(steps, cols)``: ``cols`` maps the reader's field names,
+    in its order, to fresh lists, and ``steps`` holds one ``(decoder,
+    null_branch, append)`` per field, writer fields first in wire order.
+    A promotion is folded into its field's decoder, a writer-only field
+    appends to :func:`_discard`, and a reader-only field gets a decoder
+    that reads nothing and returns its declared default. Raises
+    ``ValueError`` when the reader cannot read the writer's data."""
+    reader_json = reader_json or writer_json
     w_fields = _parse_schema(writer_json)
     r_fields = _parse_schema(reader_json)
     r_types = {name: typ for name, typ, _ in r_fields}
     r_defaults = _parse_schema_defaults(reader_json)
-    cols: dict[str, list] = {name: [] for name, _, _ in r_fields}
-    w_names = set()
-    steps = []
-    for name, w_typ, w_null in w_fields:
-        w_names.add(name)
-        dec = _field_decoder(w_typ)
-        if name in r_types:
-            conv = _promote_converter(w_typ, r_types[name])
-            steps.append((dec, w_null, conv, cols[name].append))
-        else:
-            steps.append((dec, w_null, None, None))
-    defaults = []
-    for name, _typ, _null in r_fields:
+    cols = {name: [] for name, _, _ in r_fields}
+    steps = [(_promoted(typ, r_types[name]), null_branch,
+              cols[name].append) if name in r_types
+             else (_field_decoder(typ), null_branch, _discard)
+             for name, typ, null_branch in w_fields]
+    w_names = {name for name, _, _ in w_fields}
+    for name, _, _ in r_fields:
         if name in w_names:
             continue
         if name not in r_defaults:
             raise ValueError(
                 f"reader field {name!r} absent from writer schema and "
                 f"has no default")
-        defaults.append((cols[name].append, r_defaults[name]))
-    return steps, cols, defaults
-
-
-def avro_decode_block_resolved(body: bytes, n: int, writer_json: str,
-                               reader_json: str) -> pd.DataFrame:
-    """Decode ``n`` writer-encoded records into the READER's shape."""
-    steps, cols, defaults = resolve_decode_plan(writer_json, reader_json)
-    pos = 0
-    for _ in range(n):
-        for dec, null_branch, conv, add in steps:
-            if null_branch is not None:
-                branch, pos = _zigzag_decode(body, pos)
-                if branch == null_branch:
-                    if add is not None:
-                        add(None)
-                    continue
-            val, pos = dec(body, pos)
-            if add is not None:
-                add(val if conv is None or val is None else conv(val))
-        for add, dv in defaults:
-            add(dv)
-    return _as_object_frame(cols)
+        steps.append((lambda buf, pos, v=r_defaults[name]: (v, pos), None,
+                      cols[name].append))
+    return steps, cols

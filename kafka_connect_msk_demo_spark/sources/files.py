@@ -35,7 +35,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import tablelog
@@ -201,36 +200,25 @@ def read_avro(spark: SparkSession, path: str, avro_json: str,
     their defaults) — a directory of OCF files written across a
     schema's lifetime reads as one uniform frame. Without it, files
     decode against their own schema and must already match."""
-    from ..serde import _ts_fields
+    from ..serde import _millis_wire
 
     files = (spark.read.format("binaryFile")
              .option("pathGlobFilter", "*.avro").load(path)
              .select("content"))
-    ts = set(_ts_fields(schema))
-    wire_schema = T.StructType([
-        T.StructField(f.name, T.LongType() if f.name in ts else f.dataType,
-                      f.nullable)
-        for f in schema.fields])
+    wire, restore = _millis_wire(schema)
+    reader = avro_json if resolve else None
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..serde import avro_decode_block, avro_decode_block_resolved
+        from ..serde import avro_decode_block
         for pdf in batches:
             for blob in pdf["content"]:
                 # decode against the file's own embedded schema
                 # (schema-on-read; the caller schema types the output)
                 file_schema, payloads, counts = _ocf_parse(bytes(blob))
-                if resolve:
-                    yield avro_decode_block_resolved(
-                        b"".join(payloads), sum(counts), file_schema,
-                        avro_json)
-                else:
-                    yield avro_decode_block(b"".join(payloads),
-                                            sum(counts), file_schema)
+                yield avro_decode_block(b"".join(payloads), sum(counts),
+                                        file_schema, reader)
 
-    flat = files.mapInPandas(_parse, wire_schema)
-    return flat.select(*[
-        F.timestamp_millis(c).alias(c) if c in ts else F.col(c)
-        for c in flat.columns])
+    return restore(files.mapInPandas(_parse, wire))
 
 
 # ---------------------------------------------------------------------------

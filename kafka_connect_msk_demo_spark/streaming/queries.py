@@ -155,18 +155,11 @@ FROM events GROUP BY user_id ORDER BY user_id
 """
 
 
-def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join — a capability extension (the
-    reference has no stream-stream joins, SURVEY.md §2.5): each click
-    joined to the same user's purchases within the next 30 minutes.
-
-    Both sides carry a 1-hour watermark and the join condition bounds
-    event time on both ends, so the join state is EVICTABLE: a buffered
-    click can be dropped once the purchase-side watermark passes
-    click_ts + 30 min — state size is O(rate × window), not O(stream).
-    Inner joins emit eagerly on match, so the availableNow drain yields
-    the complete pair set (equals the batch interval join, which is
-    what the oracle checks)."""
+def _click_purchase_join(spark: SparkSession, sf_dir: str,
+                         how: str) -> DataFrame:
+    """Each click joined (``how``) to the same user's purchases in the
+    next 30 minutes, both sides of the events stream watermarked at 1
+    hour, so the join state is evictable."""
     clicks = (stream_table(spark, sf_dir, "events")
               .filter(F.col("event_type") == "click")
               .select("user_id",
@@ -179,17 +172,31 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.col("ts").alias("p_ts"),
                          F.col("event_id").alias("purchase_id"))
                  .withWatermark("p_ts", "1 hour"))
-    joined = clicks.join(
+    return clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user"))
         & (F.col("p_ts") >= F.col("click_ts"))
         & (F.col("p_ts") <= F.col("click_ts")
            + F.expr("INTERVAL 30 MINUTES")),
-        "inner")
-    out = joined.select("user_id",
-                        F.unix_micros("click_ts").alias("click_us"),
-                        F.unix_micros("p_ts").alias("purchase_us"),
-                        "click_id", "purchase_id")
+        how)
+
+
+def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream interval join — a capability extension (the
+    reference has no stream-stream joins, SURVEY.md §2.5): each click
+    joined to the same user's purchases within the next 30 minutes.
+
+    Both sides carry a 1-hour watermark and the join condition bounds
+    event time on both ends, so the join state is EVICTABLE: a buffered
+    click can be dropped once the purchase-side watermark passes
+    click_ts + 30 min — state size is O(rate × window), not O(stream).
+    Inner joins emit eagerly on match, so the availableNow drain yields
+    the complete pair set (equals the batch interval join, which is
+    what the oracle checks)."""
+    out = _click_purchase_join(spark, sf_dir, "inner").select(
+        "user_id", F.unix_micros("click_ts").alias("click_us"),
+        F.unix_micros("p_ts").alias("purchase_us"), "click_id",
+        "purchase_id")
     return run_to_memory(out, "append") \
         .orderBy("user_id", "click_us", "purchase_us")
 
@@ -227,30 +234,10 @@ def stream_left_join_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     appear iff click_ts + 30 min < that watermark; unmatched clicks
     newer than it are legitimately still buffered when the drain
     stops, and asserting their absence asserts the contract."""
-    clicks = (stream_table(spark, sf_dir, "events")
-              .filter(F.col("event_type") == "click")
-              .select("user_id",
-                      F.col("ts").alias("click_ts"),
-                      F.col("event_id").alias("click_id"))
-              .withWatermark("click_ts", "1 hour"))
-    purchases = (stream_table(spark, sf_dir, "events")
-                 .filter(F.col("event_type") == "purchase")
-                 .select(F.col("user_id").alias("p_user"),
-                         F.col("ts").alias("p_ts"),
-                         F.col("event_id").alias("purchase_id"))
-                 .withWatermark("p_ts", "1 hour"))
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("click_ts"))
-        & (F.col("p_ts") <= F.col("click_ts")
-           + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer")
-    out = joined.select("user_id",
-                        F.unix_micros("click_ts").alias("click_us"),
-                        "click_id",
-                        F.unix_micros("p_ts").alias("purchase_us"),
-                        "purchase_id")
+    out = _click_purchase_join(spark, sf_dir, "left_outer").select(
+        "user_id", F.unix_micros("click_ts").alias("click_us"),
+        "click_id", F.unix_micros("p_ts").alias("purchase_us"),
+        "purchase_id")
     return (run_to_memory(out, "append")
             .orderBy("user_id", "click_us", "click_id",
                      F.asc_nulls_first("purchase_us")))

@@ -24,6 +24,7 @@ from typing import Iterator, Tuple
 import pandas as pd
 
 from ..arrow_guard import exact_longs
+from ..operators.dedup_rank import ranked_keep_first
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -105,11 +106,9 @@ def dedup_within_watermark(stream: DataFrame, keys: list[str],
 def latest_emission(df: DataFrame, key: str = "user_id",
                     monotone: str = "n") -> DataFrame:
     """W4 reconciliation for update-mode emissions: keep each key's row
-    with the highest monotone counter."""
-    from pyspark.sql import Window
-    w = Window.partitionBy(key).orderBy(F.col(monotone).desc())
-    return (df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1).drop("__rn"))
+    with the highest monotone counter (unique per key, so the ranking
+    needs no further tiebreak)."""
+    return ranked_keep_first(df, [key], [F.col(monotone).desc()])
 
 
 ANOMALY_STATE_SCHEMA = "vals array<bigint>"

@@ -39,9 +39,7 @@ a crash no key is in two live files.
 
 Each Copy-on-Write MERGE:
 
-1. reduces the incoming batch to one winner per key (``max_by`` — one
-   shuffle on the key, map-side partials);
-2. finds the partitions it must rewrite: where incoming rows land and
+1. finds the partitions it must rewrite: where incoming rows land and
    where a version of an incoming key lives now. Each base file has a
    sidecar fingerprint of its keys (the low 32 bits of their
    ``xxhash64``), the membership summary behind Hudi's
@@ -53,9 +51,12 @@ Each Copy-on-Write MERGE:
    4 bytes per key of every base file while it picks, and the first
    merge after a bulk write collects a pair per row it wrote. A hash
    collision only rewrites a partition that did not need it;
-3. re-merges the rows of those partitions with the batch and writes the
-   result as new files, each row under its new partition value;
-4. commits the new files in and the rewritten ones out, in one entry,
+2. unions the stored rows of those partitions with the raw batch and
+   keeps one winner per key in a single pass
+   (``operators.dedup_rank.latest_by_key``: one shuffle on the key, then
+   a sort-based ``max_by`` aggregate with map-side partials), and writes
+   the result as new files, each row under its new partition value;
+3. commits the new files in and the rewritten ones out, in one entry,
    merging again on a newer snapshot if a concurrent commit conflicts.
 
 So the per-batch cost scales with the partitions a batch touches, not
@@ -75,6 +76,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import tablelog
+from ..operators.dedup_rank import latest_by_key
 
 _DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
@@ -131,14 +133,6 @@ class UpsertTable:
         if self.retain_tombstones is None:
             return stored
         return self._live(stored).drop(self.TOMB_COL)
-
-    def _latest_wins(self, df: DataFrame) -> DataFrame:
-        ordering = F.struct(F.col(self.ordering_col),
-                            F.col(self.tiebreak_col))
-        others = [c for c in df.columns if c not in self.key_cols]
-        return (df.groupBy(*self.key_cols)
-                .agg(*[F.max_by(c, ordering).alias(c) for c in others])
-                .select(*df.columns))
 
     def _merged_state(self, merged: DataFrame,
                       merge_seq: int) -> DataFrame:
@@ -277,15 +271,16 @@ class UpsertTable:
         the same commit drops ``consumed`` (the Merge-on-Read deltas a
         compaction folds in)."""
         seq = snap.merge_seq + 1
-        incoming = self._latest_wins(batch)
-        if self.retain_tombstones is not None:
-            incoming = self._with_tomb(incoming)
         touched, fingerprints = self._touched(snap, batch, seq)
-        if touched:
-            affected = tablelog.read(batch.sparkSession, self.path, snap,
-                                     touched).select(*incoming.columns)
-            incoming = self._latest_wins(affected.unionByName(incoming))
-        live = self._merged_state(incoming, seq)
+        if self.retain_tombstones is not None:
+            batch = self._with_tomb(batch)
+        rows = batch
+        if touched:  # one latest-wins pass over stored and incoming rows
+            rows = tablelog.read(batch.sparkSession, self.path, snap,
+                                 touched).select(*batch.columns) \
+                .unionByName(batch)
+        live = self._merged_state(latest_by_key(
+            rows, self.key_cols, self.ordering_col, self.tiebreak_col), seq)
         schema, p = live.schema, self.partition_by
         if p:  # the partition column reads back from the directory, last
             schema = T.StructType([f for f in schema if f.name != p]
@@ -368,7 +363,7 @@ class MergeOnReadTable:
     deltas are small beside the base, so ``_rt`` broadcasts their key
     set: base rows no delta touches stream through an anti join with
     no shuffle, and only the affected rows and the deltas meet in the
-    latest-wins window.
+    latest-wins aggregate.
     """
 
     LOG_COL = "_delta"
@@ -453,7 +448,9 @@ class MergeOnReadTable:
         keys = F.broadcast(log.select(*self.key_cols).distinct())
         untouched = base.join(keys, self.key_cols, "left_anti")
         affected = base.join(keys, self.key_cols, "left_semi")
-        merged = self.base._latest_wins(affected.unionByName(log))
+        merged = latest_by_key(affected.unionByName(log), self.key_cols,
+                               self.base.ordering_col,
+                               self.base.tiebreak_col)
         if self.base.retain_tombstones is not None:
             # untouched STORED rows can be retained tombstones: the
             # live filter covers both branches (the hard-delete base

@@ -6,6 +6,7 @@ gone: a stage is written once and published by one rename, see
 ``catalog._stream_dir`` and ``tests/test_multibatch.py``.)"""
 
 import os
+import re
 
 import duckdb
 import pytest
@@ -48,7 +49,8 @@ def test_upsert_merge_high_cardinality_partitions_no_literal_list(
     into a 10k-partition table and verify update / cross-partition
     move / vacating delete semantics, that the commit swaps only the
     touched partitions' files, and the plan shape of the written frame
-    (no literal partition list, no partition VALUES)."""
+    (no literal partition list, no partition VALUES, and one latest-wins
+    aggregate over the stored rows and the raw batch together)."""
     import pandas as pd
 
     from kafka_connect_msk_demo_spark import tablelog
@@ -85,6 +87,9 @@ def test_upsert_merge_high_cardinality_partitions_no_literal_list(
     [plan] = plans
     assert " IN (" not in plan, "literal partition list leaked back"
     assert "p00005" not in plan, "partition VALUES embedded in plan"
+    # one latest-wins pass: the batch is not reduced on its own first
+    aggs = re.findall(r"^[\s:|+-]*Aggregate \[", plan, re.M)
+    assert len(aggs) == 1, f"{len(aggs)} aggregates in the merge:\n{plan}"
 
     # the commit swapped only the touched partitions' files: where rows
     # land, the moved key's old partition and the deleted key's

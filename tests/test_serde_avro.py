@@ -156,7 +156,7 @@ def test_avro_schema_resolution_block():
     import pandas as pd
 
     from kafka_connect_msk_demo_spark.serde import (
-        avro_decode_block_resolved, avro_encode_rows)
+        avro_decode_block, avro_encode_rows)
 
     writer = """
     {"type":"record","name":"v1","fields":[
@@ -174,7 +174,7 @@ def test_avro_schema_resolution_block():
     rows = pd.DataFrame({"id": [1, 2], "name": ["a", "b"],
                          "val": [2.5, None]})
     body = b"".join(avro_encode_rows(rows, writer))
-    out = avro_decode_block_resolved(body, 2, writer, reader)
+    out = avro_decode_block(body, 2, writer, reader)
     assert list(out.columns) == ["id", "val", "score", "tag"]
     assert list(out["id"]) == [1, 2]            # int -> long
     assert out["val"][0] == 2.5 and out["val"][1] is None
@@ -252,7 +252,7 @@ def test_schema_resolution_randomized_evolutions():
     import pandas as pd
 
     from kafka_connect_msk_demo_spark.serde import (
-        avro_decode_block_resolved, avro_encode_rows)
+        avro_decode_block, avro_encode_rows)
 
     PRIMS = ["int", "long", "double", "string", "boolean", "bytes"]
     PROMOS = {"int": ["long", "double"], "long": ["double"],
@@ -345,9 +345,9 @@ def test_schema_resolution_randomized_evolutions():
         blobs = avro_encode_rows(pdf, json.dumps(writer))
         body = b"".join(blobs)
 
-        got = avro_decode_block_resolved(body, n_rows,
-                                         json.dumps(writer),
-                                         json.dumps(reader))
+        got = avro_decode_block(body, n_rows,
+                                json.dumps(writer),
+                                json.dumps(reader))
         assert list(got.columns) == [f["name"] for f in r_fields], seed
         for n, w_t, r_t in kept:
             want = [promote(v, w_t, r_t) for v in rows[n]]
