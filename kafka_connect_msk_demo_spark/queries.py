@@ -17,6 +17,12 @@ Cross-engine determinism rules used throughout (see operators/aggregates.py):
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -812,13 +818,31 @@ FROM events
 """
 
 
+@functools.cache
+def _scratch_root(pid: int) -> str:
+    root = tempfile.mkdtemp(prefix="registry_scratch_")
+    atexit.register(_remove_scratch, root, pid)
+    return root
+
+
+def _remove_scratch(root: str, pid: int) -> None:
+    if os.getpid() == pid:  # a forked child inherits the exit hook
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh directory for a registry query's staged inputs, under
+    one root per process that is removed when the interpreter exits:
+    the frames the query returns read those files lazily, so they
+    cannot go any sooner."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root(os.getpid()))
+
+
 def q_csv_dim_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1/S9 (01:46-48 seed shape): the region dim written to and
     re-read from pipe-separated CSV with an explicit schema (never
     inferred), then used to enrich the sales aggregation — proving the
     engine can seed from the reference's own CSV data shape."""
-    import tempfile
-
     from pyspark.sql import types as T
 
     from .sources.files import read_csv, write_csv
@@ -828,7 +852,7 @@ def q_csv_dim_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
                             F.col("n_regionkey") == F.col("r_regionkey"))
            .select(F.col("n_nationkey").cast("long").alias("nationkey"),
                    F.col("r_name").alias("region")))
-    csv_dir = tempfile.mkdtemp(prefix="csv_dim_")
+    csv_dir = _scratch_dir("csv_dim_")
     write_csv(dim, csv_dir, sep="|", single_file=True)
     dim_schema = T.StructType([
         T.StructField("nationkey", T.LongType(), False),
@@ -856,14 +880,12 @@ def q_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r13: orders spread (guide §2.5) — the Avro encode kernel otherwise
     runs as ONE Python worker on the single-row-group testdata."""
-    import tempfile
-
     from .catalog import struct_to_avro_json
     from .sources.files import read_avro, write_avro
 
     orders = load_table(spark, sf_dir, "orders", spread=True)
     avro_json = struct_to_avro_json("orders", orders.schema)
-    avro_dir = tempfile.mkdtemp(prefix="avro_rt_")
+    avro_dir = _scratch_dir("avro_rt_")
     write_avro(orders, avro_dir, avro_json)
     back = read_avro(spark, avro_dir, avro_json, orders.schema)
     return back.select(
@@ -917,14 +939,13 @@ def q_avro_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cdc_stream(spark: SparkSession, sf_dir: str, prefix: str,
                 files_per_phase: int = 1) -> tuple[str, DataFrame]:
     """``(base, stream)``: the Debezium envelope feed over ``orders``
-    (sources/cdc.py) staged in a fresh temporary directory ``base``,
-    read one file per micro-batch and unwrapped (P11)."""
-    import tempfile
-
+    (sources/cdc.py) staged in a fresh scratch directory ``base``
+    (:func:`_scratch_dir`), read one file per micro-batch and unwrapped
+    (P11)."""
     from .sources.cdc import write_envelope_stream_dir
     from .transforms import cdc_unwrap
 
-    base = tempfile.mkdtemp(prefix=prefix)
+    base = _scratch_dir(prefix)
     env_dir = f"{base}/envelope"
     write_envelope_stream_dir(spark, sf_dir, env_dir, files_per_phase)
     stream = (spark.readStream.schema(spark.read.parquet(env_dir).schema)

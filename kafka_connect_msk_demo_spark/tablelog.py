@@ -30,7 +30,8 @@ lookup reads sidecars.
 Commit order:
 
 1. :func:`write` has Spark write the new files into a staging directory
-   of their own, then moves them into the table directory.
+   of their own, then moves them into the table directory (again when
+   a concurrent commit removes an emptied directory meanwhile).
 2. :func:`commit` puts the next entry in place under the next version's
    name, never over an existing entry. That is the commit point.
 3. Then the files the new version dropped are deleted, with their
@@ -44,17 +45,29 @@ moves onto the newest one if the two cannot conflict (:func:`_rebases`)
 The publish step is atomic on the local file system and HDFS; an
 object store such as s3a lacks a no-replace rename, so there a table
 takes one writer at a time.
+
+All file I/O goes through one handle per table root, which :func:`_fs`
+alone picks from the root's qualified URI: :class:`_LocalFS` (``os``)
+on the local disk, where a py4j round trip per file costs more than
+the I/O, and :class:`_HadoopFS` elsewhere. The rules are written once
+against it: the move again in :func:`write`, the temp file put in place
+by :func:`_put` (an entry never over a file, a sidecar over a damaged
+one) and the empty-only directory removal in :func:`_delete`. Only the
+moves in :func:`write` and the first publish make directories, so a
+sidecar whose directory a concurrent commit removed is not written.
 """
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import os
 import re
+import shutil
+import threading
 import uuid
 from dataclasses import dataclass
-from urllib.parse import unquote, urlparse
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -65,6 +78,9 @@ _ENTRY = re.compile(r"(\d+)\.json")
 #: Spark lists more than this many paths with a distributed job; a log
 #: read names its files, so it raises the threshold above their count
 _DISCOVERY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+#: held from the raise to the restore, so that concurrent reads in one
+#: session cannot restore each other's raised value
+_DISCOVERY_LOCK = threading.Lock()
 
 
 class Conflict(RuntimeError):
@@ -97,58 +113,152 @@ class Snapshot:
         return [f for f in self.files if f["kind"] == kind]
 
 
-def _fs(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+class _LocalFS:
+    """A table root on the local disk, through ``os``; paths are
+    relative to it. What is gone reads and deletes as nothing, and so
+    does a directory not empty unless ``recursive``. ``write`` needs
+    the directory; ``place`` makes it and says whether the file went
+    in, over a file only with ``replace``."""
+
+    def __init__(self, root: str):
+        self.root = root
+
+    def _p(self, rel: str) -> str:
+        return os.path.join(self.root, rel)
+
+    def listdir(self, rel: str) -> list[str]:
+        try:
+            return os.listdir(self._p(rel))
+        except FileNotFoundError:
+            return []
+
+    def size(self, rel: str) -> int:
+        return os.path.getsize(self._p(rel))
+
+    def read(self, rel: str) -> bytes | None:
+        try:
+            with open(self._p(rel), "rb") as fh:
+                return fh.read()
+        except FileNotFoundError:
+            return None
+
+    def write(self, rel: str, data: bytes) -> None:
+        with open(self._p(rel), "wb") as fh:
+            fh.write(data)
+
+    def mkdirs(self, rel: str) -> None:
+        os.makedirs(self._p(rel), exist_ok=True)
+
+    def place(self, src: str, dst: str, replace: bool) -> bool:
+        self.mkdirs(os.path.dirname(dst))
+        try:  # rename(2) replaces a file, a link never does
+            (os.replace if replace else os.link)(self._p(src), self._p(dst))
+        except (FileExistsError, FileNotFoundError):
+            return False
+        return True
+
+    def delete(self, rel: str, recursive: bool = False) -> None:
+        p = self._p(rel)
+        if recursive:
+            shutil.rmtree(p, ignore_errors=True)
+        elif os.path.isdir(p):
+            with contextlib.suppress(OSError):  # fails when not empty
+                os.rmdir(p)
+        else:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(p)
 
 
-def _path(uri: str) -> str:
-    """The decoded path of a file URI (``file:/x`` or ``file:///x``)."""
-    return unquote(urlparse(uri).path)
+def _missing(exc: Py4JJavaError) -> bool:
+    return "FileNotFoundException" in str(exc.java_exception)
 
 
-def _local(fs, jpath) -> str | None:
-    """``jpath`` on the local disk, or None on another file system."""
-    uri = fs.makeQualified(jpath).toUri()
-    return uri.getPath() if uri.getScheme() == "file" else None
+class _HadoopFS:
+    """A table root through the Hadoop FileSystem API, as on HDFS: the
+    primitives of :class:`_LocalFS`."""
 
+    def __init__(self, spark: SparkSession, root: str):
+        self._jvm, self.root = spark._jvm, root
+        jpath = self._jvm.org.apache.hadoop.fs.Path(root)
+        self._fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        self._root = self._fs.makeQualified(jpath)
 
-def _versions(fs, log) -> list[int]:
-    return sorted(int(m.group(1)) for st in fs.listStatus(log)
-                  if (m := _ENTRY.fullmatch(st.getPath().getName()))) \
-        if fs.exists(log) else []
+    def _p(self, rel: str):
+        return self._jvm.org.apache.hadoop.fs.Path(self._root, rel)
 
+    def listdir(self, rel: str) -> list[str]:
+        if not self._fs.exists(self._p(rel)):  # the log and the stage
+            return []  # are never removed while they are listed
+        return [st.getPath().getName()
+                for st in self._fs.listStatus(self._p(rel))]
 
-def _read(spark: SparkSession, fs, jpath) -> bytes | None:
-    """The bytes of the file at ``jpath``, or None when it is gone."""
-    try:
-        stream = fs.open(jpath)
-    except Py4JJavaError as exc:
-        if "FileNotFoundException" not in str(exc.java_exception):
+    def size(self, rel: str) -> int:
+        return self._fs.getFileStatus(self._p(rel)).getLen()
+
+    def read(self, rel: str) -> bytes | None:
+        try:
+            stream = self._fs.open(self._p(rel))
+        except Py4JJavaError as exc:
+            if _missing(exc):
+                return None
             raise
-        return None
-    try:
-        return bytes(spark._jvm.org.apache.commons.io.IOUtils
-                     .toByteArray(stream))
-    finally:
-        stream.close()
+        try:
+            return bytes(self._jvm.org.apache.commons.io.IOUtils
+                         .toByteArray(stream))
+        finally:
+            stream.close()
+
+    def write(self, rel: str, data: bytes) -> None:
+        try:  # a builder's create makes no directory
+            out = self._fs.createFile(self._p(rel)).overwrite(True).build()
+        except Py4JJavaError as exc:
+            raise FileNotFoundError(rel) if _missing(exc) else exc
+        try:
+            out.write(bytearray(data))
+        finally:
+            out.close()
+
+    def mkdirs(self, rel: str) -> None:
+        self._fs.mkdirs(self._p(rel))
+
+    def place(self, src: str, dst: str, replace: bool) -> bool:
+        jsrc, jdst = self._p(src), self._p(dst)
+        self._fs.mkdirs(jdst.getParent())
+        # an HDFS rename onto an existing file fails, atomically
+        won = self._fs.rename(jsrc, jdst)
+        if not won and replace:
+            self._fs.delete(jdst, False)
+            won = self._fs.rename(jsrc, jdst)
+        return won
+
+    def delete(self, rel: str, recursive: bool = False) -> None:
+        with contextlib.suppress(Py4JJavaError):  # fails when not empty
+            self._fs.delete(self._p(rel), recursive)
 
 
-def _create(fs, jpath, data: bytes) -> None:
-    """Write ``data`` as the file at ``jpath``, replacing one there."""
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(data))
-    finally:
-        out.close()
+def _fs(spark: SparkSession, root: str) -> _LocalFS | _HadoopFS:
+    """The file handle of the table at ``root``: :class:`_LocalFS` when
+    the root's qualified URI is a ``file`` one, else :class:`_HadoopFS`.
+    The only place that tells the two apart."""
+    fs = _HadoopFS(spark, root)
+    uri = fs._root.toUri()
+    return _LocalFS(uri.getPath()) if uri.getScheme() == "file" else fs
+
+
+def _entry(version: int) -> str:
+    return f"{LOG_DIR}/{version:010d}.json"
+
+
+def _versions(fs) -> list[int]:
+    return sorted(int(m.group(1)) for name in fs.listdir(LOG_DIR)
+                  if (m := _ENTRY.fullmatch(name)))
 
 
 def snapshot(spark: SparkSession, root: str) -> Snapshot:
     """The newest committed version of the table at ``root``."""
-    fs, log = _fs(spark, f"{root}/{LOG_DIR}")
-    while versions := _versions(fs, log):
-        data = _read(spark, fs, spark._jvm.org.apache.hadoop.fs.Path(
-            log, f"{versions[-1]:010d}.json"))
+    fs = _fs(spark, root)
+    while versions := _versions(fs):
+        data = fs.read(_entry(versions[-1]))
         if data is None:  # pruned since the listing
             continue
         entry = json.loads(data)
@@ -158,6 +268,19 @@ def snapshot(spark: SparkSession, root: str) -> Snapshot:
     return Snapshot()
 
 
+def _put(fs, rel: str, data: bytes, replace: bool = False) -> bool:
+    """Write ``data`` to a temp file beside ``rel`` and put it in place
+    as ``rel``, so that no reader sees it half written; whether it went
+    in. Over an existing file only with ``replace``: a log entry never
+    replaces one, a sidecar replaces a damaged one."""
+    tmp = f"{rel}.{uuid.uuid4().hex}.tmp"
+    fs.write(tmp, data)
+    try:
+        return fs.place(tmp, rel, replace)
+    finally:
+        fs.delete(tmp)
+
+
 def write(df: DataFrame, root: str, partition_by: str | None, kind: str,
           commit: str, fmt: str = "parquet") -> list[dict]:
     """Append ``df`` as new files under ``root`` and return their log
@@ -165,48 +288,29 @@ def write(df: DataFrame, root: str, partition_by: str | None, kind: str,
     writing into one directory would share its ``_temporary`` — and the
     files move into the table directory. ``<name>``,
     ``<commit>-<attempt>``, starts every file name."""
-    spark = df.sparkSession
     name = f"{commit}-{uuid.uuid4().hex[:8]}"
-    stage = f"{root}/_staging/{name}"
+    stage = f"_staging/{name}"
     w = df.write.option("mapreduce.output.basename", name)
     if partition_by:
         w = w.partitionBy(partition_by)
-    w.format(fmt).save(stage)
-    fs, jstage = _fs(spark, stage)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    out, local = [], _local(fs, jstage)
-    if local is not None:  # py4j round trips per file cost more than os
-        dst = _local(fs, Path(root))
-        for d, _, names in os.walk(local):
-            for rel in (os.path.relpath(os.path.join(d, n), local)
-                        for n in names if n.startswith(name)):
-                out.append((rel, os.path.getsize(os.path.join(local, rel))))
-                _rename(os.path.join(local, rel), os.path.join(dst, rel))
-    else:
-        prefix = _path(fs.makeQualified(jstage).toUri().toString()) + "/"
-        for st in fs.globStatus(Path(f"{stage}/*/{name}-*" if partition_by
-                                     else f"{stage}/{name}-*")) or []:
-            rel = _path(st.getPath().toUri().toString())[len(prefix):]
-            fs.mkdirs(Path(f"{root}/{rel}").getParent())
-            if not fs.rename(st.getPath(), Path(f"{root}/{rel}")):
-                raise OSError(f"{root}: cannot move {rel} into the table")
-            out.append((rel, st.getLen()))
-    fs.delete(jstage, True)
-    return sorted(({"path": rel, "partition": rel.rpartition("/")[0],
-                    "kind": kind, "commit": commit, "size": size}
-                   for rel, size in out), key=lambda f: f["path"])
-
-
-def _rename(src: str, dst: str) -> None:
-    """Move local file ``src`` to ``dst``, again if a concurrent commit
-    removes the emptied directory meanwhile (:func:`_delete`)."""
-    while True:
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        try:
-            return os.rename(src, dst)
-        except FileNotFoundError:
-            if not os.path.exists(src):
-                raise
+    w.format(fmt).save(f"{root}/{stage}")
+    fs, out = _fs(df.sparkSession, root), []
+    for part in ([d for d in fs.listdir(stage) if "=" in d]  # col=value
+                 if partition_by else [""]):
+        for n in fs.listdir(f"{stage}/{part}"):
+            if not n.startswith(name):
+                continue
+            rel = f"{part}/{n}".lstrip("/")
+            size = fs.size(f"{stage}/{rel}")
+            # again if a concurrent commit removes the emptied
+            # directory meanwhile (_delete)
+            while not fs.place(f"{stage}/{rel}", rel, True):
+                if n not in fs.listdir(f"{stage}/{part}"):
+                    raise FileNotFoundError(f"{root}: {stage}/{rel} is gone")
+            out.append({"path": rel, "partition": part, "kind": kind,
+                        "commit": commit, "size": size})
+    fs.delete(stage, recursive=True)
+    return sorted(out, key=lambda f: f["path"])
 
 
 def commit(spark: SparkSession, root: str, prev: Snapshot, add=(),
@@ -221,19 +325,20 @@ def commit(spark: SparkSession, root: str, prev: Snapshot, add=(),
     published first, move onto the newest version when
     :func:`_rebases` allows it; otherwise delete ``add`` and raise
     :class:`Conflict`."""
-    gone, notes = {f["path"] for f in drop}, notes or {}
+    fs, gone = _fs(spark, root), {f["path"] for f in drop}
+    notes = notes or {}
     while True:
         new = Snapshot(prev.version + 1, schema or prev.schema,
                        prev.merge_seq if merge_seq is None else merge_seq,
                        tuple({**f, **notes.get(f["path"], {})}
                              for f in prev.files if f["path"] not in gone)
                        + tuple(add))
-        if _publish(spark, root, new):
-            _delete(spark, root, prev, new)
+        if _publish(fs, new):
+            _delete(fs, prev, new)
             return new
         cur = snapshot(spark, root)
         if not _rebases(prev, cur, add, drop):
-            _delete(spark, root, Snapshot(files=tuple(add)), Snapshot())
+            _delete(fs, Snapshot(files=tuple(add)), Snapshot())
             raise Conflict(f"{root}: a concurrent commit changed what "
                            f"version {new.version} read or drops")
         prev = cur
@@ -253,69 +358,46 @@ def _rebases(prev: Snapshot, cur: Snapshot, add, drop) -> bool:
             == (prev.merge_seq, {f["path"] for f in prev.of("base")}))
 
 
-def _publish(spark: SparkSession, root: str, snap: Snapshot) -> bool:
-    """Put ``snap``'s entry in place, then prune the entries before the
-    previous one; False when its version is taken. Never over an
-    existing entry: a local entry is linked (rename(2) would replace),
-    and an HDFS rename onto an existing file fails, atomically."""
-    fs, log = _fs(spark, f"{root}/{LOG_DIR}")
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    dst = Path(log, f"{snap.version:010d}.json")
-    tmp = Path(log, f".{snap.version:010d}.{uuid.uuid4().hex}.tmp")
-    _create(fs, tmp, json.dumps({
-        "version": snap.version, "schema": snap.schema.jsonValue(),
-        "merge_seq": snap.merge_seq, "files": list(snap.files)})
-        .encode("utf-8"))
-    try:
-        if _versions(fs, log)[-1:] >= [snap.version]:
-            return False
-        if (local := _local(fs, dst)) is None:
-            if not fs.rename(tmp, dst):
-                return False
-        else:
-            try:
-                os.link(_local(fs, tmp), local)
-            except FileExistsError:
-                return False
-    finally:
-        fs.delete(tmp, False)
-    versions = _versions(fs, log)
+def _publish(fs, snap: Snapshot) -> bool:
+    """Put ``snap``'s entry in place, never over an existing entry,
+    then prune the entries before the previous one; False when its
+    version is taken."""
+    if not (versions := _versions(fs)):
+        fs.mkdirs(LOG_DIR)
+    elif versions[-1] >= snap.version:
+        return False
+    if not _put(fs, _entry(snap.version), json.dumps({
+            "version": snap.version, "schema": snap.schema.jsonValue(),
+            "merge_seq": snap.merge_seq, "files": list(snap.files)})
+            .encode("utf-8")):
+        return False
+    versions = _versions(fs)
     if versions[-1] > snap.version + 1:
         # two more versions already: this version may have been taken
-        # and pruned before the link, and successors built on another
+        # and pruned before the put, and successors built on another
         # entry. Keep every file and start again (operations are
         # idempotent).
-        raise Conflict(f"{root}: version {snap.version} was overtaken")
+        raise Conflict(f"{fs.root}: version {snap.version} was overtaken")
     for v in versions:
         if v < snap.version - 1:
-            fs.delete(Path(log, f"{v:010d}.json"), False)
+            fs.delete(_entry(v))
     return True
 
 
-def _delete(spark: SparkSession, root: str, old: Snapshot,
-            new: Snapshot) -> None:
+def _delete(fs, old: Snapshot, new: Snapshot) -> None:
     """Delete the files ``old`` had and ``new`` dropped, then each
     partition directory that left empty — only if empty, because
     another writer may be moving files into it."""
-    fs, _ = _fs(spark, root)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
     live = {f["path"] for f in new.files}
     gone = [f for f in old.files if f["path"] not in live]
     for f in gone:
-        fs.delete(Path(f"{root}/{f['path']}"), False)
+        fs.delete(f["path"])
         if f["kind"] == "base":  # recorded or not: a writer whose
             # commit lost may have written one
-            fs.delete(Path(f"{root}/{_sidecar(f['path'])}"), False)
+            fs.delete(_sidecar(f["path"]))
     for part in ({f["partition"] for f in gone} - {""}
                  - {f["partition"] for f in new.files}):
-        jpart = Path(f"{root}/{part}")
-        try:  # both fail, atomically, on a directory that is not empty
-            if (local := _local(fs, jpart)) is None:
-                fs.delete(jpart, False)
-            else:
-                os.rmdir(local)
-        except (OSError, Py4JJavaError):
-            pass
+        fs.delete(part)  # only if empty
 
 
 def _sidecar(path: str) -> str:
@@ -326,49 +408,22 @@ def _sidecar(path: str) -> str:
 def write_sidecars(spark: SparkSession, root: str,
                    sidecars: dict[str, bytes]) -> None:
     """Give each data file (relative path, as its record names it) its
-    sidecar. The content must follow from the data file alone: two
-    writers may race to write one, and the one that loses the rename
-    leaves the same bytes in place. On the local disk, sidecars are
-    read and written with os: a merge handles hundreds, and per-file
-    py4j round trips cost more."""
-    fs, jroot = _fs(spark, root)
-    local = _local(fs, jroot)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
+    sidecar, replacing a damaged one. The content must follow from the
+    data file alone: two writers may race to write one, and the one
+    that puts it in place last leaves the same bytes."""
+    fs = _fs(spark, root)
     for path, data in sidecars.items():
-        tmp = f"{_sidecar(path)}.{uuid.uuid4().hex}.tmp"
-        if local is not None:
-            try:
-                with open(os.path.join(local, tmp), "wb") as fh:
-                    fh.write(data)
-                os.replace(os.path.join(local, tmp),
-                           os.path.join(local, _sidecar(path)))
-            except FileNotFoundError:  # a concurrent commit dropped the
-                pass  # file and its directory: this commit will conflict
-            continue
-        _create(fs, Path(jroot, tmp), data)
         try:
-            fs.rename(Path(jroot, tmp), Path(jroot, _sidecar(path)))
-        finally:
-            fs.delete(Path(jroot, tmp), False)
+            _put(fs, _sidecar(path), data, replace=True)
+        except FileNotFoundError:  # a concurrent commit dropped the
+            pass  # file and its directory: this commit will conflict
 
 
 def read_sidecars(spark: SparkSession, root: str,
                   paths) -> dict[str, bytes | None]:
     """Each data file's sidecar, None for one it has not."""
-    fs, jroot = _fs(spark, root)
-    local = _local(fs, jroot)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    out = {}
-    for path in paths:
-        if local is None:
-            out[path] = _read(spark, fs, Path(jroot, _sidecar(path)))
-            continue
-        try:
-            with open(os.path.join(local, _sidecar(path)), "rb") as fh:
-                out[path] = fh.read()
-        except FileNotFoundError:
-            out[path] = None
-    return out
+    fs = _fs(spark, root)
+    return {path: fs.read(_sidecar(path)) for path in paths}
 
 
 def read(spark: SparkSession, root: str, snap: Snapshot, files,
@@ -380,11 +435,12 @@ def read(spark: SparkSession, root: str, snap: Snapshot, files,
     schema = schema or snap.schema
     if not files:
         return spark.createDataFrame([], schema)
-    prev = spark.conf.get(_DISCOVERY)
-    spark.conf.set(_DISCOVERY, str(len(files) + 1))
-    try:
-        return (spark.read.format(fmt).schema(schema)
-                .option("basePath", root)
-                .load([f"{root}/{f['path']}" for f in files]))
-    finally:
-        spark.conf.set(_DISCOVERY, prev)
+    with _DISCOVERY_LOCK:
+        prev = spark.conf.get(_DISCOVERY)
+        spark.conf.set(_DISCOVERY, str(len(files) + 1))
+        try:
+            return (spark.read.format(fmt).schema(schema)
+                    .option("basePath", root)
+                    .load([f"{root}/{f['path']}" for f in files]))
+        finally:
+            spark.conf.set(_DISCOVERY, prev)

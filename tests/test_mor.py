@@ -91,6 +91,14 @@ def test_compact_folds_log_and_drains_it(spark, tmp_path):
     assert not (tmp_path / "t" / "part=b").exists()
 
 
+def test_compact_through_the_hadoop_api(spark, tmp_path, monkeypatch):
+    """The same appends, ``_rt`` read and compaction with the Hadoop
+    handle chosen for the local table, as on HDFS: delta files are
+    written, published and deleted through the Hadoop FileSystem API."""
+    monkeypatch.setattr(tablelog, "_fs", tablelog._HadoopFS)
+    test_compact_folds_log_and_drains_it(spark, tmp_path)
+
+
 def test_rt_matches_cow_same_feed(spark, tmp_path):
     """The core MoR contract: _rt state ≡ CoW table state after the
     same ordered CDC feed (updates, delete, cross-partition move,

@@ -18,10 +18,12 @@ and the table's file count stay bounded.
 
 import dataclasses
 import os
+import sys
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark.sql import types as T
 
 from kafka_connect_msk_demo_spark import tablelog
 from kafka_connect_msk_demo_spark.sources.files import (manifest_commit,
@@ -207,8 +209,8 @@ def test_racing_publishes_of_one_version_one_wins(spark, tmp_path,
     manifest_commit(spark.range(3), root, "c-1")
     snap = tablelog.snapshot(spark, root)
     real = tablelog._versions
-    monkeypatch.setattr(tablelog, "_versions", lambda fs, log: [
-        v for v in real(fs, log) if v <= snap.version])
+    monkeypatch.setattr(tablelog, "_versions", lambda fs: [
+        v for v in real(fs) if v <= snap.version])
     racers = [dataclasses.replace(snap, version=snap.version + 1, files=(
         {"path": f"w{i}", "partition": "", "kind": "base",
          "commit": f"w{i}", "size": 0},)) for i in range(8)]
@@ -216,7 +218,7 @@ def test_racing_publishes_of_one_version_one_wins(spark, tmp_path,
 
     def publish(entry):
         start.wait()
-        return tablelog._publish(spark, root, entry)
+        return tablelog._publish(tablelog._fs(spark, root), entry)
 
     with ThreadPoolExecutor(len(racers)) as pool:
         won = list(pool.map(publish, racers))
@@ -239,9 +241,9 @@ def test_overtaken_publish_is_a_conflict(spark, tmp_path, monkeypatch):
     real = tablelog._versions
     seen = []
 
-    def miss_the_first_listing(fs, log):
+    def miss_the_first_listing(fs):
         seen.append(1)
-        return [] if len(seen) == 1 else real(fs, log)
+        return [] if len(seen) == 1 else real(fs)
 
     monkeypatch.setattr(tablelog, "_versions", miss_the_first_listing)
     with pytest.raises(tablelog.Conflict, match="overtaken"):
@@ -338,3 +340,100 @@ def test_log_and_files_stay_bounded(spark, tmp_path):
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert max(counts) <= 3 * shuffle, counts
     assert t.read(spark).count() == 31
+
+
+def test_local_table_makes_no_hadoop_file_system_call(spark, tmp_path,
+                                                      monkeypatch):
+    """Once the handle of a local table is chosen, a merge's snapshot,
+    sidecar reads and writes, file moves, publish and delete all go
+    through os: no call reaches the Hadoop FileSystem handle."""
+    root = str(tmp_path / "t")
+    t = UpsertTable(root, ["id"], "ts", "seq", partition_by="part")
+    _seed(spark, t, t.merge_batch)
+    assert any("keys" in f for f in tablelog.snapshot(spark, root).files)
+
+    def hadoop(*_):
+        raise AssertionError("a Hadoop FileSystem call on the local disk")
+
+    with monkeypatch.context() as m:
+        for name in vars(tablelog._HadoopFS):
+            if not name.startswith("__"):
+                m.setattr(tablelog._HadoopFS, name, hadoop)
+        t.merge_batch(_batch(spark, _MOVE), 2)
+        snap = tablelog.snapshot(spark, root)
+    assert snap.version == 2
+    assert set(_rows(t.read(spark))) == _NEW
+    assert not (tmp_path / "t" / "part=a").exists()
+
+
+def test_concurrent_reads_restore_the_discovery_threshold(spark, tmp_path):
+    """A read raises Spark's parallel-discovery threshold for one load;
+    reads from several threads at once leave the session's value as it
+    was before them."""
+    root = str(tmp_path / "t")
+    manifest_commit(spark.range(0, 8, numPartitions=4), root, "c-1")
+    snap = tablelog.snapshot(spark, root)
+    assert len(snap.files) > 1
+    before = spark.conf.get(tablelog._DISCOVERY)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            reads = [pool.submit(tablelog.read, spark, root, snap,
+                                 snap.files[:1 + i % len(snap.files)])
+                     for i in range(64)]
+            for r in reads:
+                r.result(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert spark.conf.get(tablelog._DISCOVERY) == before
+
+
+def test_log_listing_survives_concurrent_publishes(tmp_path):
+    """Publishing writes and removes a temp entry and prunes old ones.
+    A reader listing the log meanwhile always finds an entry: a name
+    that goes between the listing and its use drops out alone."""
+    fs = tablelog._LocalFS(str(tmp_path))
+    snap = tablelog.Snapshot(0, T.StructType([]), -1, ())
+    assert tablelog._publish(fs, snap)
+    done, empty, won = threading.Event(), [], []
+
+    def publish():
+        try:
+            for v in range(1, 400):
+                won.append(tablelog._publish(
+                    fs, dataclasses.replace(snap, version=v)))
+        finally:
+            done.set()
+
+    writer = threading.Thread(target=publish)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        writer.start()
+        while not done.is_set():
+            if not tablelog._versions(fs):
+                empty.append(1)
+        writer.join()
+    finally:
+        sys.setswitchinterval(switch)
+    assert not empty, f"{len(empty)} listings of the log came back empty"
+    assert won == [True] * 399
+    assert tablelog._versions(fs) == [398, 399]
+
+
+@pytest.mark.parametrize("hadoop", [False, True])
+def test_sidecar_of_a_removed_directory_is_skipped(spark, tmp_path,
+                                                   monkeypatch, hadoop):
+    """A concurrent commit that dropped a data file may have removed its
+    partition directory: its sidecar is then not written, and the
+    directory does not come back. On either handle."""
+    if hadoop:
+        monkeypatch.setattr(tablelog, "_fs", tablelog._HadoopFS)
+    root = tmp_path / "t"
+    (root / "part=a").mkdir(parents=True)
+    tablelog.write_sidecars(spark, str(root), {"part=a/f.parquet": b"1234",
+                                               "part=b/g.parquet": b"5678"})
+    assert (root / "part=a" / ".f.parquet.keys").read_bytes() == b"1234"
+    assert not any(n.endswith(".tmp") for n in os.listdir(root / "part=a"))
+    assert not (root / "part=b").exists()

@@ -524,10 +524,10 @@ def test_numeric_partition_values_keep_one_file(spark, tmp_path, stored,
 
 
 def test_lookup_through_the_hadoop_api(spark, tmp_path, monkeypatch):
-    """With the local-disk shortcuts off, the table log and the sidecars
-    go through the Hadoop FileSystem API, as on HDFS: the same rows,
-    partitions and sidecars."""
-    monkeypatch.setattr(tablelog, "_local", lambda fs, jpath: None)
+    """With the Hadoop handle chosen for a local table, the table log
+    and the sidecars go through the Hadoop FileSystem API, as on HDFS:
+    the same rows, partitions and sidecars."""
+    monkeypatch.setattr(tablelog, "_fs", tablelog._HadoopFS)
     t = _table(tmp_path / "t", partition_by="part")
     t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
                                  (2, "b", "v1", 10, 0, "false"),
