@@ -55,7 +55,15 @@ Each Copy-on-Write MERGE:
    keeps one winner per key in a single pass
    (``operators.dedup_rank.latest_by_key``: one shuffle on the key, then
    a sort-based ``max_by`` aggregate with map-side partials), and writes
-   the result as new files, each row under its new partition value;
+   the result as new files, each row under its new partition value.
+   A merge that rewrites no stored rows is a bulk insert (the
+   bootstrap, or rows landing only in new partitions): its result is
+   rebalanced on the partition column first, so each directory gets
+   one file instead of one per shuffle task, and AQE still splits a
+   skewed partition at the advisory size. A merge over stored
+   partitions keeps its single exchange: AQE already coalesces its
+   small result into few tasks, and a second exchange would cost more
+   than the files it saves;
 3. commits the new files in and the rewritten ones out, in one entry,
    merging again on a newer snapshot if a concurrent commit conflicts.
 
@@ -285,6 +293,8 @@ class UpsertTable:
         if p:  # the partition column reads back from the directory, last
             schema = T.StructType([f for f in schema if f.name != p]
                                   + [schema[p]])
+        if p and not touched:  # a bulk insert: one file per directory
+            live = live.hint("rebalance", p)
         add = tablelog.write(live, self.path, p, "base",
                              f"v{snap.version + 1}")
         tablelog.commit(batch.sparkSession, self.path, snap, add,

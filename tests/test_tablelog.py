@@ -437,3 +437,56 @@ def test_sidecar_of_a_removed_directory_is_skipped(spark, tmp_path,
     assert (root / "part=a" / ".f.parquet.keys").read_bytes() == b"1234"
     assert not any(n.endswith(".tmp") for n in os.listdir(root / "part=a"))
     assert not (root / "part=b").exists()
+
+
+class _HdfsRename:
+    """A Hadoop FileSystem whose rename never replaces, as on HDFS,
+    whatever the wrapped one's rename does; every other call goes to
+    the wrapped one."""
+
+    def __init__(self, fs):
+        self._fs = fs
+
+    def rename(self, src, dst):
+        return not self._fs.exists(dst) and self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def _hdfs(spark, root):
+    fs = tablelog._HadoopFS(spark, root)
+    fs._fs = _HdfsRename(fs._fs)
+    return fs
+
+
+def test_hadoop_handle_under_hdfs_rename_rules(spark, tmp_path,
+                                               monkeypatch):
+    """Where a rename never replaces, a publish of a version another
+    writer took loses and leaves that entry as it was, and a damaged
+    sidecar is deleted and put in place again."""
+    monkeypatch.setattr(tablelog, "_fs", _hdfs)
+    root = str(tmp_path / "t")
+    manifest_commit(spark.range(3), root, "c-1")
+    taken = tablelog.snapshot(spark, root)
+    entry = (tmp_path / "t" / tablelog._entry(taken.version)).read_bytes()
+    real = tablelog._versions
+    with monkeypatch.context() as m:  # as if the listing came first
+        m.setattr(tablelog, "_versions", lambda fs: [
+            v for v in real(fs) if v < taken.version])
+        assert not tablelog._publish(tablelog._fs(spark, root),
+                                     dataclasses.replace(taken, files=()))
+    assert (tmp_path / "t" / tablelog._entry(taken.version)).read_bytes() \
+        == entry
+    assert tablelog.snapshot(spark, root) == taken
+    assert read_manifested(spark, root).count() == 3
+
+    [f] = taken.files[:1]
+    sidecar = tmp_path / "t" / tablelog._sidecar(f["path"])
+    tablelog.write_sidecars(spark, root, {f["path"]: b"12345678"})
+    with open(sidecar, "r+b") as fh:
+        fh.truncate(2)
+    tablelog.write_sidecars(spark, root, {f["path"]: b"12345678"})
+    assert sidecar.read_bytes() == b"12345678"
+    assert not any(n.endswith(".tmp") for _, _, names in os.walk(root)
+                   for n in names)

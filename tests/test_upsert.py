@@ -9,7 +9,9 @@ end-to-end cdc_upsert oracle check cannot reach:
 * the key-fingerprint lookup never misses a partition a merge must
   rewrite (``cdc_upsert`` cannot tell: every partition holding a
   version of an incoming key there also receives a row of the batch),
-  and opens no base file whose log record has a fingerprint.
+  and opens no base file whose log record has a fingerprint;
+* a bulk insert writes one file per partition directory, and only a
+  bulk insert plans the rebalance that clusters it.
 
 Stored state (retained tombstones included) and the merge sequence are
 read from the table log, the same place the table reads them.
@@ -551,3 +553,64 @@ def test_lookup_through_the_hadoop_api(spark, tmp_path, monkeypatch):
     assert _sidecars(t) == _recorded(spark, t)
     assert not any(n.endswith(".tmp") for _, _, names in os.walk(t.path)
                    for n in names)
+
+
+# -- file layout ------------------------------------------------------------
+
+def _files_per_directory(t):
+    """Partition directory -> number of data files on disk."""
+    return Counter(os.path.relpath(d, t.path)
+                   for d, _, names in os.walk(t.path) for n in names
+                   if n.endswith(".parquet"))
+
+
+def test_bulk_insert_writes_one_file_per_directory(spark, tmp_path):
+    """A merge into an empty table is a bulk insert: its rows are
+    clustered by partition value before the write, so every directory
+    holds one file, not one per shuffle task of the latest-wins pass.
+    AQE's partition coalescing, which merges small shuffle tasks, is
+    off so that the tasks stay as many as the shuffle partitions."""
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        t = _table(tmp_path / "t", partition_by="part")
+        rows = [(i, f"p{i % 40}", f"v{i}", 10, 0, "false")
+                for i in range(800)]
+        t.merge_batch(_batch(spark, rows))
+    finally:
+        spark.conf.set(conf, before)
+    files = Counter(f["partition"] for f in
+                    tablelog.snapshot(spark, t.path).of("base"))
+    assert files == {f"part=p{i}": 1 for i in range(40)}
+    assert _files_per_directory(t) == files
+    assert _rows(spark, t) == {r[:3] for r in rows}
+
+
+def test_only_a_bulk_insert_plans_a_rebalance(spark, tmp_path, monkeypatch):
+    """The frame a merge hands to ``tablelog.write``: a bulk insert's,
+    and one landing only in new partitions, cluster by the partition
+    column; one that rewrites stored partitions plans the latest-wins
+    exchange alone."""
+    plans = []
+    real = tablelog.write
+
+    def write(df, *args):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, *args)
+
+    monkeypatch.setattr(tablelog, "write", write)
+    t = _table(tmp_path / "t", partition_by="part")
+    t.merge_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false"),
+                                 (2, "b", "v1", 10, 0, "false")]))
+    t.merge_batch(_batch(spark, [(3, "c", "v1", 20, 0, "false")]))
+    t.merge_batch(_batch(spark, [(1, "a", "v2", 30, 0, "false"),
+                                 (4, "c", "v1", 30, 0, "false")]))
+    assert _rows(spark, t) == {(1, "a", "v2"), (2, "b", "v1"),
+                               (3, "c", "v1"), (4, "c", "v1")}
+    bulk, new, stored = plans
+    for plan in (bulk, new):
+        assert "REBALANCE_PARTITIONS_BY_COL" in plan
+        assert plan.count("Exchange ") == 2
+    assert "REBALANCE" not in stored
+    assert stored.count("Exchange ") == 1

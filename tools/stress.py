@@ -16,7 +16,9 @@ Axes (matching the r7 report rows):
            == pure-Python latest-wins reference; random inline
            compaction bounds; partitioned AND unpartitioned; random
            retain_tombstones (None/1/3) with tombstone-window
-           invariants against the persisted merge counter (r9)
+           invariants against the persisted merge counter (r9);
+           after batch 0 a partitioned table holds one base file per
+           partition (the bulk-insert layout)
   jaccard  prefix-filtered == unfiltered exact Jaccard pairs at random
            (threshold, k)
   ranking  exact_global_rank/ntile vs a SQL window at random
@@ -74,6 +76,7 @@ import random
 import shutil
 import sys
 import tempfile
+from collections import Counter
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -163,9 +166,18 @@ def axis_cdc(seeds: list[int], spark=None) -> int:
                                    retain_tombstones=retain)
             if bound is not None:
                 mor.max_delta_commits = bound
+            bad = []
             for i, rows in enumerate(feed):
                 cow.merge_batch(_batch(spark, rows), i)
                 mor.append_batch(_batch(spark, rows), i)
+                if i == 0 and part:
+                    # the first write is a bulk insert: one base file
+                    # per partition, as the log names them
+                    for name, tbl in (("CoW", cow), ("MoR_base", mor.base)):
+                        n = Counter(f["partition"] for f in tablelog
+                                    .snapshot(spark, tbl.path).of("base"))
+                        if any(c != 1 for c in n.values()):
+                            bad.append(f"{name}_bulk_files_{dict(n)}")
             ref = _reference_state(feed)
             cols = ("id", "part", "val", "ts", "seq")
             states = {
@@ -179,7 +191,7 @@ def axis_cdc(seeds: list[int], spark=None) -> int:
             states["MoR_ro_postcompact"] = {
                 tuple(r) for r in
                 mor.read_optimized(spark).select(*cols).collect()}
-            bad = [k for k, v in states.items() if v != ref]
+            bad += [k for k, v in states.items() if v != ref]
             if retain is not None:
                 # retention invariants: the stamp column never
                 # surfaces, and every STORED tombstone is within its
