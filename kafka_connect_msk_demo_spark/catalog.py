@@ -10,18 +10,20 @@ Also provides the table loader for the deterministic parquet test
 tables (``/root/testdata/sf*``), always with explicit schemas-on-read
 semantics: parquet is self-describing, CSV entries pass ``schema=``
 and never infer, mirroring the reference's discipline (SURVEY.md §1.3).
+
+Every temporary file of the package lives under one scratch root per
+process (:func:`_scratch_dir`), removed when the interpreter exits.
 """
 
 from __future__ import annotations
 
-import errno
+import atexit
 import json
 import logging
 import os
 import shutil
-import stat
 import tempfile
-from functools import lru_cache
+from functools import cache, lru_cache
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -170,7 +172,7 @@ def _storage_units(path: str, name: str) -> tuple[tuple[str, str], ...]:
     read from the parquet footer: ``timestamp[unit]`` columns carry
     their unit; plain int64 columns fall back to the documented legacy
     unit in :data:`_TS_COLUMNS`. Memoized on (path, mtime, size) — the
-    source stamp that also names each ``_stream_dir`` stage — so a
+    source stamp that also keys each ``_stream_dir`` stage — so a
     testdata regeneration with a different encoding invalidates the
     memo instead of returning stale units to a long-lived process."""
     st = os.stat(path)
@@ -336,13 +338,34 @@ def _row_groups(stamp: tuple[tuple[str, int, int], ...], cap: int) -> int:
 STREAM_CHUNKS = env_int("SPARK_GRAFT_STREAM_CHUNKS", 4)
 
 
+@cache
+def _scratch_root(pid: int) -> str:
+    root = tempfile.mkdtemp(prefix="registry_scratch_")
+    atexit.register(_remove_scratch, root, pid)
+    return root
+
+
+def _remove_scratch(root: str, pid: int) -> None:
+    if os.getpid() == pid:  # a forked child inherits the exit hook
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh directory for the package's temporary files (staged
+    streams and registry inputs, checkpoints, oracle spill), under one
+    root per process that is removed when the interpreter exits: the
+    frames that read those files do so lazily, so they cannot go any
+    sooner."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root(os.getpid()))
+
+
 def _stream_dir(sf_dir: str, name: str, chunks: int | None = None) -> str:
     """The file-stream source requires a directory; testdata tables are
-    single files. Stage a per-table directory of N parquet chunks under
-    /tmp (testdata itself is read-only) so every streaming query runs
-    genuinely incremental — a single-file stage would collapse any
-    ``maxFilesPerTrigger`` into one micro-batch, never exercising state
-    across batches.
+    single files. Stage a per-table directory of N parquet chunks in
+    this process's scratch root (testdata itself is read-only) so every
+    streaming query runs genuinely incremental — a single-file stage
+    would collapse any ``maxFilesPerTrigger`` into one micro-batch,
+    never exercising state across batches.
 
     Tables with an event-time column are chunked in ascending event
     time (the realistic arrival order: watermarks advance monotonically
@@ -350,41 +373,23 @@ def _stream_dir(sf_dir: str, name: str, chunks: int | None = None) -> str:
     answer — late-data DROPPING is exercised separately by the
     watermark tests with explicit out-of-order fixtures).
 
-    A stage is written once, like the input files a file source lists:
-    its name carries the source's mtime and size, the chunk count and
-    the layout version, so a regenerated source stages a new directory
-    and a reader of the old one keeps it whole. Racing stagers each
-    write a private copy and rename it into place; rename onto a
-    non-empty directory fails, so one copy wins and the rest are
-    dropped."""
+    A process stages each (source, chunk count) once and never
+    rewrites a stage, like the input files a file source lists: the
+    memo is keyed on the source's mtime and size, so a regenerated
+    source gets a new directory and a reader of the old one keeps it
+    whole until the process exits. Another process stages its own."""
     chunks = chunks or STREAM_CHUNKS
     target = f"{sf_dir}/{name}.parquet"
     st = os.stat(target)
-    # per-uid and 0o700: a stage found under it was written by this uid
-    root = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_streams-{os.getuid()}")
-    os.makedirs(root, 0o700, exist_ok=True)
-    own = os.lstat(root)
-    if not stat.S_ISDIR(own.st_mode) or own.st_uid != os.getuid():
-        raise RuntimeError(f"stream staging root {root!r} is not a "
-                           f"directory owned by uid {os.getuid()}")
-    parent = os.path.join(root, sf_dir.strip("/").replace("/", "_"))
-    # v4: bump on layout changes so an old stage is never served
-    d = os.path.join(parent, f"{name}-c{chunks}-{st.st_mtime_ns}-"
-                             f"{st.st_size}-v4")
-    if os.path.isdir(d):
-        return d
-    os.makedirs(parent, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix=".stage-", dir=parent)
-    try:
-        _write_chunks(target, name, chunks, tmp)
-        try:
-            os.rename(tmp, d)
-        except OSError as e:  # another stager published `d` first
-            if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
-                raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)  # gone once renamed
+    return _stage(os.getpid(), target, name, chunks, st.st_mtime_ns,
+                  st.st_size)
+
+
+@cache
+def _stage(pid: int, target: str, name: str, chunks: int, mtime_ns: int,
+           size: int) -> str:
+    d = _scratch_dir(f"{name}-")
+    _write_chunks(target, name, chunks, d)
     return d
 
 
@@ -421,7 +426,13 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str,
     over :data:`STREAM_CHUNKS` chunks) so an availableNow drain executes
     multiple real IncrementalExecution rounds — state restore/save and
     watermark advancement across batches, not a single-batch simulation.
-    Pass ``max_files_per_trigger=None`` for a one-batch read."""
+    Pass ``max_files_per_trigger=None`` for a one-batch read.
+
+    The chunks live in this process's scratch root (:func:`_stream_dir`)
+    and go when the interpreter exits, so a checkpoint over the stream
+    resumes only in the process that staged it. A process that ends by
+    ``os._exit`` or a signal (a ``multiprocessing`` fork child ends by
+    ``os._exit``) skips the exit hook and leaves its root behind."""
     path = _stream_dir(sf_dir, name)
     source = f"{sf_dir}/{name}.parquet"
     # schema selection keys on _RAW_FIELDS (the explicit-schema table

@@ -14,15 +14,15 @@ import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from .catalog import TABLES
+from .catalog import TABLES, _scratch_dir
 
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
     con = duckdb.connect()
-    # keep any out-of-core spill in the system temp dir, not the
+    # keep any out-of-core spill in the process's scratch root, not the
     # repo-relative `.tmp/` DuckDB defaults to for in-memory DBs (a
     # runaway oracle once dropped >80 GB of spill files into the repo)
-    con.execute("SET temp_directory = '/tmp/duckdb_oracle_spill'")
+    con.execute(f"SET temp_directory = '{_scratch_dir('oracle_spill_')}'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

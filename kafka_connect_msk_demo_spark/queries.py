@@ -17,16 +17,10 @@ Cross-engine determinism rules used throughout (see operators/aggregates.py):
 
 from __future__ import annotations
 
-import atexit
-import functools
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import load_table, load_tables
+from .catalog import _scratch_dir, load_table, load_tables
 from .operators.aggregates import (dec, distinct_counts,
                                    group_quantiles, sum_count,
                                    summary_stats, windowed_sum_count)
@@ -816,26 +810,6 @@ SELECT event_id,
        CAST(NULL AS VARCHAR) AS payload_props
 FROM events
 """
-
-
-@functools.cache
-def _scratch_root(pid: int) -> str:
-    root = tempfile.mkdtemp(prefix="registry_scratch_")
-    atexit.register(_remove_scratch, root, pid)
-    return root
-
-
-def _remove_scratch(root: str, pid: int) -> None:
-    if os.getpid() == pid:  # a forked child inherits the exit hook
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _scratch_dir(prefix: str) -> str:
-    """A fresh directory for a registry query's staged inputs, under
-    one root per process that is removed when the interpreter exits:
-    the frames the query returns read those files lazily, so they
-    cannot go any sooner."""
-    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root(os.getpid()))
 
 
 def q_csv_dim_sales(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -272,15 +272,14 @@ def rotating_sink_stream(sdf: DataFrame, path: str, checkpoint: str,
 
 
 @tablelog.retried
-def manifest_commit(df: DataFrame, path: str, commit_id: str,
-                    fmt: str = "parquet") -> list[str]:
+def manifest_commit(df: DataFrame, path: str, commit_id: str) -> list[str]:
     """Write ``df`` as one atomic, idempotent commit; returns the
     published file names (relative to ``path``, each starting with
     ``commit_id``). Re-running the same ``commit_id`` republishes
     (replaces) that commit rather than appending a duplicate."""
     spark = df.sparkSession
     snap = tablelog.snapshot(spark, path)
-    add = tablelog.write(df, path, None, "base", commit_id, fmt)
+    add = tablelog.write(df, path, None, "base", commit_id)
     tablelog.commit(spark, path, snap, add,
                     [f for f in snap.files if f["commit"] == commit_id],
                     df.schema)
@@ -288,12 +287,11 @@ def manifest_commit(df: DataFrame, path: str, commit_id: str,
 
 
 def read_manifested(spark: SparkSession, path: str,
-                    schema: T.StructType | None = None,
-                    fmt: str = "parquet") -> DataFrame:
+                    schema: T.StructType | None = None) -> DataFrame:
     """Read ONLY the files the newest log entry names — uncommitted or
     orphan objects are invisible. ``schema`` defaults to the one the
     last commit logged."""
     snap = tablelog.snapshot(spark, path)
     if schema is None and snap.schema is None:
         raise ValueError("empty manifested table needs a schema")
-    return tablelog.read(spark, path, snap, snap.files, fmt, schema)
+    return tablelog.read(spark, path, snap, snap.files, schema)

@@ -23,7 +23,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, stream_table
 from ..operators.aggregates import (_sql_hll_distinct, dec, hll_estimate,
-                                   hll_register_rows, order_result)
+                                   hll_register_rows, order_result,
+                                   session_agg, windowed_sum_count)
+from ..operators.joins import enrich
 from .runner import run_to_memory
 
 
@@ -56,16 +58,8 @@ def stream_windowed_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     final emission covers the whole stream (the watermark still runs —
     late-row *dropping* is exercised separately in append-mode tests)."""
     events = stream_table(spark, sf_dir, "events")
-    agg = (
-        events.withWatermark("ts", "10 minutes")
-        .groupBy("event_type", F.window("ts", "10 minutes", "5 minutes"))
-        .agg(F.sum(dec("value", 25, 8)).cast("double").alias("sales"),
-             F.count("value").alias("orders"))
-        .select("event_type",
-                F.unix_timestamp("window.start").alias("window_start"),
-                F.unix_timestamp("window.end").alias("window_end"),
-                "sales", "orders")
-    )
+    agg = windowed_sum_count(events.withWatermark("ts", "10 minutes"),
+                             ["event_type"], "ts", "value")
     return run_to_memory(agg, "complete")
 
 
@@ -100,18 +94,10 @@ def stream_enriched_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size is under the broadcast threshold, and the broadcast re-runs
     # as one job per micro-batch; a larger dimension plans a shuffle
     # join instead.
-    enriched = (events.join(dim, ["user_id"], "left_outer")
-                .na.fill({"segment": "Unassigned"}))
-    agg = (
-        enriched.withWatermark("ts", "10 minutes")
-        .groupBy("segment", F.window("ts", "10 minutes", "5 minutes"))
-        .agg(F.sum(dec("value", 25, 8)).cast("double").alias("sales"),
-             F.count("value").alias("orders"))
-        .select("segment",
-                F.unix_timestamp("window.start").alias("window_start"),
-                F.unix_timestamp("window.end").alias("window_end"),
-                "sales", "orders")
-    )
+    enriched = enrich(events, dim, ["user_id"],
+                      fill={"segment": "Unassigned"})
+    agg = windowed_sum_count(enriched.withWatermark("ts", "10 minutes"),
+                             ["segment"], "ts", "value")
     return run_to_memory(agg, "complete")
 
 
@@ -318,17 +304,9 @@ def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     legitimately still in state when the drain stops — asserting their
     absence is asserting the append contract."""
     events = stream_table(spark, sf_dir, "events")
-    sess = (events.withWatermark("ts", "10 minutes")
-            .groupBy("user_id", F.session_window("ts", "30 minutes"))
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.sum(dec("value", 25, 8)).cast("double")
-                 .alias("value_sum"))
-            .select("user_id",
-                    F.unix_micros("session_window.start")
-                    .alias("session_start_us"),
-                    F.unix_micros("session_window.end")
-                    .alias("session_end_us"),
-                    "n_events", "value_sum"))
+    sess = (session_agg(events.withWatermark("ts", "10 minutes"),
+                        ["user_id"], "ts", "value", gap="30 minutes")
+            .withColumnRenamed("total", "value_sum"))
     return (run_to_memory(sess, "append")
             .orderBy("user_id", "session_start_us"))
 

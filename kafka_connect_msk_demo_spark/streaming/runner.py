@@ -13,7 +13,6 @@ watermark advancement — then stops. A production deployment passes a
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 import uuid
 
@@ -73,15 +72,14 @@ def run_to_memory(df: DataFrame, output_mode: str = "complete",
     return spark.table(name)
 
 
-def run_foreach_batch(df: DataFrame, fn, checkpoint_dir: str | None = None,
+def run_foreach_batch(df: DataFrame, fn, checkpoint_dir: str,
                       output_mode: str = "update") -> None:
     """Run a stream through ``foreachBatch`` to completion — the MERGE
     writer path (§3.3). ``fn(batch_df, batch_id)``."""
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_")
     q = (df.writeStream
          .foreachBatch(fn)
          .outputMode(output_mode)
-         .option("checkpointLocation", checkpoint)
+         .option("checkpointLocation", checkpoint_dir)
          .trigger(availableNow=True)
          .start())
     q.awaitTermination()

@@ -282,7 +282,7 @@ def _put(fs, rel: str, data: bytes, replace: bool = False) -> bool:
 
 
 def write(df: DataFrame, root: str, partition_by: str | None, kind: str,
-          commit: str, fmt: str = "parquet") -> list[dict]:
+          commit: str) -> list[dict]:
     """Append ``df`` as new files under ``root`` and return their log
     records. Spark writes into ``_staging/<name>`` — two Spark jobs
     writing into one directory would share its ``_temporary`` — and the
@@ -293,7 +293,7 @@ def write(df: DataFrame, root: str, partition_by: str | None, kind: str,
     w = df.write.option("mapreduce.output.basename", name)
     if partition_by:
         w = w.partitionBy(partition_by)
-    w.format(fmt).save(f"{root}/{stage}")
+    w.parquet(f"{root}/{stage}")
     fs, out = _fs(df.sparkSession, root), []
     for part in ([d for d in fs.listdir(stage) if "=" in d]  # col=value
                  if partition_by else [""]):
@@ -427,7 +427,6 @@ def read_sidecars(spark: SparkSession, root: str,
 
 
 def read(spark: SparkSession, root: str, snap: Snapshot, files,
-         fmt: str = "parquet",
          schema: T.StructType | None = None) -> DataFrame:
     """``files`` of ``snap`` as one frame, typed by ``schema`` (default:
     the snapshot's), partition values from the directory names. Starts
@@ -439,8 +438,8 @@ def read(spark: SparkSession, root: str, snap: Snapshot, files,
         prev = spark.conf.get(_DISCOVERY)
         spark.conf.set(_DISCOVERY, str(len(files) + 1))
         try:
-            return (spark.read.format(fmt).schema(schema)
+            return (spark.read.schema(schema)
                     .option("basePath", root)
-                    .load([f"{root}/{f['path']}" for f in files]))
+                    .parquet(*[f"{root}/{f['path']}" for f in files]))
         finally:
             spark.conf.set(_DISCOVERY, prev)

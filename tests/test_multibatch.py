@@ -188,87 +188,65 @@ def test_staged_chunks_have_strictly_increasing_mtimes(sf_small):
     assert all(b - a >= 1.0 for a, b in zip(mtimes, mtimes[1:])), mtimes
 
 
-def test_concurrent_staging_yields_one_valid_dir(sf_small, tmp_path):
-    """N processes racing to stage the same stream dir must leave
-    exactly one coherent staged dir — named for the source stamp, full
-    chunk set, strictly increasing mtimes, no leftover temporary
-    dirs. Each stager writes a private copy and publishes it with one
-    rename; rename onto a non-empty dir fails, so exactly one copy
-    wins and the losers return it."""
-    import glob
-    import multiprocessing as mp
+def test_concurrent_stagers_each_get_a_whole_stage_gone_at_exit(
+        sf_small, tmp_path):
+    """N processes staging the same stream table at once each get a
+    stage of their own in their own scratch root — full chunk set,
+    every source row, strictly increasing mtimes — and each stage goes
+    when its process exits, leaving nothing under ``TMPDIR``.
+    Subprocesses, not ``multiprocessing`` forks: a fork child ends by
+    ``os._exit`` and skips the exit hook."""
+    import json
     import os
-    import tempfile
+    import subprocess
+    import sys
 
-    import kafka_connect_msk_demo_spark.catalog as cat
+    import pyarrow.parquet as pq
 
-    def worker(tmpdir, q):
-        tempfile.tempdir = tmpdir  # isolate from the shared /tmp cache
-        try:
-            q.put(cat._stream_dir(sf_small, "events", chunks=3))
-        except Exception as exc:  # noqa: BLE001
-            q.put(f"ERROR {exc!r}")
-
-    ctx = mp.get_context("fork")
-    q = ctx.Queue()
-    procs = [ctx.Process(target=worker, args=(str(tmp_path), q))
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    code = "\n".join([
+        "import json, os, sys",
+        "import pyarrow.parquet as pq",
+        "from kafka_connect_msk_demo_spark.catalog import _stream_dir",
+        f"d = _stream_dir({sf_small!r}, 'events', chunks=3)",
+        "parts = sorted(f for f in os.listdir(d) if f.endswith('.parquet'))",
+        "paths = [os.path.join(d, f) for f in parts]",
+        "print(json.dumps({'dir': d, 'parts': len(parts),",
+        "    'mtimes': [os.stat(p).st_mtime for p in paths],",
+        "    'rows': sum(pq.read_metadata(p).num_rows for p in paths)}))"])
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=str(tmpdir))
+    procs = [subprocess.Popen([sys.executable, "-c", code], cwd=root,
+                              env=env, stdout=subprocess.PIPE,
+                              stderr=subprocess.PIPE, text=True)
              for _ in range(4)]
-    for p in procs:
-        p.start()
-    results = [q.get(timeout=120) for _ in procs]
-    for p in procs:
-        p.join(timeout=120)
-    assert not any(p.is_alive() for p in procs)
-    assert all(isinstance(r, str) and not r.startswith("ERROR")
-               for r in results), results
-    assert len(set(results)) == 1
-    d = results[0]
-    parts = sorted(glob.glob(os.path.join(d, "part-*.parquet")))
-    assert len(parts) == 3
-    mtimes = [os.stat(p).st_mtime for p in parts]
-    assert all(b - a >= 1.0 for a, b in zip(mtimes, mtimes[1:])), mtimes
-    st = os.stat(f"{sf_small}/events.parquet")
-    assert os.path.basename(d) == \
-        f"events-c3-{st.st_mtime_ns}-{st.st_size}-v4"
-    assert os.listdir(os.path.dirname(d)) == [os.path.basename(d)], \
-        "leftover temporary staging dirs"
-
-
-def test_staging_refuses_a_symlinked_root(sf_small, tmp_path, monkeypatch):
-    """The per-uid staging root is where every stage is trusted from;
-    a symlink planted at its predictable path must make staging raise,
-    not serve whatever stage the link points at."""
-    import os
-    import tempfile
-
-    import pytest
-
-    import kafka_connect_msk_demo_spark.catalog as cat
-
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    elsewhere = tmp_path / "elsewhere"
-    elsewhere.mkdir()
-    os.symlink(elsewhere, tmp_path / f"spark_graft_streams-{os.getuid()}")
-    with pytest.raises(RuntimeError, match="staging root"):
-        cat._stream_dir(sf_small, "events", chunks=3)
-    assert not os.listdir(elsewhere)
+    outs = [p.communicate(timeout=120) for p in procs]
+    assert all(p.returncode == 0 for p in procs), [e for _, e in outs]
+    stages = [json.loads(o) for o, _ in outs]
+    want_rows = pq.read_metadata(f"{sf_small}/events.parquet").num_rows
+    assert len({s["dir"] for s in stages}) == 4
+    for s in stages:
+        assert s["dir"].startswith(str(tmpdir))
+        assert s["parts"] == 3 and s["rows"] == want_rows, s
+        m = s["mtimes"]
+        assert all(b - a >= 1.0 for a, b in zip(m, m[1:])), m
+        assert not os.path.exists(s["dir"])
+    assert not os.listdir(tmpdir), "stages left after their process exited"
 
 
 def test_restaging_after_source_change_leaves_old_stage_whole(
-        sf_small, tmp_path, monkeypatch):
+        sf_small, tmp_path):
     """A stage is never rewritten: once the source's mtime changes,
     staging returns a NEW directory, and the old one keeps every chunk
     it had for a reader still listing it."""
     import os
     import shutil
-    import tempfile
 
     import pyarrow.parquet as pq
 
     import kafka_connect_msk_demo_spark.catalog as cat
 
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
-    os.makedirs(tmp_path / "tmp")
     sf = tmp_path / "sf"
     sf.mkdir()
     src = sf / "events.parquet"

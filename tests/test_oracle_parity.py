@@ -20,14 +20,17 @@ def test_query_matches_oracle(spark, sf_small, name):
     assert not issues, f"{name}: " + "; ".join(issues)
 
 
-def test_scratch_directories_go_when_their_process_exits():
-    """Registry queries stage their inputs under one scratch root per
-    process. The root goes when that process exits, and a forked child,
-    which inherits the exit hook, removes only its own."""
+def test_scratch_directories_go_when_their_process_exits(sf_small):
+    """Registry queries and staged streams put their files under one
+    scratch root per process. The root goes when that process exits,
+    and a forked child, which inherits the exit hook, removes only its
+    own."""
     code = "\n".join([
         "import os, sys",
+        "from kafka_connect_msk_demo_spark.catalog import _stream_dir",
         "from kafka_connect_msk_demo_spark.queries import _scratch_dir",
         "mine = _scratch_dir('probe_')",
+        f"print('stage', _stream_dir({sf_small!r}, 'events'), flush=True)",
         "if os.fork() == 0:",
         "    print('child', _scratch_dir('probe_'), flush=True)",
         "    sys.exit(0)",
@@ -40,5 +43,5 @@ def test_scratch_directories_go_when_their_process_exits():
     out = dict(line.split(" ", 1) for line in r.stdout.splitlines())
     mine, alive = out["parent"].rsplit(" ", 1)
     assert alive == "True", "a forked child removed its parent's scratch"
-    for d in (mine, out["child"]):
+    for d in (mine, out["child"], out["stage"]):
         assert not os.path.exists(os.path.dirname(d)), d

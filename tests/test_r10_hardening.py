@@ -2,7 +2,7 @@
 quality_score parity with the DuckDB oracle guard, the upsert merge's
 rewrite set at high partition cardinality, and corpus-scaled
 clustering cells. (The stream-staging lock these tests once covered is
-gone: a stage is written once and published by one rename, see
+gone: each process stages its own streams in its scratch root, see
 ``catalog._stream_dir`` and ``tests/test_multibatch.py``.)"""
 
 import os

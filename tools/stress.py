@@ -28,9 +28,9 @@ Axes (matching the r7 report rows):
            spark.sql.shuffle.partitions (3 and 200)
   session  hostile session configs (AQE off, ANSI off, Arrow toggled,
            Asia/Kolkata) over the config-sensitive query subset
-  staging  N forked processes staging the same stream table
-           concurrently -> one published dir, no temporary leftovers,
-           intact mtime order
+  staging  N processes staging the same stream table concurrently ->
+           one whole stage each, in intact mtime order, and nothing
+           left under TMPDIR after they exit
   avro     randomized write_avro/read_avro roundtrips: random
            primitive schemas, nulls, >2^53 longs
   extremes shuffle-partition EXTREMES (1 and 256) across the cdc and
@@ -388,43 +388,54 @@ def axis_session() -> int:
 
 
 def axis_staging(n_procs: int = 4) -> int:
-    """Fork N processes that all stage the same stream table into a
-    fresh temporary root. Each writes a private copy and publishes it
-    with one rename, so exactly one staged dir must result — the only
-    entry of its parent, no temporary dirs left — with its chunks in
-    strictly increasing mtime order."""
+    """Start N processes that all stage the same stream table at once
+    under a fresh ``TMPDIR``. Each stages a copy of its own in its own
+    scratch root: every one must hold the whole chunk set, every source
+    row, in strictly increasing mtime order, and nothing may be left
+    under ``TMPDIR`` once they have exited."""
+    import json
     import subprocess
+
+    import pyarrow.parquet as pq
+
+    from kafka_connect_msk_demo_spark.catalog import STREAM_CHUNKS
     root = tempfile.mkdtemp(prefix="stress-staging-")
-    env = dict(os.environ, TMPDIR=root)  # every fork races the real work
-    code = (
-        "import sys; sys.path.insert(0, %r); "
-        "from kafka_connect_msk_demo_spark.catalog import _stream_dir; "
-        "d = _stream_dir(%r, 'events'); print(d)"
-        % (ROOT, SF_SMALL))
+    env = dict(os.environ, TMPDIR=root)  # every process races the real work
+    code = "\n".join([
+        "import json, os, sys",
+        f"sys.path.insert(0, {ROOT!r})",
+        "import pyarrow.parquet as pq",
+        "from kafka_connect_msk_demo_spark.catalog import _stream_dir",
+        f"d = _stream_dir({SF_SMALL!r}, 'events')",
+        "paths = sorted(os.path.join(d, f) for f in os.listdir(d)",
+        "               if f.endswith('.parquet'))",
+        "print(json.dumps({'dir': d,",
+        "    'mtimes': [os.stat(p).st_mtime_ns for p in paths],",
+        "    'rows': sum(pq.read_metadata(p).num_rows for p in paths)}))"])
+    want_rows = pq.read_metadata(f"{SF_SMALL}/events.parquet").num_rows
+    want_parts = max(1, min(STREAM_CHUNKS, want_rows))
     try:
         procs = [subprocess.Popen([sys.executable, "-c", code], env=env,
                                   stdout=subprocess.PIPE)
                  for _ in range(n_procs)]
-        outs = [p.communicate()[0].decode().strip() for p in procs]
+        outs = [p.communicate()[0].decode() for p in procs]
         codes = [p.returncode for p in procs]
-        dirs = set(outs)
-        ok = all(c == 0 for c in codes) and len(dirs) == 1
+        ok = all(c == 0 for c in codes)
         if ok:
-            d = dirs.pop()
-            files = sorted(f for f in os.listdir(d)
-                           if f.endswith(".parquet"))
-            mtimes = [os.stat(os.path.join(d, f)).st_mtime_ns
-                      for f in files]
-            ok = mtimes == sorted(mtimes) and \
-                len(set(mtimes)) == len(mtimes)
-            alone = os.listdir(os.path.dirname(d)) == [os.path.basename(d)]
-            print(f"  {n_procs} forks -> 1 dir, {len(files)} chunks, "
-                  f"mtime order {'ok' if ok else 'BROKEN'}, "
-                  f"{'no' if alone else 'LEFTOVER'} temporary dirs",
+            stages = [json.loads(o) for o in outs]
+            whole = sum(len(st["mtimes"]) == want_parts
+                        and st["rows"] == want_rows
+                        and all(a < b for a, b in zip(st["mtimes"],
+                                                      st["mtimes"][1:]))
+                        for st in stages)
+            own = len({st["dir"] for st in stages})
+            left = os.listdir(root)
+            print(f"  {n_procs} processes -> {own} stages, {whole} whole "
+                  f"in mtime order, {left or 'nothing'} left under TMPDIR",
                   flush=True)
-            ok = ok and alone
+            ok = own == whole == n_procs and not left
         else:
-            print(f"  FAILED: exit codes {codes}, dirs {dirs}", flush=True)
+            print(f"  FAILED: exit codes {codes}", flush=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return 0 if ok else 1
@@ -1002,6 +1013,17 @@ def axis_restartfuzz(seeds: list[int]) -> int:
     return fails
 
 
+#: the seeded axes, each with the share of :data:`DEFAULT_SEEDS` it runs
+#: (None: all of it); a ``--seeds`` range given on the command line runs
+#: whole on every axis
+SEEDED_AXES = {"cdc": (axis_cdc, None), "jaccard": (axis_jaccard, 6),
+               "ranking": (axis_ranking, 8), "avro": (axis_avro, None),
+               "extremes": (axis_extremes, 8), "evolve": (axis_evolve, None),
+               "contention": (axis_contention, 4),
+               "restartfuzz": (axis_restartfuzz, 8)}
+DEFAULT_SEEDS = "7000-7019"
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--axis", default="all",
@@ -1009,17 +1031,18 @@ def main() -> int:
                              "shuffle", "session", "staging", "avro",
                              "extremes", "evolve", "contention",
                              "restartfuzz", "all"])
-    ap.add_argument("--seeds", default="7000-7019",
-                    help="range lo-hi or comma list (cdc/jaccard/"
-                         "ranking/avro axes)")
+    ap.add_argument("--seeds",
+                    help="range lo-hi or comma list for the seeded axes, "
+                         "run whole (default: a per-axis prefix of "
+                         f"{DEFAULT_SEEDS})")
     ap.add_argument("--chunk-counts", default="1,2,7")
     ap.add_argument("--all-queries", action="store_true",
                     help="shuffle axis: full registry instead of the "
                          "sensitive subset")
     ap.add_argument("--procs", type=int, default=4,
-                    help="staging axis: concurrent forks")
+                    help="staging axis: concurrent processes")
     args = ap.parse_args()
-    seeds = _parse_seeds(args.seeds)
+    seeds = _parse_seeds(args.seeds or DEFAULT_SEEDS)
     fails = 0
     axes = ([args.axis] if args.axis != "all" else
             ["cdc", "jaccard", "ranking", "chunks", "shuffle",
@@ -1027,12 +1050,12 @@ def main() -> int:
              "contention", "restartfuzz"])
     for axis in axes:
         print(f"axis: {axis}", flush=True)
-        if axis == "cdc":
-            fails += axis_cdc(seeds)
-        elif axis == "jaccard":
-            fails += axis_jaccard(seeds[:6])
-        elif axis == "ranking":
-            fails += axis_ranking(seeds[:8])
+        if axis in SEEDED_AXES:
+            fn, cap = SEEDED_AXES[axis]
+            run = seeds if args.seeds else seeds[:cap]
+            print(f" seeds ({len(run)}): {' '.join(map(str, run))}",
+                  flush=True)
+            fails += fn(run)
         elif axis == "chunks":
             fails += axis_chunks(
                 [int(c) for c in args.chunk_counts.split(",")])
@@ -1042,16 +1065,6 @@ def main() -> int:
             fails += axis_session()
         elif axis == "staging":
             fails += axis_staging(args.procs)
-        elif axis == "avro":
-            fails += axis_avro(seeds[:25])
-        elif axis == "extremes":
-            fails += axis_extremes(seeds[:8])
-        elif axis == "evolve":
-            fails += axis_evolve(seeds[:40])
-        elif axis == "contention":
-            fails += axis_contention(seeds[:4])
-        elif axis == "restartfuzz":
-            fails += axis_restartfuzz(seeds[:8])
     print(f"stress: {'CLEAN' if not fails else f'{fails} FAILURES'}",
           flush=True)
     return 1 if fails else 0
