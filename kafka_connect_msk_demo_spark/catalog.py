@@ -52,24 +52,6 @@ KAFKA_ENVELOPE = T.StructType([
     T.StructField("timestampType", T.IntegerType(), True),
 ])
 
-#: Debezium envelope (pre-unwrap): before/after/source/op/ts_ms
-#: (reference: avro_samples/moma.public.artists+0+0000000000.avro header).
-def debezium_envelope(record_schema: T.StructType) -> T.StructType:
-    source = T.StructType([
-        T.StructField("db", T.StringType(), True),
-        T.StructField("schema", T.StringType(), True),
-        T.StructField("table", T.StringType(), True),
-        T.StructField("lsn", T.LongType(), True),
-        T.StructField("ts_ms", T.LongType(), False),
-    ])
-    return T.StructType([
-        T.StructField("before", record_schema, True),
-        T.StructField("after", record_schema, True),
-        T.StructField("source", source, False),
-        T.StructField("op", T.StringType(), False),
-        T.StructField("ts_ms", T.LongType(), False),
-    ])
-
 
 def _avro_field(f: T.StructField) -> dict:
     mapping = {

@@ -56,11 +56,11 @@ def order_result(df: DataFrame, *cols: Column) -> DataFrame:
     return df.repartition(1).sortWithinPartitions(*cols)
 
 
-def sum_count(df: DataFrame, group_cols: list[str], amount_col: str,
-              sales_alias: str = "sales",
-              count_alias: str = "orders") -> DataFrame:
+def sum_count(df: DataFrame, group_cols: list[str],
+              amount_col: str) -> DataFrame:
     """A1: ``groupBy(keys).agg(sum(amount), count(amount))`` ordered by
-    the sum descending (reference 03:77-79).
+    the sum descending (reference 03:77-79), as ``sales`` and
+    ``orders_cnt``.
 
     The sum stays DECIMAL to the output boundary (scale 2 = the 2-dp
     money inputs, so the final cast never rounds) and crosses it as a
@@ -77,22 +77,18 @@ def sum_count(df: DataFrame, group_cols: list[str], amount_col: str,
     return (
         df.groupBy(*group_cols)
         .agg(summed.alias("_dec_sum"),
-             F.count(amount_col).alias(count_alias))
+             F.count(amount_col).alias("orders_cnt"))
         .orderBy(F.col("_dec_sum").desc())
         .select(*group_cols,
-                F.col("_dec_sum").cast("string").alias(sales_alias),
-                count_alias)
+                F.col("_dec_sum").cast("string").alias("sales"),
+                "orders_cnt")
     )
 
 
 def windowed_sum_count(df: DataFrame, group_cols: list[str], ts_col: str,
-                       amount_col: str, window_duration: str = "10 minutes",
-                       slide_duration: str | None = "5 minutes",
-                       sales_alias: str = "sales",
-                       count_alias: str = "orders") -> DataFrame:
-    """A2: event-time (sliding) window aggregation (reference 05:78-80).
-
-    ``slide_duration=None`` gives a tumbling window. Output carries the
+                       amount_col: str) -> DataFrame:
+    """A2: event-time window aggregation, 10 minutes sliding by 5
+    (reference 05:78-80), as ``sales`` and ``orders``. Output carries the
     window bounds as epoch seconds (``window_start``/``window_end``),
     matching the reference's summary topic encoding
     (``10_create_schemas.py:72-73``, ``12:107-108``).
@@ -102,22 +98,20 @@ def windowed_sum_count(df: DataFrame, group_cols: list[str], ts_col: str,
     micro-batch, once for the range partitioner's sample and once for
     the emission.
     """
-    window = (F.window(ts_col, window_duration, slide_duration)
-              if slide_duration else F.window(ts_col, window_duration))
     return order_result(
-        df.groupBy(*group_cols, window)
+        df.groupBy(*group_cols, F.window(ts_col, "10 minutes", "5 minutes"))
         .agg(
-            F.sum(dec(amount_col)).cast("double").alias(sales_alias),
-            F.count(amount_col).alias(count_alias),
+            F.sum(dec(amount_col)).cast("double").alias("sales"),
+            F.count(amount_col).alias("orders"),
         )
         .select(
             *group_cols,
             F.unix_timestamp("window.start").alias("window_start"),
             F.unix_timestamp("window.end").alias("window_end"),
-            sales_alias,
-            count_alias,
+            "sales",
+            "orders",
         ),
-        F.col("window_start").desc(), F.col(sales_alias).desc(),
+        F.col("window_start").desc(), F.col("sales").desc(),
     )
 
 

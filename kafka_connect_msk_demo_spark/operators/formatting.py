@@ -23,14 +23,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def format_sales(df: DataFrame, amount_col: str = "sales",
-                 count_col: str = "orders",
-                 decimals: int = 2) -> DataFrame:
+def format_sales(df: DataFrame) -> DataFrame:
     """F1: render ``sales`` as a grouped string ("1,234.56") and
     ``orders`` as a grouped integer string — reference 02:87-89."""
-    return df.withColumn(amount_col,
-                         F.format_number(F.col(amount_col), decimals)) \
-             .withColumn(count_col, F.format_number(F.col(count_col), 0))
+    return df.withColumn("sales", F.format_number(F.col("sales"), 2)) \
+             .withColumn("orders", F.format_number(F.col("orders"), 0))
 
 
 def order_by_deformatted(df: DataFrame, formatted_col: str,
@@ -41,9 +38,8 @@ def order_by_deformatted(df: DataFrame, formatted_col: str,
     return df.orderBy(key.desc(), *tiebreak)
 
 
-def top_k_formatted(df: DataFrame, k: int, amount_col: str = "sales",
-                    count_col: str = "orders", *tiebreak) -> DataFrame:
-    """02/03's display shape as a real query: format, de-format sort,
-    limit k (console ``numRows`` → ``limit``)."""
-    out = format_sales(df, amount_col, count_col)
-    return order_by_deformatted(out, amount_col, *tiebreak).limit(k)
+def top_k_formatted(df: DataFrame, k: int, *tiebreak) -> DataFrame:
+    """02/03's display shape as a real query: format ``sales`` and
+    ``orders``, de-format sort, limit k (console ``numRows`` → ``limit``);
+    ``tiebreak`` orders equal sales."""
+    return order_by_deformatted(format_sales(df), "sales", *tiebreak).limit(k)

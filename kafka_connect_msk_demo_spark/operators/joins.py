@@ -31,47 +31,46 @@ from pyspark.sql import functions as F
 
 
 def enrich(fact: DataFrame, dim: DataFrame, on: list[str],
-           fill: dict[str, str] | None = None,
-           broadcast_dim: bool = False) -> DataFrame:
+           fill: dict[str, str] | None = None) -> DataFrame:
     """J1: left-outer enrichment join to a dimension + na.fill.
 
     ``fill`` maps dim-column → default for unmatched keys (the
     reference fills "Unassigned", 08:95).
 
-    ``broadcast_dim`` force-broadcasts the dimension. Only set it for
-    TRUE fixed-size dims (the reference's 245-row regions CSV): forcing
-    a broadcast of a table that scales with the data (customer) turns
-    into an executor OOM at 100 TB instead of a plan choice. Default is
-    to let the planner pick. In a batch query AQE broadcasts a small
-    side at runtime. AQE is off for streaming, so a stream-static join
-    broadcasts only by the planner's static choice from the dimension's
-    estimated size (a cached dimension reports its real size), and the
-    broadcast re-runs as one job per micro-batch.
+    No forced broadcast: the planner picks, because forcing one for a
+    dimension that scales with the data (customer) turns into an
+    executor OOM at 100 TB instead of a plan choice. In a batch query AQE
+    broadcasts a small side at runtime. AQE is off for streaming, so a
+    stream-static join broadcasts only by the planner's static choice
+    from the dimension's estimated size (a cached dimension reports its
+    real size), and the broadcast re-runs as one job per micro-batch.
     """
-    out = fact.join(F.broadcast(dim) if broadcast_dim else dim,
-                    on, "left_outer")
+    out = fact.join(dim, on, "left_outer")
     if fill:
         out = out.na.fill(fill)
     return out
 
 
-def star_join(tables: dict[str, DataFrame]) -> DataFrame:
-    """J2: the 5-way chain over the test star schema —
-    region ⋈ nation ⋈ customer ⋈ orders ⋈ lineitem.
+def star_join(t: dict[str, DataFrame], fact: DataFrame | None = None,
+              region: bool = False) -> DataFrame:
+    """J2: the sales feed — ``fact ⋈ customer ⋈ nation [⋈ region]``.
 
     Mirrors ``sales.sql:12-16`` (payment⋈customer⋈address⋈city⋈country)
-    on the driver's TPC-H-ish tables (FIXTURES.md §6). Dimension legs
-    (region, nation) broadcast; orders⋈lineitem is the one real shuffle.
+    on the driver's TPC-H-ish tables (FIXTURES.md §6). ``fact`` defaults
+    to ``t["orders"]`` and may be any frame carrying ``o_custkey`` (a
+    pre-aggregated lineitem leg joined to orders, a per-customer
+    rollup). The dimension legs (nation, and region when ``region`` is
+    set) broadcast; customer scales with the data and is left to the
+    planner.
     """
-    return (
-        tables["lineitem"]
-        .join(tables["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(tables["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(tables["nation"]),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(tables["region"]),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-    )
+    out = ((t["orders"] if fact is None else fact)
+           .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
+           .join(F.broadcast(t["nation"]),
+                 F.col("c_nationkey") == F.col("n_nationkey")))
+    if region:
+        out = out.join(F.broadcast(t["region"]),
+                       F.col("n_regionkey") == F.col("r_regionkey"))
+    return out
 
 
 def semi_join_in(df: DataFrame, keys: DataFrame, left_key: str,

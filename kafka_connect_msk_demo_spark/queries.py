@@ -25,7 +25,7 @@ from .operators.aggregates import (dec, distinct_counts,
                                    group_quantiles, sum_count,
                                    summary_stats, windowed_sum_count)
 from .operators.dedup_rank import latest_by_key, ranked_keep_first
-from .operators.formatting import format_sales, order_by_deformatted
+from .operators.formatting import top_k_formatted
 from .operators.joins import (anti_join_not_exists, enrich, semi_join_in,
                               star_join)
 from .operators.aggregates import fixed_width_histogram
@@ -44,15 +44,8 @@ def q_sales_by_country(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/J2 (03_streaming...py:77-79 batch shape): all-time sum/count by
     country (= nation)."""
     t = load_tables(spark, sf_dir, ("orders", "customer", "nation"))
-    joined = (
-        t["orders"]
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["nation"]),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .withColumnRenamed("n_name", "country")
-    )
-    return sum_count(joined, ["country"], "o_totalprice",
-                     count_alias="orders_cnt")
+    joined = star_join(t).withColumnRenamed("n_name", "country")
+    return sum_count(joined, ["country"], "o_totalprice")
 
 
 _SQL_SALES_BY_COUNTRY = """
@@ -80,13 +73,7 @@ def q_sales_by_country_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the driver's value hash is dtype-sensitive. No rounding occurs:
     inputs are scale-8, every later step is scale-8 or wider."""
     t = load_tables(spark, sf_dir, ("orders", "customer", "nation"))
-    joined = (
-        t["orders"]
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["nation"]),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .withColumnRenamed("n_name", "country")
-    )
+    joined = star_join(t).withColumnRenamed("n_name", "country")
     sales = F.sum(dec("o_totalprice", 25, 8)).cast("decimal(38,8)")
     return (joined.groupBy("country")
             .agg(sales.alias("_sales"),
@@ -111,18 +98,11 @@ ORDER BY SUM(CAST(o_totalprice AS DECIMAL(25,8))) DESC
 
 
 def q_sales_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1+J1 (09:94-101): enrichment join to the region dim then all-time
-    agg by region."""
+    """A1+J2 (09:94-101): the sales feed enriched with the region dim,
+    then all-time agg by region."""
     t = load_tables(spark, sf_dir, ("orders", "customer", "nation", "region"))
-    dim = (t["nation"].join(F.broadcast(t["region"]),
-                            F.col("n_regionkey") == F.col("r_regionkey"))
-           .select(F.col("n_nationkey"), F.col("r_name").alias("region")))
-    joined = (
-        t["orders"]
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(dim), F.col("c_nationkey") == F.col("n_nationkey")))
-    return sum_count(joined, ["region"], "o_totalprice",
-                     count_alias="orders_cnt")
+    joined = star_join(t, region=True).withColumnRenamed("r_name", "region")
+    return sum_count(joined, ["region"], "o_totalprice")
 
 
 _SQL_SALES_BY_REGION = """
@@ -257,16 +237,10 @@ def q_top25_formatted(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-sort, top-25. Aggregates stay DECIMAL until format_number so no
     double rounding is involved."""
     t = load_tables(spark, sf_dir, ("orders", "customer", "nation"))
-    joined = (
-        t["orders"]
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["nation"]),
-              F.col("c_nationkey") == F.col("n_nationkey")))
-    agg = joined.groupBy(F.col("n_name").alias("country")).agg(
+    agg = star_join(t).groupBy(F.col("n_name").alias("country")).agg(
         F.sum(dec("o_totalprice")).alias("sales"),
         F.count("o_totalprice").alias("orders"))
-    out = format_sales(agg)
-    return order_by_deformatted(out, "sales", F.col("country")).limit(25)
+    return top_k_formatted(agg, 25, F.col("country"))
 
 
 _SQL_TOP25_FORMATTED = """
@@ -307,14 +281,9 @@ def q_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .groupBy("l_orderkey")
                  .agg(F.sum(revenue).alias("rev"),
                       F.count(F.lit(1)).alias("nl")))
-    joined = (
-        per_order
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["nation"]),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(t["region"]),
-              F.col("n_regionkey") == F.col("r_regionkey")))
+    fact = per_order.join(t["orders"],
+                          F.col("l_orderkey") == F.col("o_orderkey"))
+    joined = star_join(t, fact=fact, region=True)
     return (
         joined.groupBy(F.col("r_name").alias("region"))
         .agg(F.sum("rev").cast("decimal(25,4)").alias("_rev"),
@@ -362,15 +331,10 @@ def q_revenue_by_region_bucketed(spark: SparkSession,
     — at 100 TB that removes the dominant shuffle from each query that
     reuses the layout. Same DuckDB oracle as ``revenue_by_region``
     (bucketing must not change the answer)."""
-    joined = _bucketed_order_revenue(spark, sf_dir)
+    fact = _bucketed_order_revenue(spark, sf_dir)
     t = load_tables(spark, sf_dir, ("customer", "nation", "region"))
-    full = (joined
-            .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-            .join(F.broadcast(t["nation"]),
-                  F.col("c_nationkey") == F.col("n_nationkey"))
-            .join(F.broadcast(t["region"]),
-                  F.col("n_regionkey") == F.col("r_regionkey")))
-    return (full.groupBy(F.col("r_name").alias("region"))
+    return (star_join(t, fact=fact, region=True)
+            .groupBy(F.col("r_name").alias("region"))
             .agg(F.sum("rev").cast("decimal(25,4)").alias("_rev"),
                  F.sum("nl").alias("line_count"))
             .orderBy(F.col("_rev").desc())
@@ -708,12 +672,7 @@ def q_window_agg_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same plan shape (WindowExec after a hash-partition exchange)
     with a deterministic tiebreaker added."""
     t = load_tables(spark, sf_dir, ("orders", "customer", "nation"))
-    joined = (
-        t["orders"]
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["nation"]),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .withColumnRenamed("n_name", "country"))
+    joined = star_join(t).withColumnRenamed("n_name", "country")
     w = Window.partitionBy("country")
     w_rank = Window.partitionBy("country").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey"))
@@ -837,8 +796,7 @@ def q_csv_dim_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(dim_back),
               F.col("c_nationkey") == F.col("nationkey")))
-    return sum_count(joined, ["region"], "o_totalprice",
-                     count_alias="orders_cnt")
+    return sum_count(joined, ["region"], "o_totalprice")
 
 
 _SQL_CSV_DIM_SALES = _SQL_SALES_BY_REGION
@@ -1131,11 +1089,7 @@ def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-task."""
     t = load_tables(spark, sf_dir, ("orders", "customer", "nation"))
     t["orders"] = load_table(spark, sf_dir, "orders", spread=True)
-    joined = (t["orders"]
-              .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-              .join(F.broadcast(t["nation"]),
-                    F.col("c_nationkey") == F.col("n_nationkey"))
-              .withColumnRenamed("n_name", "country"))
+    joined = star_join(t).withColumnRenamed("n_name", "country")
     from .operators.aggregates import trimmed_stats
     return trimmed_stats(joined, ["country"], "o_totalprice",
                          "o_orderkey", trim_pct=5)
@@ -1787,12 +1741,7 @@ def q_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB fetchdf's float64 breaks the driver's dtype-sensitive
     hash)."""
     t = load_tables(spark, sf_dir)
-    joined = (t["orders"]
-              .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-              .join(F.broadcast(t["nation"]),
-                    F.col("c_nationkey") == F.col("n_nationkey"))
-              .join(F.broadcast(t["region"]),
-                    F.col("n_regionkey") == F.col("r_regionkey")))
+    joined = star_join(t, region=True)
     return (joined
             .rollup(F.col("r_name").alias("region"),
                     F.col("n_name").alias("nation"))
@@ -1980,12 +1929,7 @@ def q_calendar_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     no driver calendar loop."""
     t = load_tables(spark, sf_dir, ("orders", "customer", "nation",
                                     "region"))
-    joined = (t["orders"]
-              .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-              .join(F.broadcast(t["nation"]),
-                    F.col("c_nationkey") == F.col("n_nationkey"))
-              .join(F.broadcast(t["region"]),
-                    F.col("n_regionkey") == F.col("r_regionkey")))
+    joined = star_join(t, region=True)
     per_day = (joined
                .select(F.col("r_name").alias("region"),
                        F.floor(F.unix_micros("o_orderdate")
@@ -2040,12 +1984,7 @@ def q_revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches the oracle's GROUPING() arithmetic (region bit high)."""
     t = load_tables(spark, sf_dir, ("orders", "customer", "nation",
                                     "region"))
-    joined = (t["orders"]
-              .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-              .join(F.broadcast(t["nation"]),
-                    F.col("c_nationkey") == F.col("n_nationkey"))
-              .join(F.broadcast(t["region"]),
-                    F.col("n_regionkey") == F.col("r_regionkey")))
+    joined = star_join(t, region=True)
     return (joined
             .cube(F.col("r_name").alias("region"),
                   F.col("o_orderstatus").alias("status"))
@@ -2733,12 +2672,7 @@ def q_wow_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-agg, one lag window over the region×week frame."""
     t = load_tables(spark, sf_dir, ("orders", "customer", "nation",
                                     "region"))
-    j = (t["orders"]
-         .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-         .join(F.broadcast(t["nation"]),
-               F.col("c_nationkey") == F.col("n_nationkey"))
-         .join(F.broadcast(t["region"]),
-               F.col("n_regionkey") == F.col("r_regionkey")))
+    j = star_join(t, region=True)
     week = F.expr("(unix_micros(o_orderdate) div 86400000000) div 7")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     weekly = (j.select(F.col("r_name").alias("region"),
@@ -2856,12 +2790,7 @@ def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-region sort for ranks, a per-region hash-agg."""
     t = load_tables(spark, sf_dir, ("orders", "customer", "nation",
                                     "region"))
-    j = (t["orders"]
-         .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-         .join(F.broadcast(t["nation"]),
-               F.col("c_nationkey") == F.col("n_nationkey"))
-         .join(F.broadcast(t["region"]),
-               F.col("n_regionkey") == F.col("r_regionkey")))
+    j = star_join(t, region=True)
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     per = (j.select(F.col("r_name").alias("region"),
                     F.col("o_custkey").alias("cust"),
@@ -3161,11 +3090,7 @@ def q_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.aggregates import winsorized_stats
     t = load_tables(spark, sf_dir, ("orders", "customer", "nation"))
     t["orders"] = load_table(spark, sf_dir, "orders", spread=True)
-    joined = (t["orders"]
-              .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-              .join(F.broadcast(t["nation"]),
-                    F.col("c_nationkey") == F.col("n_nationkey"))
-              .withColumnRenamed("n_name", "country"))
+    joined = star_join(t).withColumnRenamed("n_name", "country")
     return winsorized_stats(joined, ["country"], "o_totalprice",
                             "o_orderkey", pct=10)
 
@@ -3420,12 +3345,8 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("o_custkey")
                 .agg(F.sum(F.col("rev_u").cast("decimal(38,0)"))
                      .alias("_rev")))
-    enriched = (per_cust
-                .join(t["customer"],
-                      F.col("o_custkey") == F.col("c_custkey"))
-                .join(F.broadcast(t["nation"]),
-                      F.col("c_nationkey") == F.col("n_nationkey")))
-    return (enriched.orderBy(F.col("_rev").desc(), "c_custkey")
+    return (star_join(t, fact=per_cust)
+            .orderBy(F.col("_rev").desc(), "c_custkey")
             .limit(20)
             .select("c_custkey", "c_name",
                     (F.col("_rev").cast("double") / 10000.0)
@@ -5466,13 +5387,7 @@ def q_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir,
                     ("orders", "customer", "nation", "region"))
     price_c = F.round(F.col("o_totalprice") * 100).cast("long")
-    g = (t["orders"]
-         .join(t["customer"],
-               F.col("o_custkey") == F.col("c_custkey"))
-         .join(F.broadcast(t["nation"]),
-               F.col("c_nationkey") == F.col("n_nationkey"))
-         .join(F.broadcast(t["region"]),
-               F.col("n_regionkey") == F.col("r_regionkey"))
+    g = (star_join(t, region=True)
          .groupBy(F.col("r_name").alias("region"),
                   F.col("n_name").alias("nation"))
          .agg(F.sum(price_c.cast("decimal(38,0)")).alias("rev_c")))
@@ -5552,13 +5467,7 @@ def q_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir,
                     ("orders", "customer", "nation", "region"))
     price_c = F.round(F.col("o_totalprice") * 100).cast("long")
-    joined = (t["orders"]
-              .join(t["customer"],
-                    F.col("o_custkey") == F.col("c_custkey"))
-              .join(F.broadcast(t["nation"]),
-                    F.col("c_nationkey") == F.col("n_nationkey"))
-              .join(F.broadcast(t["region"]),
-                    F.col("n_regionkey") == F.col("r_regionkey"))
+    joined = (star_join(t, region=True)
               .select(F.col("r_name").alias("region"),
                       _day("o_orderdate").alias("day"),
                       price_c.alias("price_c")))

@@ -29,12 +29,10 @@ from ..operators.joins import enrich
 from .runner import run_to_memory
 
 
-def stream_sales_by_type(spark: SparkSession, sf_dir: str,
-                         batches: int | None = None) -> DataFrame:
+def stream_sales_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """03/06/09 shape: all-time agg in complete mode over the events
     stream; returns the final complete emission."""
-    events = stream_table(spark, sf_dir, "events",
-                          max_files_per_trigger=batches or 1)
+    events = stream_table(spark, sf_dir, "events")
     agg = (events.groupBy("event_type")
            .agg(F.sum(dec("value", 25, 8)).cast("double").alias("sales"),
                 F.count("value").alias("orders")))

@@ -399,10 +399,10 @@ class MergeOnReadTable:
         self.key_cols = key_cols
         self.partition_by = partition_by
         self.max_delta_commits = max_delta_commits
-        #: names registered via :meth:`register_views`, re-registered
-        #: after every :meth:`compact`, whose fold deletes the files an
-        #: analyzed view plan names
-        self._view_names: set[str] = set()
+        #: view name -> the session :meth:`register_views` put it in,
+        #: re-registered there after every commit: an analyzed view plan
+        #: names the files of the snapshot it was registered at
+        self._views: dict[str, SparkSession] = {}
 
     @staticmethod
     def _pending(snap: tablelog.Snapshot) -> list[str]:
@@ -434,6 +434,8 @@ class MergeOnReadTable:
         if (self.max_delta_commits is not None
                 and len(self._pending(snap)) >= self.max_delta_commits):
             self.compact(spark)  # inline compaction (hoodie analog)
+        else:
+            self._refresh_views()
 
     # -- read views (S15: _ro / _rt) ----------------------------------------
 
@@ -473,12 +475,18 @@ class MergeOnReadTable:
         """``{name}_ro`` / ``{name}_rt`` temp views — the Hive-synced
         pair the reference notebook queries (ipynb cells 8-11).
 
-        The views stay valid across :meth:`compact`, which re-registers
-        them; a frame from :meth:`read_realtime` held across a compact
-        is not refreshed."""
-        self._view_names.add(name)
+        The views stay current across :meth:`append_batch` and
+        :meth:`compact`, which re-register them; a frame from
+        :meth:`read_realtime` held across a commit is not refreshed.
+        A micro-batch's session is a clone, so the views are refreshed
+        in the session that registered them."""
         self.read_optimized(spark).createOrReplaceTempView(f"{name}_ro")
         self.read_realtime(spark).createOrReplaceTempView(f"{name}_rt")
+        self._views[name] = spark
+
+    def _refresh_views(self) -> None:
+        for name, spark in list(self._views.items()):
+            self.register_views(spark, name)
 
     # -- table service -------------------------------------------------------
 
@@ -495,7 +503,5 @@ class MergeOnReadTable:
             return []
         log = tablelog.read(spark, self.path, snap, deltas)
         self.base._merge(log.drop(UpsertTable.TOMB_COL), snap, deltas)
-        # refresh registered views (register_views re-adds each name)
-        for name in list(self._view_names):
-            self.register_views(spark, name)
+        self._refresh_views()
         return [f"{self.LOG_COL}={c}" for c in self._pending(snap)]

@@ -143,6 +143,43 @@ def test_register_views(spark, tmp_path):
     assert [r.val for r in rt] == ["v2"]
 
 
+def test_views_current_after_append(spark, tmp_path):
+    """``_rt`` is always current: a delta appended after
+    register_views shows in the registered view as in read_realtime,
+    and ``_ro`` stays on the base."""
+    t = _mor(tmp_path / "t")
+    t.append_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false")]), 0)
+    t.register_views(spark, "mor_append_view")
+    t.append_batch(_batch(spark, [(1, "a", "v2", 20, 0, "false"),
+                                  (2, "b", "v1", 20, 0, "false")]), 1)
+    rt = {(r.id, r.val) for r in
+          spark.sql("SELECT id, val FROM mor_append_view_rt").collect()}
+    assert rt == {(r.id, r.val) for r in t.read_realtime(spark).collect()}
+    assert rt == {(1, "v2"), (2, "v1")}
+    ro = spark.sql("SELECT id, val FROM mor_append_view_ro").collect()
+    assert [(r.id, r.val) for r in ro] == [(1, "v1")]
+
+
+def test_views_current_after_stream_append(spark, tmp_path):
+    """A micro-batch runs in a clone of the session, so the appends
+    of a stream refresh the views in the session that registered
+    them."""
+    from kafka_connect_msk_demo_spark.streaming.runner import \
+        run_foreach_batch
+    t = _mor(tmp_path / "t")
+    t.append_batch(_batch(spark, [(1, "a", "v1", 10, 0, "false")]), 0)
+    t.register_views(spark, "mor_stream_view")
+    src = tmp_path / "src"
+    _batch(spark, [(1, "a", "v2", 20, 0, "false")]).write.parquet(str(src))
+    stream = spark.readStream.schema(
+        "id int, part string, val string, ts bigint, seq int, "
+        "__deleted string").parquet(str(src))
+    run_foreach_batch(stream, t.append_batch,
+                      checkpoint_dir=str(tmp_path / "ckpt"))
+    rt = spark.sql("SELECT id, val FROM mor_stream_view_rt").collect()
+    assert [(r.id, r.val) for r in rt] == [(1, "v2")]
+
+
 def test_rt_base_side_has_no_shuffle(spark, tmp_path):
     """Untouched base rows must reach the output through a broadcast
     anti join — no Exchange on the base scan side of the _rt plan's
